@@ -5,7 +5,9 @@ alternately on the same seeds.
 
 Inputs are run records written by run.py (``.perfbench_runs/*.json``).
 Per workload and end-to-end metric it prints each side's median and
-quartiles, the share of seed-paired runs B wins (ties count for neither),
+quartiles, the share of paired runs B wins (ties count for neither; the
+i-th A run of a seed is paired with the i-th B run of that seed, in start
+order, so repeated sets on the same seeds are all paired),
 and a verdict against the bound in BENCHMARK.json:
 
   improved     B wins >= 9/10 of the pairs and the medians differ by more
@@ -42,6 +44,20 @@ def load_records(items: list[str]) -> list[dict]:
             if "workload" in rec and "metrics" in rec:
                 out.append(rec)
     return out
+
+
+def pair_runs(a_runs: list[dict], b_runs: list[dict]) -> list[tuple[dict, dict]]:
+    """Pair runs by (seed, occurrence of that seed in start order)."""
+    def keyed(runs: list[dict]) -> dict[tuple[int, int], dict]:
+        seen: dict[int, int] = {}
+        out = {}
+        for r in sorted(runs, key=lambda r: r["started"]):
+            i = seen[r["seed"]] = seen.get(r["seed"], -1) + 1
+            out[(r["seed"], i)] = r
+        return out
+
+    a, b = keyed(a_runs), keyed(b_runs)
+    return [(a[k], b[k]) for k in sorted(a) if k in b]
 
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -87,9 +103,9 @@ def compare(a_recs: list[dict], b_recs: list[dict], declared: dict, out=sys.stdo
                 b = [r["metrics"][name][0] for r in b_plain if name in r["metrics"]]
                 if not a or not b:
                     continue
-                b_by_seed = {r["seed"]: r["metrics"][name][0] for r in b_plain}
-                pairs = [(r["metrics"][name][0], b_by_seed[r["seed"]]) for r in a_plain
-                         if r["seed"] in b_by_seed]
+                pairs = [(x["metrics"][name][0], y["metrics"][name][0])
+                         for x, y in pair_runs(a_plain, b_plain)
+                         if name in x["metrics"] and name in y["metrics"]]
                 v, win = verdict(a, b, m["better"], m["bound"], pairs)
                 qa, qb = quartiles(a), quartiles(b)
                 print(f"  {name:<16} {qa[1]:>12.4g} [{qa[0]:.4g}, {qa[2]:.4g}] "

@@ -6,41 +6,64 @@ exercised) + one graph-loop lane (``similarity_graph_bfs_hops``: 33-38
 eager jobs per build and LSH candidates from ``minhash_candidate_pairs``)
 + FLEET_SAMPLE, a fixed stratified sample of the other lanes.
 
-FLEET_SAMPLE was drawn once (``random.Random(0)``, 5 fast + 2 slow) from
-the lanes outside the graph family that pass their oracle on the
-generated tables, stratified on the round-13 idle bench time at sf0.1
-(tools/bench_r13_end_idle.json) so about two thirds are sub-second lanes,
-as in the 349-lane fleet (226/349). It is frozen here rather than
-re-drawn per seed so that runs with different seeds time the same lanes;
-the seed sets the lane order.
+FLEET_SAMPLE is drawn by ``draw_sample`` from every registry lane that
+passes its DuckDB oracle on the benchmark's tables, leaving out the lanes
+named above and the iterative graph/LSH family (ITERATIVE_LANES),
+stratified on the round-13 idle bench time at sf0.1
+(tools/bench_r13_end_idle.json): 5 lanes under 1 s and 2 slower, about
+the fleet's two thirds of sub-second lanes (226/349). It is frozen here
+rather than re-drawn per seed so that runs with different seeds time the
+same lanes; the seed sets the lane order. To redraw it:
+
+    PYTHONPATH=. python3 tools/check_oracle.py perfbench/tables/sf0.001 > oracle.log
+    python3 perfbench/lanes.py oracle.log
 """
 
 from __future__ import annotations
 
 import ast
+import json
 import os
+import random
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 GRAPH_LANES = ("similarity_graph_bfs_hops",)
 
 SKETCH_LANES = ("weekly_hll_union_estimate", "value_percentiles_approx")
 
+# Lanes dominated by eager iterative jobs; not drawn into the sample.
+ITERATIVE_LANES = (
+    "similarity_graph_kcore",
+    "doc_similarity_pagerank",
+    "similarity_graph_bfs_hops",
+    "hits_hubs_authorities",
+    "near_dup_clusters",
+    "minhash_lsh_candidates",
+    "bigram_lm_surprise",
+    "market_basket_lift",
+    "bm25_topk_search",
+    "corpus_curation_funnel",
+)
+FAST_S = 1.0
+DRAW = {"fast": 5, "slow": 2}
+
 FLEET_SAMPLE: tuple[str, ...] = (
     "binseg_daily_changepoints",
-    "event_value_regr_slope",
+    "embedding_kmeans_ivf_topk",
     "logrank_error_exposure",
-    "next_item_transition_recs",
-    "value_percentiles_by_type",
-    "order_fulfillment_sla",
-    "packed_sequence_manifest",
+    "multimodal_adpcm_multiblock_decode",
+    "multimodal_audio_profile",
+    "ttr_hapax_profile",
+    "weighted_sample_topk",
 )
 
 
 def headline() -> list[str]:
     """bench.py's HEADLINE list, read from its source so that importing
     bench.py (which loads the registry at import) is not needed."""
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "bench.py")
-    with open(path) as fh:
+    with open(os.path.join(ROOT, "bench.py")) as fh:
         tree = ast.parse(fh.read())
     for node in tree.body:
         if isinstance(node, ast.Assign) and any(
@@ -53,3 +76,24 @@ def headline() -> list[str]:
 def fleet_sample() -> list[str]:
     return headline() + ["ks_weekend_value_shift", *SKETCH_LANES, *GRAPH_LANES,
                          *FLEET_SAMPLE]
+
+
+def draw_sample(passing: set[str], seed: int = 0) -> tuple[str, ...]:
+    """The stratified draw behind FLEET_SAMPLE, from the lanes in
+    ``passing`` (names that pass their oracle on the benchmark's tables)."""
+    with open(os.path.join(ROOT, "tools", "bench_r13_end_idle.json")) as fh:
+        idle = json.load(fh)["queries"]
+    taken = set(headline()) | {"ks_weekend_value_shift", *SKETCH_LANES, *ITERATIVE_LANES}
+    pool = sorted(n for n in passing if n in idle and n not in taken)
+    rng = random.Random(seed)
+    picked = []
+    for stratum, k in DRAW.items():
+        lanes = [n for n in pool if (idle[n] < FAST_S) == (stratum == "fast")]
+        picked.extend(rng.sample(lanes, k))
+    return tuple(sorted(picked))
+
+
+if __name__ == "__main__":
+    with open(sys.argv[1]) as fh:
+        passed = {line.split()[1].rstrip(":") for line in fh if line.startswith("PASS ")}
+    print(draw_sample(passed))

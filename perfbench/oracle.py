@@ -5,19 +5,18 @@ tools/check_oracle.py. Lanes without an oracle get a row-count check.
 Every mismatch or exception is counted as a failure.
 
 The expected answers are cached in ``<cache>/oracle.json`` keyed by a hash
-of the oracle SQL and the table directory (whose name carries the
-generator version), so a changed oracle or generator is recomputed.
+of the oracle SQL and of the table files' bytes, so a changed oracle or
+table is recomputed.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 
 import duckdb
-
-import datagen
 
 # Row counts for the registry's oracle-less sketch lanes, as DuckDB SQL
 # over the same tables (the sketch values are approximate; the row set
@@ -45,6 +44,11 @@ class Expected:
         self._data_dir = data_dir
         self._path = os.path.join(cache_root, "oracle.json")
         self._con = None
+        digest = hashlib.sha256()
+        for path in sorted(glob.glob(os.path.join(data_dir, "*.parquet"))):
+            with open(path, "rb") as fh:
+                digest.update(os.path.basename(path).encode() + b"\0" + fh.read())
+        self._tables_key = digest.hexdigest()
         try:
             with open(self._path) as fh:
                 self._cache = json.load(fh)
@@ -54,14 +58,14 @@ class Expected:
     def _sql(self, sql: str):
         if self._con is None:
             self._con = duckdb.connect()
-            for t in datagen.TABLES:
-                self._con.sql(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{self._data_dir}/{t}.parquet'")
+            for path in sorted(glob.glob(os.path.join(self._data_dir, "*.parquet"))):
+                table = os.path.basename(path)[: -len(".parquet")]
+                self._con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
         return self._con.sql(sql)
 
     def get(self, sql: str, rows_only: bool):
         key = hashlib.sha256(
-            f"{rows_only}\n{os.path.basename(self._data_dir)}\n{sql}".encode()
+            f"{rows_only}\n{self._tables_key}\n{sql}".encode()
         ).hexdigest()
         if key not in self._cache:
             if rows_only:

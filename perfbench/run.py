@@ -47,7 +47,7 @@ def run_workload(name: str, seed: int, seconds: float, traced: bool,
         else:
             import stream
 
-            res = stream.run(seed, seconds, traced, work)
+            res = stream.run(seed, seconds, traced, work, plant)
     finally:
         peak = rss.stop()
     record.update(
@@ -87,11 +87,17 @@ def _all_layers(res: dict, traced: bool, peak_rss_mb: float) -> dict:
 
 def result_line(record: dict) -> dict:
     """The contract's last line: end-to-end metrics untraced, per-layer
-    metrics traced."""
+    metrics traced. A failed run may lack samples for some metrics; those
+    read 0. A correct run lacking one is a benchmark bug (KeyError)."""
     source = record["layers"] if record["trace"] else record["metrics"]
     wanted = _declared()["per_layer" if record["trace"] else "end_to_end"]
-    metrics = {m["name"]: {"value": float(source[m["name"]][0]), "unit": m["unit"]}
-               for m in wanted}
+    metrics = {}
+    for m in wanted:
+        if m["name"] in source or not record["failed"]:
+            value = source[m["name"]][0]
+        else:
+            value = 0.0
+        metrics[m["name"]] = {"value": float(value), "unit": m["unit"]}
     return {
         "correct": record["failed"] == 0,
         "attempted": record["attempted"],

@@ -1,18 +1,24 @@
-"""Open-loop streaming workload: the flagship pipeline under a writer that
-drops event files on a fixed schedule.
+"""Streaming workload: the flagship pipeline, first draining a fixed
+backlog (closed loop), then under a writer that drops event files on a
+fixed schedule (open loop).
 
-A writer thread writes ``BoundedRun(seed)`` content events (no late
-events, so the stream must equal its batch twin) as JSONL files, one file
-every ``interval_s`` seconds, renaming each into the watched directory so
-the file's mtime is its real write time. ``start_flagship_stream``
-consumes them with a no-delay trigger. Per event, freshness is the
-completion time of the micro-batch that consumed its file minus the
-file's write time; the file -> micro-batch map comes from the source and
-offsets logs in the query's checkpoint.
+``BoundedRun(seed)`` content events (no late events, so the stream must
+equal its batch twin) are cut into JSONL files. Before the query starts,
+a backlog of ``BACKLOG_BATCHES`` x ``FILES_PER_TRIGGER`` files is written;
+the query reads at most ``FILES_PER_TRIGGER`` files per micro-batch, so it
+drains the backlog in micro-batches of the same size whatever the engine's
+speed, and capacity is their events per second of trigger time. Then a
+writer thread puts one file every ``interval_s`` seconds into the watched
+directory, renaming it in so the file's mtime is its real write time, and
+``start_flagship_stream`` consumes them with a no-delay trigger. Per event,
+freshness is the completion time of the micro-batch that consumed its
+file minus the file's write time; the file -> micro-batch map comes from
+the source and offsets logs in the query's checkpoint.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -30,9 +36,14 @@ CLOCK_COLS = {"processed_at", "max_processed_at_30m"}
 INTERVAL_S = 0.5  # one file every 0.5 s, open loop: 100 events/s
 EVENTS_PER_FILE = 50
 EVENT_TIME_RATE = 50.0  # generator events per second of event time
-# Micro-batches keep speeding up (JIT) for the first few; two warm-up
-# batches take the steepest part out of the measured window.
-WARMUP_FILES = 2
+# maxFilesPerTrigger: 1000 events per backlog micro-batch. The cap also
+# holds in the open-loop phase, where it is 10 s of writes, more than a
+# micro-batch of a stream that keeps up takes.
+FILES_PER_TRIGGER = 20
+# The first backlog micro-batch creates the stores and is warm-up; the
+# other two are measured.
+BACKLOG_BATCHES = 3
+WARMUP_BATCHES = 1
 # Compact in every micro-batch (the default is every 8th): a run holds
 # only a handful of micro-batches, and uniform batches keep the freshness
 # percentiles from flipping with the phase of an append/compact cycle.
@@ -79,6 +90,20 @@ class Writer(threading.Thread):
             self.write_all()
         except Exception as exc:  # re-raised by the caller after join
             self.error = exc
+
+
+def write_backlog(src: str, chunks: list[str]) -> list[str]:
+    """Write ``chunks`` as files 0.. with strictly increasing mtimes in the
+    past, so the file source reads them in order. Returns the basenames."""
+    base_ns = time.time_ns() - len(chunks) * 1_000_000
+    names = []
+    for i, body in enumerate(chunks):
+        path = os.path.join(src, f"part-{i:05d}.jsonl")
+        with open(path, "w") as fh:
+            fh.write(body)
+        os.utime(path, ns=(base_ns + i * 1_000_000,) * 2)
+        names.append(os.path.basename(path))
+    return names
 
 
 def _file_batches(ckpt: str) -> dict[str, int]:
@@ -165,11 +190,34 @@ def _inputs(spark, seed: int, n_files: int) -> dict:
     return {"chunks": chunks, "dims": dims, "thresholds": thresholds}
 
 
-def run(seed: int, seconds: float, traced: bool, work: str) -> dict:
-    """The stream_flagship workload."""
+@contextlib.contextmanager
+def _planted_failure(active: bool):
+    """Self-test only: every compaction raises, so the query dies in its
+    first micro-batch and the run has no samples."""
+    if not active:
+        yield
+        return
+    from shortvideohybridanalyticslakehouse_spark.plans import ddl
+
+    original = ddl.compact_bucketed_table
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("planted stream failure")
+
+    ddl.compact_bucketed_table = broken
+    try:
+        yield
+    finally:
+        ddl.compact_bucketed_table = original
+
+
+def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = None) -> dict:
+    """The stream_flagship workload. ``plant="stream"`` makes the query fail
+    (self-test only)."""
     interval = INTERVAL_S
-    files = WARMUP_FILES + max(1, int(seconds / interval))
-    setup = Setup(work, extra=lambda spark: _inputs(spark, seed, files))
+    backlog_n = BACKLOG_BATCHES * FILES_PER_TRIGGER
+    open_n = max(1, int(seconds / interval))
+    setup = Setup(work, extra=lambda spark: _inputs(spark, seed, backlog_n + open_n))
     setup.run()
     spark = setup.spark
     from shortvideohybridanalyticslakehouse_spark.streaming import flagship
@@ -179,95 +227,105 @@ def run(seed: int, seconds: float, traced: bool, work: str) -> dict:
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
     os.makedirs(src)
+    backlog = write_backlog(src, inputs["chunks"][:backlog_n])
 
     tracer = trace.Tracer() if traced else None
     restore = trace.patch_layers(tracer) if traced else None
     ledger = trace.JobLedger(trace.StatusStore(spark)) if traced else None
-    q = flagship.start_flagship_stream(
-        spark,
-        flagship.read_flagship_file_stream(spark, src),
-        inputs["dims"],
-        inputs["thresholds"],
-        out,
-        ckpt,
-        trigger={"processingTime": "0 seconds"},
-        compact_every=COMPACT_EVERY,
-    )
+    writer = Writer(src, inputs["chunks"][backlog_n:], 0.0, interval, first_index=backlog_n)
     errors: list[str] = []
+    progress: dict[int, dict] = {}
+    t_measure = t_end = None
     try:
-        # warm-up files, each in its own micro-batch, before the schedule
-        for i in range(WARMUP_FILES):
-            warm = Writer(src, inputs["chunks"][i:i + 1], time.time(), 0.0, first_index=i)
-            warm.write_all()
-            _wait_consumed(q, ckpt, {os.path.basename(warm.written[0]["path"])}, 120)
-        t_measure = time.time()
-        writer = Writer(src, inputs["chunks"][WARMUP_FILES:], t_measure + interval,
-                        interval, first_index=WARMUP_FILES)
-        writer.start()
-        writer.join(timeout=seconds + 60)
-        if writer.error is not None:
-            raise writer.error
-        t_end = time.time()
-        names = {os.path.basename(w["path"]) for w in writer.written}
-        try:
-            _wait_consumed(q, ckpt, names, 60)
-            q.processAllAvailable()
-        except (TimeoutError, RuntimeError, StreamingQueryException) as exc:
-            # the files it left unconsumed are counted as failed below
-            errors.append(f"stream: {exc}")
-        progress = _progress_batches(q)
+        with _planted_failure(plant == "stream"):
+            q = flagship.start_flagship_stream(
+                spark,
+                flagship.read_flagship_file_stream(spark, src, FILES_PER_TRIGGER),
+                inputs["dims"],
+                inputs["thresholds"],
+                out,
+                ckpt,
+                trigger={"processingTime": "0 seconds"},
+                compact_every=COMPACT_EVERY,
+            )
+            try:
+                _wait_consumed(q, ckpt, set(backlog), 60)
+                t_measure = time.time()
+                writer.start_at = t_measure + interval
+                writer.start()
+                writer.join(timeout=seconds + 10)
+                if writer.error is not None:
+                    raise writer.error
+                t_end = time.time()
+                _wait_consumed(q, ckpt, {os.path.basename(w["path"]) for w in writer.written},
+                               60)
+                q.processAllAvailable()
+            finally:
+                progress = _progress_batches(q)
+                q.stop()
+    except Exception as exc:  # any stream failure is a counted failure
+        errors.append(f"stream: {type(exc).__name__}: {str(exc)[:300]}")
     finally:
-        q.stop()
         if restore:
             restore()
     jobs = [j for j in ledger.new_jobs() if (j.get("submissionTime") or 0) / 1000.0
-            >= t_measure] if traced else []
+            >= t_measure] if traced and t_measure else []
 
     file_batch = _file_batches(ckpt)
+    done = set(progress)
+    consumed = sum(1 for n in backlog if file_batch.get(n) in done)
+    # closed loop: backlog micro-batches of FILES_PER_TRIGGER files each
+    backlog_ids = sorted({file_batch[n] for n in backlog if file_batch.get(n) in done})
+    drained = [progress[bid] for bid in backlog_ids[WARMUP_BATCHES:]]
+    # open loop: freshness per event, and the backlog check
     fresh: list[float] = []
-    consumed = 0
-    last_end = t_end
+    last_end = t_end or 0.0
     for w in writer.written:
         bid = file_batch.get(os.path.basename(w["path"]))
-        if bid is None or bid not in progress:
+        if bid not in done:
             continue
         consumed += 1
         b = progress[bid]
         fresh.extend([b["end"] - w["mtime"]] * w["events"])
         last_end = max(last_end, b["end"])
-    data_batches = [b for bid, b in sorted(progress.items()) if b["rows"] > 0]
-    measured = [b for b in data_batches if b["start"] >= t_measure]
-    # Each micro-batch takes every file present when it starts, so a stream
-    # that keeps up drains within about two batch times after the last
-    # write; a growing backlog shows as a longer drain.
-    drain_s = last_end - t_end
-    drain_bound_s = DRAIN_BATCHES * statistics.median(b["trigger_ms"] for b in measured) / 1e3
+    measured = [b for bid, b in sorted(progress.items())
+                if b["rows"] > 0 and t_measure and b["start"] >= t_measure]
+    # Each micro-batch takes every waiting file (up to FILES_PER_TRIGGER),
+    # so a stream that keeps up drains within about two batch times after
+    # the last write; a growing backlog shows as a longer drain.
+    drain_s = last_end - t_end if t_end else None
+    drain_bound_s = (DRAIN_BATCHES * statistics.median(b["trigger_ms"] for b in measured) / 1e3
+                     if measured else None)
 
-    twin_ok, n_decisions = _twin_equal(spark, flagship, src, out, inputs)
+    try:
+        twin_ok, n_decisions = _twin_equal(spark, flagship, src, out, inputs)
+    except Exception as exc:  # no stores, or the twin fails: counted below
+        twin_ok, n_decisions = False, 0
+        errors.append(f"twin: {type(exc).__name__}: {str(exc)[:300]}")
     flagship.drop_stores(spark, out)
     spark.stop()
 
-    attempted = len(writer.written)
+    attempted = backlog_n + len(writer.written)
     failed = attempted - consumed
-    if errors:
-        failed = attempted
     if not twin_ok:
         errors.append("stream decisions differ from flagship_batch_twin")
-        failed = attempted
-    if drain_s > drain_bound_s:
+    if drain_s is not None and drain_bound_s is not None and drain_s > drain_bound_s:
         errors.append(f"backlog: drain took {drain_s:.2f} s > {drain_bound_s:.2f} s")
+    if not (drained and fresh):
+        errors.append("stream: no measured micro-batch")
+    if errors:
         failed = attempted
-    events = sum(b["rows"] for b in measured)
-    trig_s = sum(b["trigger_ms"] for b in measured) / 1000.0
-    metrics = {
-        "setup_s": (setup.parts["total_s"], "s"),
-        "pass_s": (trig_s / len(measured), "s"),
-        "latency_p50_s": (statistics.median(fresh), "s"),
-        "latency_p90_s": (percentile(fresh, 90), "s"),
-        "capacity_per_s": (events / trig_s, "1/s"),
-    }
+    metrics = {"setup_s": (setup.parts["total_s"], "s")}
+    if drained and fresh:
+        trig_s = [b["trigger_ms"] / 1000.0 for b in drained]
+        metrics.update({
+            "pass_s": (statistics.median(trig_s), "s"),
+            "latency_p50_s": (statistics.median(fresh), "s"),
+            "latency_p90_s": (percentile(fresh, 90), "s"),
+            "capacity_per_s": (sum(b["rows"] for b in drained) / sum(trig_s), "1/s"),
+        })
     layers = {}
-    if traced:
+    if traced and measured:
         layers = _layer_metrics(tracer, measured, progress, t_measure, writer, fresh,
                                 jobs)
     return {
@@ -278,20 +336,24 @@ def run(seed: int, seconds: float, traced: bool, work: str) -> dict:
         "layers": layers,
         "tracer": tracer,
         "detail": {
-            "files": files,
+            "backlog_files": backlog_n,
+            "files_per_trigger": FILES_PER_TRIGGER,
+            "open_loop_files": open_n,
             "events_per_file": EVENTS_PER_FILE,
             "interval_s": interval,
             "rate_events_per_s": EVENTS_PER_FILE / interval,
             "setup": setup.parts,
-            "batches": len(data_batches),
+            "backlog_batch_ids": backlog_ids,
+            "open_loop_batches": len(measured),
             "batch_log": [dict(b, batch_id=bid) for bid, b in sorted(progress.items())],
             "t_measure": t_measure,
             "drain_s": drain_s,
             "drain_bound_s": drain_bound_s,
             "twin_equal": twin_ok,
             "decisions": n_decisions,
-            "freshness_p95_s": percentile(fresh, 95),
-            "writer_late_p95_s": percentile([w["late_s"] for w in writer.written], 95),
+            "freshness_p95_s": percentile(fresh, 95) if fresh else None,
+            "writer_late_p95_s": (percentile([w["late_s"] for w in writer.written], 95)
+                                  if writer.written else None),
         },
     }
 
