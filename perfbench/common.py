@@ -56,9 +56,14 @@ def session_conf(work: str) -> dict[str, str]:
     return {
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.local.dir": os.path.join(work, "spark-local"),
-        # -XX:-UsePerfData: no hsperfdata file in the system temp dir
+        # -XX:-UsePerfData: no hsperfdata file in the system temp dir.
+        # -XX:TieredStopAtLevel=1 (C1 only): with C2, warm passes of the
+        # same lanes settled 25-35 % apart from run to run while the cold
+        # pass did not move, so a run's number depended on which steady
+        # state the profile-guided compiler reached; C1 does not speculate
+        # on profiles, and runs agree.
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}"
-        " -XX:-UsePerfData",
+        " -XX:-UsePerfData -XX:TieredStopAtLevel=1",
     }
 
 

@@ -1,4 +1,4 @@
-"""Correctness gate for the batch lanes, run once per run outside the timed
+"""Correctness gate for the batch lanes, once per run, outside the timed
 region: each lane's result is compared with its DuckDB oracle by the
 canonical (row count, sorted columns, value hash) from
 tools/check_oracle.py. Lanes without an oracle get a row-count check.
@@ -85,38 +85,39 @@ class Expected:
         os.replace(tmp, self._path)
 
 
-def check_lanes(
-    spark, registry: dict, names: list[str], data_dir: str, cache_root: str,
-    plant: str | None = None,
-) -> dict:
-    """``plant`` names one lane whose expected hash is perturbed, so the
-    self-test can prove a wrong result is caught."""
-    from check_oracle import frame_hash  # loads the registry at import
+class Gate:
+    """Checks one lane's result frame at a time; ``close()`` saves the
+    oracle cache. ``plant`` names one lane whose expected hash is
+    perturbed, so the self-test can prove a wrong result is caught."""
 
-    expected = Expected(data_dir, cache_root, frame_hash)
-    try:
-        per_lane: dict[str, str] = {}
-        errors: list[str] = []
-        for name in names:
-            fn, oracle_sql = registry[name]
-            got = want = None
-            try:
-                got = frame_hash(fn(spark, data_dir).toPandas())
-                if oracle_sql is not None:
-                    want = expected.get(oracle_sql, rows_only=False)
-                elif name in ROW_COUNT_SQL:
-                    got = got[0]
-                    want = expected.get(ROW_COUNT_SQL[name], rows_only=True)
-                if name == plant:
-                    want = _perturb(want)
-                ok = want is not None and got == want
-            except Exception as exc:  # any lane failure is a counted failure
-                ok, want = False, f"{type(exc).__name__}: {str(exc)[:200]}"
-            per_lane[name] = "ok" if ok else "FAIL"
-            if not ok:
-                errors.append(f"oracle {name}: got {got} want {want}")
-        failed = sum(1 for v in per_lane.values() if v != "ok")
-        return {"attempted": len(names), "failed": failed, "errors": errors,
-                "per_lane": per_lane}
-    finally:
-        expected.close()
+    def __init__(self, registry: dict, data_dir: str, cache_root: str,
+                 plant: str | None = None) -> None:
+        from check_oracle import frame_hash  # loads the registry at import
+
+        self._frame_hash = frame_hash
+        self._registry = registry
+        self._plant = plant
+        self._expected = Expected(data_dir, cache_root, frame_hash)
+        self.per_lane: dict[str, str] = {}
+
+    def check(self, name: str, df) -> str | None:
+        """None when ``df`` matches the lane's oracle, else why not."""
+        oracle_sql = self._registry[name][1]
+        got = want = None
+        try:
+            got = self._frame_hash(df.toPandas())
+            if oracle_sql is not None:
+                want = self._expected.get(oracle_sql, rows_only=False)
+            elif name in ROW_COUNT_SQL:
+                got = got[0]
+                want = self._expected.get(ROW_COUNT_SQL[name], rows_only=True)
+            if name == self._plant:
+                want = _perturb(want)
+            ok = want is not None and got == want
+        except Exception as exc:  # any lane failure is a counted failure
+            ok, want = False, f"{type(exc).__name__}: {str(exc)[:200]}"
+        self.per_lane[name] = "ok" if ok else "FAIL"
+        return None if ok else f"oracle {name}: got {got} want {want}"
+
+    def close(self) -> None:
+        self._expected.close()

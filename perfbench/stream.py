@@ -1,17 +1,18 @@
-"""Streaming workload: the flagship pipeline, first draining a fixed
-backlog (closed loop), then under a writer that drops event files on a
-fixed schedule (open loop).
+"""Streaming workload: the flagship pipeline fed by one closed-loop client.
 
 ``BoundedRun(seed)`` content events (no late events, so the stream must
-equal its batch twin) are cut into JSONL files. Before the query starts,
-a backlog of ``BACKLOG_BATCHES`` x ``FILES_PER_TRIGGER`` files is written;
-the query reads at most ``FILES_PER_TRIGGER`` files per micro-batch, so it
-drains the backlog in micro-batches of the same size whatever the engine's
-speed, and capacity is their events per second of trigger time. Then a
-writer thread puts one file every ``interval_s`` seconds into the watched
-directory, renaming it in so the file's mtime is its real write time, and
-``start_flagship_stream`` consumes them with a no-delay trigger. Per event,
-freshness is the completion time of the micro-batch that consumed its
+equal its batch twin) are cut into JSONL files of ``EVENTS_PER_FILE``
+events, grouped ``FILES_PER_BATCH`` to a micro-batch
+(``maxFilesPerTrigger``); the query runs with a no-delay trigger. The
+client keeps ``QUEUE_BATCHES`` groups unconsumed: each time a micro-batch
+commits, it writes the next group, renaming each file into the watched
+directory so its mtime is its real write time. The source takes the
+oldest files first, so every micro-batch holds one whole group (1 000
+events), a group is always waiting when a micro-batch ends (no idle or
+no-data batches), and the backlog cannot grow. The first
+``WARMUP_BATCHES`` micro-batches are warm-up; the client feeds
+``--seconds / STEADY_BATCH_S`` more and the query drains what is left.
+Per event, latency is the completion of the micro-batch that consumed its
 file minus the file's write time; the file -> micro-batch map comes from
 the source and offsets logs in the query's checkpoint.
 """
@@ -23,87 +24,76 @@ import glob
 import json
 import os
 import statistics
-import threading
 import time
 from datetime import datetime
-
-from pyspark.errors import StreamingQueryException
 
 import trace
 from common import Setup, percentile
 
 CLOCK_COLS = {"processed_at", "max_processed_at_30m"}
-INTERVAL_S = 0.5  # one file every 0.5 s, open loop: 100 events/s
-EVENTS_PER_FILE = 50
+EVENTS_PER_FILE = 250
+# One input split per file: four files keep the four cores busy.
+FILES_PER_BATCH = 4
 EVENT_TIME_RATE = 50.0  # generator events per second of event time
-# maxFilesPerTrigger: 1000 events per backlog micro-batch. The cap also
-# holds in the open-loop phase, where it is 10 s of writes, more than a
-# micro-batch of a stream that keeps up takes.
-FILES_PER_TRIGGER = 20
-# The first backlog micro-batch creates the stores and is warm-up; the
-# other two are measured.
-BACKLOG_BATCHES = 3
-WARMUP_BATCHES = 1
+# One group running and one waiting: the next micro-batch never waits for
+# the client, and a group waits for at most one micro-batch before its own.
+QUEUE_BATCHES = 2
+# The first micro-batch creates the stores and the next still runs well
+# above the later ones; neither is measured.
+WARMUP_BATCHES = 2
+# Micro-batch times keep drifting over a run (JIT, state and table
+# growth), so a run measures a fixed number of them, --seconds /
+# STEADY_BATCH_S (about one micro-batch on 4 cores; 3 at the declared
+# 20 s), rather than as many as fit: each run then samples the same
+# stretch of the stream.
+STEADY_BATCH_S = 6.5
+MIN_MEASURED = 2
+# Events generated up front, whatever --seconds: the generator sizes its
+# video and user population by the total, and the per-batch cost follows
+# the population. Runs use the first groups of them.
+TOTAL_BATCHES = 10
 # Compact in every micro-batch (the default is every 8th): a run holds
-# only a handful of micro-batches, and uniform batches keep the freshness
-# percentiles from flipping with the phase of an append/compact cycle.
+# only a handful of micro-batches, and uniform batches keep their median
+# from depending on where a compaction falls.
 COMPACT_EVERY = 1
 DRAIN_BATCHES = 3
+POLL_S = 0.05
+# The next micro-batch lists the directory as soon as a commit lands, and
+# the file source keeps files it listed but did not take for the micro-batch
+# after, without listing again. A group written while that listing runs
+# would be split over two micro-batches, so the client writes a group this
+# long after the commit that freed its slot.
+WRITE_DELAY_S = 0.5
+STALL_S = 60.0
 
 
 def _iso_to_epoch(ts: str) -> float:
     return datetime.fromisoformat(ts.replace("Z", "+00:00")).timestamp()
 
 
-class Writer(threading.Thread):
-    """Writes file i at ``start + i * interval``, regardless of how the
-    stream is doing; records how late each write ran against its schedule."""
+class Feeder:
+    """The closed-loop client: writes the next FILES_PER_BATCH files of
+    ``chunks`` on request, each renamed into ``src`` so its mtime is its
+    write time, and records how long after it was due each landed."""
 
-    def __init__(self, src: str, chunks: list[str], start: float, interval: float,
-                 first_index: int = 0):
-        super().__init__(daemon=True)
-        self.src, self.chunks, self.start_at, self.interval = src, chunks, start, interval
-        self.first_index = first_index
+    def __init__(self, src: str, chunks: list[str]) -> None:
+        self.src, self.chunks = src, chunks
         self.written: list[dict] = []
-        self.error: Exception | None = None
 
-    def write_all(self) -> None:
-        for i, body in enumerate(self.chunks):
-            due = self.start_at + i * self.interval
-            delay = due - time.time()
-            if delay > 0:
-                time.sleep(delay)
-            n = self.first_index + i
+    def write_next(self, due: float) -> bool:
+        first = len(self.written)
+        if first + FILES_PER_BATCH > len(self.chunks):
+            return False
+        for n in range(first, first + FILES_PER_BATCH):
             tmp = os.path.join(self.src, f".part-{n:05d}.tmp")
             final = os.path.join(self.src, f"part-{n:05d}.jsonl")
             with open(tmp, "w") as fh:
-                fh.write(body)
+                fh.write(self.chunks[n])
             os.replace(tmp, final)
             mtime = os.stat(final).st_mtime
-            self.written.append(
-                {"path": final, "due": due, "mtime": mtime, "late_s": mtime - due,
-                 "events": body.count("\n") + 1}
-            )
-
-    def run(self) -> None:
-        try:
-            self.write_all()
-        except Exception as exc:  # re-raised by the caller after join
-            self.error = exc
-
-
-def write_backlog(src: str, chunks: list[str]) -> list[str]:
-    """Write ``chunks`` as files 0.. with strictly increasing mtimes in the
-    past, so the file source reads them in order. Returns the basenames."""
-    base_ns = time.time_ns() - len(chunks) * 1_000_000
-    names = []
-    for i, body in enumerate(chunks):
-        path = os.path.join(src, f"part-{i:05d}.jsonl")
-        with open(path, "w") as fh:
-            fh.write(body)
-        os.utime(path, ns=(base_ns + i * 1_000_000,) * 2)
-        names.append(os.path.basename(path))
-    return names
+            self.written.append({"path": final, "due": due, "mtime": mtime,
+                                 "late_s": max(0.0, mtime - due)})
+        return True
 
 
 def _file_batches(ckpt: str) -> dict[str, int]:
@@ -214,10 +204,8 @@ def _planted_failure(active: bool):
 def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = None) -> dict:
     """The stream_flagship workload. ``plant="stream"`` makes the query fail
     (self-test only)."""
-    interval = INTERVAL_S
-    backlog_n = BACKLOG_BATCHES * FILES_PER_TRIGGER
-    open_n = max(1, int(seconds / interval))
-    setup = Setup(work, extra=lambda spark: _inputs(spark, seed, backlog_n + open_n))
+    n_files = FILES_PER_BATCH * TOTAL_BATCHES
+    setup = Setup(work, extra=lambda spark: _inputs(spark, seed, n_files))
     setup.run()
     spark = setup.spark
     from shortvideohybridanalyticslakehouse_spark.streaming import flagship
@@ -227,20 +215,23 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
     out = os.path.join(work, "out")
     ckpt = os.path.join(work, "ckpt")
     os.makedirs(src)
-    backlog = write_backlog(src, inputs["chunks"][:backlog_n])
+    measured_n = max(MIN_MEASURED, min(TOTAL_BATCHES - WARMUP_BATCHES,
+                                       round(seconds / STEADY_BATCH_S)))
+    feeder = Feeder(src, inputs["chunks"][:FILES_PER_BATCH * (WARMUP_BATCHES + measured_n)])
 
     tracer = trace.Tracer() if traced else None
     restore = trace.patch_layers(tracer) if traced else None
     ledger = trace.JobLedger(trace.StatusStore(spark)) if traced else None
-    writer = Writer(src, inputs["chunks"][backlog_n:], 0.0, interval, first_index=backlog_n)
     errors: list[str] = []
     progress: dict[int, dict] = {}
     t_measure = t_end = None
     try:
         with _planted_failure(plant == "stream"):
+            for _ in range(QUEUE_BATCHES):
+                feeder.write_next(time.time())
             q = flagship.start_flagship_stream(
                 spark,
-                flagship.read_flagship_file_stream(spark, src, FILES_PER_TRIGGER),
+                flagship.read_flagship_file_stream(spark, src, FILES_PER_BATCH),
                 inputs["dims"],
                 inputs["thresholds"],
                 out,
@@ -249,15 +240,8 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
                 compact_every=COMPACT_EVERY,
             )
             try:
-                _wait_consumed(q, ckpt, set(backlog), 60)
-                t_measure = time.time()
-                writer.start_at = t_measure + interval
-                writer.start()
-                writer.join(timeout=seconds + 10)
-                if writer.error is not None:
-                    raise writer.error
-                t_end = time.time()
-                _wait_consumed(q, ckpt, {os.path.basename(w["path"]) for w in writer.written},
+                t_measure, t_end = _feed(q, feeder)
+                _wait_consumed(q, ckpt, {os.path.basename(w["path"]) for w in feeder.written},
                                60)
                 q.processAllAvailable()
             finally:
@@ -273,26 +257,23 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
 
     file_batch = _file_batches(ckpt)
     done = set(progress)
-    consumed = sum(1 for n in backlog if file_batch.get(n) in done)
-    # closed loop: backlog micro-batches of FILES_PER_TRIGGER files each
-    backlog_ids = sorted({file_batch[n] for n in backlog if file_batch.get(n) in done})
-    drained = [progress[bid] for bid in backlog_ids[WARMUP_BATCHES:]]
-    # open loop: freshness per event, and the backlog check
-    fresh: list[float] = []
+    consumed = 0
+    fresh: list[float] = []  # per file: every event in it shares the value
     last_end = t_end or 0.0
-    for w in writer.written:
+    for w in feeder.written:
         bid = file_batch.get(os.path.basename(w["path"]))
         if bid not in done:
             continue
         consumed += 1
         b = progress[bid]
-        fresh.extend([b["end"] - w["mtime"]] * w["events"])
         last_end = max(last_end, b["end"])
+        # written after warm-up: its wait is on measured micro-batches only
+        if t_measure and w["mtime"] >= t_measure:
+            fresh.append(b["end"] - w["mtime"])
     measured = [b for bid, b in sorted(progress.items())
                 if b["rows"] > 0 and t_measure and b["start"] >= t_measure]
-    # Each micro-batch takes every waiting file (up to FILES_PER_TRIGGER),
-    # so a stream that keeps up drains within about two batch times after
-    # the last write; a growing backlog shows as a longer drain.
+    # The client stops with one group left, which a stream that keeps up
+    # drains within a batch time; a stuck one does not.
     drain_s = last_end - t_end if t_end else None
     drain_bound_s = (DRAIN_BATCHES * statistics.median(b["trigger_ms"] for b in measured) / 1e3
                      if measured else None)
@@ -305,29 +286,29 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
     flagship.drop_stores(spark, out)
     spark.stop()
 
-    attempted = backlog_n + len(writer.written)
+    attempted = len(feeder.written)
     failed = attempted - consumed
     if not twin_ok:
         errors.append("stream decisions differ from flagship_batch_twin")
     if drain_s is not None and drain_bound_s is not None and drain_s > drain_bound_s:
         errors.append(f"backlog: drain took {drain_s:.2f} s > {drain_bound_s:.2f} s")
-    if not (drained and fresh):
+    if not (measured and fresh):
         errors.append("stream: no measured micro-batch")
     if errors:
         failed = attempted
     metrics = {"setup_s": (setup.parts["total_s"], "s")}
-    if drained and fresh:
-        trig_s = [b["trigger_ms"] / 1000.0 for b in drained]
+    if measured and fresh:
+        trig_s = [b["trigger_ms"] / 1000.0 for b in measured]
         metrics.update({
             "pass_s": (statistics.median(trig_s), "s"),
             "latency_p50_s": (statistics.median(fresh), "s"),
             "latency_p90_s": (percentile(fresh, 90), "s"),
-            "capacity_per_s": (sum(b["rows"] for b in drained) / sum(trig_s), "1/s"),
+            "capacity_per_s": (statistics.median(b["rows"] / t for b, t in zip(measured, trig_s)),
+                               "1/s"),
         })
     layers = {}
     if traced and measured:
-        layers = _layer_metrics(tracer, measured, progress, t_measure, writer, fresh,
-                                jobs)
+        layers = _layer_metrics(tracer, measured, progress, t_measure, feeder, fresh, jobs)
     return {
         "attempted": attempted,
         "failed": failed,
@@ -336,15 +317,13 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
         "layers": layers,
         "tracer": tracer,
         "detail": {
-            "backlog_files": backlog_n,
-            "files_per_trigger": FILES_PER_TRIGGER,
-            "open_loop_files": open_n,
+            "measured_target": measured_n,
             "events_per_file": EVENTS_PER_FILE,
-            "interval_s": interval,
-            "rate_events_per_s": EVENTS_PER_FILE / interval,
+            "files_per_batch": FILES_PER_BATCH,
+            "queue_batches": QUEUE_BATCHES,
+            "files_written": len(feeder.written),
             "setup": setup.parts,
-            "backlog_batch_ids": backlog_ids,
-            "open_loop_batches": len(measured),
+            "measured_batches": len(measured),
             "batch_log": [dict(b, batch_id=bid) for bid, b in sorted(progress.items())],
             "t_measure": t_measure,
             "drain_s": drain_s,
@@ -352,10 +331,43 @@ def run(seed: int, seconds: float, traced: bool, work: str, plant: str | None = 
             "twin_equal": twin_ok,
             "decisions": n_decisions,
             "freshness_p95_s": percentile(fresh, 95) if fresh else None,
-            "writer_late_p95_s": (percentile([w["late_s"] for w in writer.written], 95)
-                                  if writer.written else None),
+            "feeder_late_p95_s": (percentile([w["late_s"] for w in feeder.written], 95)
+                                  if feeder.written else None),
         },
     }
+
+
+def _feed(q, feeder: Feeder) -> tuple[float, float]:
+    """Keep QUEUE_BATCHES groups unconsumed: after each committed
+    micro-batch write the next group, until the feeder's files are all
+    written. Returns (end of the warm-up micro-batches, last write)."""
+    seen: set[int] = set()
+    rows = batches = 0
+    t_measure = None
+    last_commit = time.time()
+    while True:
+        p = q.lastProgress
+        if p is not None and p.batchId not in seen and p.numInputRows > 0:
+            last_commit = time.time()
+            seen.add(p.batchId)
+            rows += p.numInputRows
+            batches += 1
+            end = _iso_to_epoch(p.timestamp) + p.durationMs.get("triggerExecution", 0) / 1e3
+            if batches == WARMUP_BATCHES:
+                t_measure = end
+            due = end + WRITE_DELAY_S
+            while (len(feeder.written) - rows // EVENTS_PER_FILE
+                   < QUEUE_BATCHES * FILES_PER_BATCH):
+                time.sleep(max(0.0, due - time.time()))
+                if not feeder.write_next(due):
+                    return t_measure, time.time()
+        if q.exception() is not None:
+            raise RuntimeError(f"stream failed: {q.exception()}")
+        if not q.isActive:
+            raise RuntimeError("stream stopped")
+        if time.time() - last_commit > STALL_S:
+            raise TimeoutError(f"no micro-batch committed in {STALL_S} s")
+        time.sleep(POLL_S)
 
 
 def _wait_consumed(q, ckpt: str, names: set[str], timeout: float) -> None:
@@ -383,7 +395,7 @@ def _twin_equal(spark, flagship, src: str, out: str, inputs: dict) -> tuple[bool
     return s_rows == b_rows and len(s_rows) > 0, len(s_rows)
 
 
-def _layer_metrics(tracer, measured, progress, t_measure, writer, fresh, jobs) -> dict:
+def _layer_metrics(tracer, measured, progress, t_measure, feeder, fresh, jobs) -> dict:
     trig = [b["trigger_ms"] for b in measured]
     span_s = (max(b["end"] for b in measured) - t_measure) if measured else 1.0
 
@@ -414,6 +426,6 @@ def _layer_metrics(tracer, measured, progress, t_measure, writer, fresh, jobs) -
         "plans.ddl.append_s": (append_s, "s"),
         "plans.ddl.compact_calls": (compact_n, "count"),
         "plans.ddl.compact_s": (compact_s, "s"),
-        "generator.late_p95_s": (percentile([w["late_s"] for w in writer.written], 95), "s"),
+        "generator.late_p95_s": (percentile([w["late_s"] for w in feeder.written], 95), "s"),
         **trace.engine_layers(jobs, span_s),
     }
