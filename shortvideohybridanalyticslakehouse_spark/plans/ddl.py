@@ -405,17 +405,17 @@ def _scan_bucket_files(loc: str) -> tuple[dict[int, list[str]], list[str]]:
 
 
 def _link_untouched(
-    loc: str,
-    tmp: str,
-    by_bucket: dict[int, list[str]],
-    touched,
-    extras: list[str],
-) -> None:
-    """Hard-link every untouched bucket's files (plus extras) into the
-    staging dir — same inode, zero data IO, byte identical. Keeps .crc
-    shadows so ChecksumFileSystem stays happy with the old names."""
+    loc: str, by_bucket: dict[int, list[str]], touched, extras: list[str]
+) -> str:
+    """Hard-link every untouched bucket's files (plus extras) into a new
+    staging dir, returned — same inode, zero data IO, byte identical. Keeps
+    .crc shadows so ChecksumFileSystem stays happy with the old names."""
     import os
+    import shutil
 
+    tmp = loc + "._tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
     for b, fs in by_bucket.items():
         if b in touched:
             continue
@@ -426,38 +426,53 @@ def _link_untouched(
                 os.link(os.path.join(loc, crc), os.path.join(tmp, crc))
     for f in extras:
         os.link(os.path.join(loc, f), os.path.join(tmp, f))
+    return tmp
 
 
-def _write_bucket_file(
-    df: DataFrame,
-    key: str,
-    sort_cols: Sequence[str],
-    scratch: str,
-    tmp: str,
-    bucket: int,
-    tag: str,
-) -> None:
-    """Rewrite one bucket as a single sorted file named with the bucket's
-    id so readers keep recognizing the bucket spec. No .crc for the
-    renamed file: ChecksumFileSystem tolerates a missing shadow, but a
-    stale mismatched one would fail reads."""
+def _read_buckets(spark, table_name, loc, by_bucket, touched) -> DataFrame:
+    """Every file of the touched buckets in one scan; the table schema is
+    given, so no schema-inference job runs."""
+    import os
+
+    files = [os.path.join(loc, f) for b in sorted(touched) for f in by_bucket[b]]
+    return spark.read.schema(spark.table(table_name).schema).parquet(*files)
+
+
+def _write_buckets(df, key, sort_cols, loc, tmp, touched, tag) -> dict[int, int]:
+    """Write ``df``, clustered by ``repartition(n_buckets, key)`` — whose
+    partition id ``pmod(murmur3(key), n)`` is the bucket id ``bucketBy``
+    assigns — in one job, each partition sorted, and move each partition's
+    file into ``tmp`` under its bucket id; returns bucket -> rows, from
+    the parquet footers. Drops Spark's always-written partition-0 file
+    when it has 0 rows. No .crc for the renamed files: ChecksumFileSystem
+    tolerates a missing shadow, but a stale mismatched one would fail
+    reads."""
     import os
     import shutil
     import uuid
 
+    import pyarrow.parquet as pq
+
+    scratch = loc + "._scratch"
     shutil.rmtree(scratch, ignore_errors=True)
-    (
-        df.coalesce(1)
-        .sortWithinPartitions(key, *sort_cols)
-        .write.mode("overwrite")
-        .parquet(scratch)
-    )
-    part = next(
-        f for f in os.listdir(scratch)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    out = f"part-00000-{tag}-{uuid.uuid4()}_{bucket:05d}.c000.snappy.parquet"
-    os.rename(os.path.join(scratch, part), os.path.join(tmp, out))
+    df.sortWithinPartitions(key, *sort_cols).write.parquet(scratch)
+    rows: dict[int, int] = {}
+    for f in sorted(f for f in os.listdir(scratch) if f.startswith("part-")):
+        b = int(f.split("-")[1])  # part-NNNNN-...: the Spark partition id
+        n = pq.read_metadata(os.path.join(scratch, f)).num_rows
+        if b == 0 and n == 0:
+            continue
+        if b not in touched or b in rows:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise RuntimeError(
+                f"bucket rewrite wrote {f!r} ({n} rows): bucket {b} is "
+                "untouched or already written — aborting before the swap"
+            )
+        rows[b] = n
+        out = f"part-00000-{tag}-{uuid.uuid4()}_{b:05d}.c000.snappy.parquet"
+        os.rename(os.path.join(scratch, f), os.path.join(tmp, out))
+    shutil.rmtree(scratch, ignore_errors=True)
+    return rows
 
 
 def _swap_table_dir(spark, table_name: str, loc: str, tmp: str) -> None:
@@ -483,47 +498,44 @@ def compact_bucketed_table(
     order_cols: Sequence[str],
     n_buckets: int = N_BUCKETS,
 ) -> int:
-    """Per-bucket bin-pack compaction: rewrite ONLY buckets holding more
-    than one file into a single sorted, merge-resolved file; untouched
-    buckets are HARD-LINKED into the new table directory (zero data IO),
-    then the directory is swapped atomically (two renames, torn-swap
-    recoverable). Restores the exactly-one-file-per-bucket precondition
-    of the exchange-free sorted window read. Returns the number of
-    buckets compacted.
+    """Bin-pack compaction in one Spark job per call: rewrite ONLY the
+    buckets holding more than one file, each into one sorted,
+    merge-resolved file — read in one scan, clustered by
+    ``repartition(n_buckets, key)`` (which already satisfies the merge
+    window) and written by one job, so the fixed per-job cost is paid per
+    table, not per bucket. Spark writes a file for partition 0 even when
+    it is empty: that 0-row file is dropped, and any other file for an
+    untouched bucket, two files for one bucket or a touched bucket with
+    no file aborts before the swap. Untouched buckets are HARD-LINKED
+    into the new table directory (zero data IO), then the directory is
+    swapped atomically (two renames, torn-swap recoverable), restoring
+    the one-file-per-bucket precondition of the exchange-free sorted
+    window read. Returns the number of buckets compacted.
 
     Work is O(touched buckets x bucket size), never O(table) — the same
     shape as the streaming SCD2/MV maintainers."""
-    import os
     import shutil
 
-    loc = table_location(spark, table_name)
-    recover_bucketed_table(loc)
-    by_bucket, extras = _scan_bucket_files(loc)
-    touched = {b: fs for b, fs in by_bucket.items() if len(fs) > 1}
-    if not touched:
-        return 0
-
-    tmp = loc + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    cols = spark.table(table_name).columns
     from shortvideohybridanalyticslakehouse_spark.operators.dedup import (
         latest_per_key,
     )
 
-    _link_untouched(loc, tmp, by_bucket, touched, extras)
+    loc = table_location(spark, table_name)
+    recover_bucketed_table(loc)
+    by_bucket, extras = _scan_bucket_files(loc)
+    touched = {b for b, fs in by_bucket.items() if len(fs) > 1}
+    if not touched:
+        return 0
 
-    scratch = loc + "._scratch"
-    for b, fs in sorted(touched.items()):
-        merged = latest_per_key(
-            spark.read.parquet(*[os.path.join(loc, f) for f in fs]).select(
-                *cols
-            ),
-            merge_keys,
-            order_cols,
-        )
-        _write_bucket_file(merged, key, sort_cols, scratch, tmp, b, "compact")
-    shutil.rmtree(scratch, ignore_errors=True)
+    tmp = _link_untouched(loc, by_bucket, touched, extras)
+    bucket_df = _read_buckets(spark, table_name, loc, by_bucket, touched)
+    merged = latest_per_key(
+        bucket_df.repartition(n_buckets, F.col(key)), merge_keys, order_cols
+    )
+    written = _write_buckets(merged, key, sort_cols, loc, tmp, touched, "compact")
+    if set(written) != touched:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(f"compaction wrote no file for bucket(s) {touched - set(written)}")
 
     _swap_table_dir(spark, table_name, loc, tmp)
     return len(touched)
@@ -536,29 +548,31 @@ def delete_keys_bucketed(
     key_values: Sequence,
     sort_cols: Sequence[str],
 ) -> tuple[int, int]:
-    """Targeted delete (GDPR right-to-be-forgotten / CCPA erasure) over
-    a bucketed gold table: physically rewrite ONLY the buckets whose
-    files contain the given key values; every other bucket is
+    """Targeted delete (GDPR right-to-be-forgotten / CCPA erasure) over a
+    bucketed gold table, one rewrite job per call: physically rewrite ONLY
+    the buckets whose files contain the given key values, with
+    compaction's writer and partition-0 rule; every other bucket is
     HARD-LINKED into the new table directory (zero data IO, byte
     identical), then the directory swaps atomically through the same
     two-rename, torn-swap-recoverable protocol as
-    :func:`compact_bucketed_table`. Returns (buckets_rewritten,
-    rows_deleted).
+    :func:`compact_bucketed_table`. Returns (buckets_rewritten, rows_deleted).
 
     Touched buckets are found by SCANNING with the key predicate and
     reading back input_file_name() — data-driven, so it is correct for
     any hash the writer used and naturally benefits from bucket pruning.
-    The rewrite also bin-packs the touched bucket back to one sorted
-    file, so a delete never degrades the exchange-free window-read
-    property; a delete of an absent key is a physical no-op (0, 0).
+    The rewrite bin-packs each touched bucket back to one sorted file
+    (none if the delete empties it), so a delete never degrades the
+    exchange-free window-read property; a delete of an absent key is a
+    physical no-op (0, 0).
 
     NULL-key rows are never erasure targets (an erasure request names
     concrete subject keys), so the keep predicate is explicitly
     ``key IS NULL OR key NOT IN (...)`` — a bare ``NOT IN`` evaluates
     to NULL for NULL keys and would silently drop them from rewritten
     buckets while identical rows in untouched buckets survived
-    (ADVICE r8, medium). The function asserts the physical delta equals
-    the predicate-matched count, so any future drift fails loudly.
+    (ADVICE r8, medium). The function asserts the physical delta (one
+    aggregate before, the written footers after) equals the
+    predicate-matched count, so any future drift fails loudly.
 
     Work is O(touched buckets x bucket size), never O(table) — at 100 TB
     with 4096 buckets an erasure request rewrites ~0.02% of the table.
@@ -592,37 +606,21 @@ def delete_keys_bucketed(
                 "cannot guarantee complete erasure, aborting before any "
                 "rewrite (ADVICE r8)"
             )
-    touched = sorted({_bucket_of(os.path.basename(r.f)) for r in hits})
+    touched = {_bucket_of(os.path.basename(r.f)) for r in hits}
     if not touched:
         return 0, 0
 
-    tmp = loc + "._tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    _link_untouched(loc, tmp, by_bucket, touched, extras)
-
-    cols = spark.table(table_name).columns
-    scratch = loc + "._scratch"
-    deleted = 0
-    matched = 0
-    for b in touched:
-        paths = [os.path.join(loc, f) for f in by_bucket[b]]
-        bucket_df = spark.read.parquet(*paths).select(*cols)
-        n_before = bucket_df.count()
-        matched += bucket_df.filter(F.col(key).isin(vals)).count()
-        kept = bucket_df.filter(
-            F.col(key).isNull() | ~F.col(key).isin(vals)
-        )
-        _write_bucket_file(kept, key, sort_cols, scratch, tmp, b, "erase")
-        n_after = spark.read.parquet(
-            os.path.join(tmp, next(
-                f for f in os.listdir(tmp)
-                if f.endswith(f"_{b:05d}.c000.snappy.parquet")
-                and "-erase-" in f
-            ))
-        ).count()
-        deleted += n_before - n_after
-    shutil.rmtree(scratch, ignore_errors=True)
+    desc = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+    n_buckets = int(next(r.data_type for r in desc if r.col_name == "Num Buckets"))
+    tmp = _link_untouched(loc, by_bucket, touched, extras)
+    bucket_df = _read_buckets(spark, table_name, loc, by_bucket, touched)
+    n_before, matched = bucket_df.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col(key).isin(vals), 1))
+    ).first()
+    kept = bucket_df.filter(F.col(key).isNull() | ~F.col(key).isin(vals))
+    kept = kept.repartition(n_buckets, F.col(key))
+    written = _write_buckets(kept, key, sort_cols, loc, tmp, touched, "erase")
+    deleted = n_before - sum(written.values())
     if deleted != matched:
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(

@@ -219,3 +219,119 @@ def test_recover_torn_swap(spark, mor_table):
     spark.sql(f"REFRESH TABLE {TABLE}")
     assert spark.table(TABLE).count() == 200
     shutil.rmtree(loc + "._tmp", ignore_errors=True)
+
+
+STR_TABLE = "gold_minute_str_keys"
+STR_BUCKETS = 16
+
+
+def _str_rows(spark, keys, ver):
+    return spark.createDataFrame(
+        [(k, m, float(m + ver), ver) for k in keys for m in range(3)],
+        "video_id string, m long, n double, ver long",
+    ).select(
+        "video_id",
+        F.timestamp_seconds(F.lit(T0) + F.col("m") * 60).alias("minute"),
+        "n",
+        "ver",
+    )
+
+
+def _compact_str(spark):
+    return compact_bucketed_table(
+        spark, STR_TABLE, "video_id", ["minute"],
+        merge_keys=["video_id", "minute"], order_cols=["ver"],
+        n_buckets=STR_BUCKETS,
+    )
+
+
+@pytest.fixture()
+def str_keys(spark):
+    """String keys (like the flagship's video_id) grouped by the bucket
+    ``bucketBy`` puts them in, ``pmod(hash(key), 16)``; the table holds
+    every key outside bucket 0, so bucket 0 has no file."""
+    spark.sql(f"DROP TABLE IF EXISTS {STR_TABLE}")
+    by_bucket: dict[int, list[str]] = {}
+    for r in spark.range(400).select(
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("k")
+    ).select(
+        "k", F.expr(f"pmod(hash(k), {STR_BUCKETS})").alias("b")
+    ).collect():
+        by_bucket.setdefault(r.b, []).append(r.k)
+    assert set(by_bucket) == set(range(STR_BUCKETS))
+    write_bucketed_sorted_table(
+        _str_rows(
+            spark, [k for b, ks in by_bucket.items() if b for k in ks], 0
+        ),
+        STR_TABLE, "video_id", ["minute"], n_buckets=STR_BUCKETS,
+    )
+    yield by_bucket
+    spark.sql(f"DROP TABLE IF EXISTS {STR_TABLE}")
+
+
+def test_compaction_places_rows_in_their_bucket(spark, str_keys):
+    """One write job rewrites all touched buckets: every row must land in
+    the file of the bucket ``bucketBy`` assigns it, and Spark's always-
+    written partition-0 file must not surface as a bucket-0 file."""
+    touched = [3, 6, 9, 12]
+    append_bucketed_sorted(
+        _str_rows(spark, [k for b in touched for k in str_keys[b][:2]], 1),
+        STR_TABLE, "video_id", ["minute"], n_buckets=STR_BUCKETS,
+    )
+    loc = table_location(spark, STR_TABLE)
+    files1 = _files_by_bucket(loc)
+    assert _compact_str(spark) == len(touched)
+
+    files2 = _files_by_bucket(loc)
+    assert 0 not in files2
+    assert set(files2) == set(files1)
+    assert all(len(fs) == 1 for fs in files2.values())
+    for b in set(files1) - set(touched):
+        assert files2[b] == files1[b]
+    placed = spark.read.parquet(loc).select(
+        F.input_file_name().alias("f"),
+        F.expr(f"pmod(hash(video_id), {STR_BUCKETS})").alias("b"),
+    ).distinct().collect()
+    assert placed and all(
+        _bucket_of(os.path.basename(r.f)) == r.b for r in placed
+    )
+
+    probe = [str_keys[b][0] for b in (1, 3, 6, 7, 12)] + str_keys[0][:1]
+    unpruned = spark.read.parquet(loc).filter(F.col("video_id").isin(probe))
+
+    def rows(df):
+        return sorted(
+            (r.video_id, str(r.minute), r.n, r.ver) for r in df.collect()
+        )
+
+    # a plain filter makes the planner drop the bucketed scan; keep it so
+    # the read is pruned to the probe keys' buckets
+    auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    was = spark.conf.get(auto)
+    spark.conf.set(auto, "false")
+    try:
+        pruned = spark.table(STR_TABLE).filter(F.col("video_id").isin(probe))
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        assert f"SelectedBucketsCount: 6 out of {STR_BUCKETS}" in plan
+        got = rows(pruned)
+    finally:
+        spark.conf.set(auto, was)
+    assert got == rows(unpruned)
+    assert len(got) == 5 * 3  # 5 stored keys x 3 minutes, none lost
+    assert {r[3] for r in got if r[0] in str_keys[3][:2]} == {1}
+
+
+def test_compaction_job_count_is_constant(spark, str_keys, count_jobs):
+    """Compaction launches the same number of Spark jobs whether it
+    rewrites 4 buckets or 8: the fixed per-job cost is paid per call,
+    not per bucket."""
+    jobs = {}
+    for touched in ([2, 5, 8, 11], [1, 4, 7, 10, 13, 14, 15, 3]):
+        append_bucketed_sorted(
+            _str_rows(spark, [str_keys[b][0] for b in touched], 2),
+            STR_TABLE, "video_id", ["minute"], n_buckets=STR_BUCKETS,
+        )
+        jobs[len(touched)], n = count_jobs(lambda: _compact_str(spark))
+        assert n == len(touched)
+    assert jobs[4] == jobs[8], jobs
+    assert jobs[4] <= 2, jobs  # the write, and under AQE its map stage

@@ -127,3 +127,38 @@ def test_delete_rewrites_only_touched_buckets(spark, erase_table):
         for b, fs in _files_by_bucket(loc).items()
     }
     assert post2 == post
+
+
+def test_delete_job_count_is_constant(spark, count_jobs):
+    """Erasure launches the same number of Spark jobs whether it rewrites
+    4 buckets or 8: the touch probe, one accounting aggregate and one
+    write, however many buckets are touched."""
+    table = "gold_minute_erase_jobs"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        write_bucketed_sorted_table(
+            _gold_rows(spark, range(0, 48), range(0, 4), ver=0),
+            table, "video_id", ["minute"], n_buckets=N_BUCKETS,
+        )
+        by_bucket: dict[int, list[int]] = {}
+        for r in spark.range(48).select(
+            "id", F.expr(f"pmod(hash(id), {N_BUCKETS})").alias("b")
+        ).collect():
+            by_bucket.setdefault(r.b, []).append(r.id)
+        assert len(by_bucket) == N_BUCKETS
+        assert all(len(vs) >= 2 for vs in by_bucket.values())
+        jobs = {}
+        for k, i in ((4, 0), (8, 1)):
+            vals = [by_bucket[b][i] for b in sorted(by_bucket)[:k]]
+            jobs[k], result = count_jobs(
+                lambda: delete_keys_bucketed(
+                    spark, table, "video_id", vals, ["minute"]
+                )
+            )
+            assert result == (k, 4 * k)
+        assert jobs[4] == jobs[8], jobs
+        # probe, aggregate and write: a result job each, plus under AQE
+        # a map-stage job each
+        assert jobs[4] <= 6, jobs
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")

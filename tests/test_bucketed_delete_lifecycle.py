@@ -15,6 +15,7 @@ from shortvideohybridanalyticslakehouse_spark.operators.rolling import (
     rolling_range_sums,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.ddl import (
+    _bucket_of,
     append_bucketed_sorted,
     compact_bucketed_table,
     delete_keys_bucketed,
@@ -191,3 +192,48 @@ def test_maintenance_rejects_foreign_data_file(spark, lifecycle_table):
                 )
         finally:
             os.remove(os.path.join(loc, stray))
+
+
+def test_erase_emptying_a_bucket(spark, lifecycle_table):
+    """Erase every key of bucket 0 (plus one key elsewhere): bucket 0 is
+    touched and ends with no rows, so Spark's always-written partition-0
+    file is empty and must be dropped, leaving the bucket with no file.
+    The accounting holds, and the erased keys stay gone through later
+    appends and a compaction that keeps the exchange-free window plan."""
+    by_bucket: dict[int, list[int]] = {}
+    for r in spark.range(16).select(
+        "id", F.expr(f"pmod(hash(id), {N_BUCKETS})").alias("b")
+    ).collect():
+        by_bucket.setdefault(r.b, []).append(r.id)
+    assert 0 in by_bucket
+    other = next(b for b in sorted(by_bucket) if b and len(by_bucket[b]) > 1)
+    erased = by_bucket[0] + by_bucket[other][:1]
+    victims = spark.table(TABLE).filter(F.col("video_id").isin(erased)).count()
+    before = spark.table(TABLE).count()
+
+    assert delete_keys_bucketed(
+        spark, TABLE, "video_id", erased, ["minute"]
+    ) == (2, victims)
+    loc = table_location(spark, TABLE)
+    files = [
+        f for f in os.listdir(loc)
+        if f.endswith(".parquet") and not f.startswith(".")
+    ]
+    assert not [f for f in files if _bucket_of(f) == 0]
+    assert spark.table(TABLE).count() == before - victims
+    mor = _no_exchange_window_plan(spark)
+    assert mor.filter(F.col("video_id").isin(erased)).count() == 0
+
+    append_bucketed_sorted(
+        _rows(spark, range(0, 16), range(8, 10), ver=1).filter(
+            ~F.col("video_id").isin(erased)
+        ),
+        TABLE, "video_id", ["minute"], n_buckets=N_BUCKETS,
+    )
+    assert compact_bucketed_table(
+        spark, TABLE, "video_id", ["minute"], ["video_id", "minute"],
+        ["ver"], n_buckets=N_BUCKETS,
+    ) == len(by_bucket) - 1
+    mor2 = _no_exchange_window_plan(spark)
+    assert mor2.filter(F.col("video_id").isin(erased)).count() == 0
+    assert mor2.count() == before - victims + 2 * (16 - len(erased))
