@@ -17,8 +17,8 @@ by oracle hash equality at all three SFs.
 
 All folds below add/multiply Python floats — IEEE-754 binary64 with
 correctly rounded +/* on both the JVM and CPython, so the arithmetic
-matches the Catalyst fold bit for bit as long as the OPERATION ORDER
-matches (each fold documents the expression it replicates).
+matches Spark's (and the DuckDB oracle's) fold bit for bit as long as
+the OPERATION ORDER matches (each fold documents the order it uses).
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ def spark_round(x: float, scale: int) -> float:
 def value_iteration_absorption(
     p: list[float], nf: int, nt: int, k: int, rc: int
 ) -> float:
-    """Replicates queries_ext122.viter: K rounds of
+    """queries_ext122's value iteration: K rounds of
     v'[s] = fold_{i=1..nf} round(acc + p[(s-1)nt+i] * (0 if i==rc else v[i]), 12)
     with init p[(s-1)nt+6], returning v[1] (start-state absorption)."""
     v = [0.0] * nf
@@ -64,7 +64,7 @@ def value_iteration_absorption(
 def expected_steps_fold(
     p: list[float], nf: int, nt: int, k: int
 ) -> list[float]:
-    """Replicates queries_ext128: K rounds of
+    """queries_ext128's expected-steps iteration: K rounds of
     h'[s] = fold_{i=1..nf} round(acc + p[(s-1)nt+i] * h[i], 12), init 1.0."""
     h = [0.0] * nf
     for _ in range(k):
@@ -85,8 +85,8 @@ def pca_power_fold(
     dim: int,
     iters: int,
 ) -> tuple[list[float], float]:
-    """Replicates queries_ext83's 8-round power iteration over the
-    integer second-moment stats, bit for bit:
+    """queries_ext83's 8-round power iteration over the integer
+    second-moment stats, with Spark's arithmetic bit for bit:
 
       mat[i][j] = double(n * gram[i,j] - marg[i] * marg[j]) / (n_d * n_d)
       u_i  = round(fold_j(acc + mat[i][j] * v_j, seed 0.0), 12)
@@ -133,7 +133,7 @@ def pca_power_fold(
 def stationary_power_fold(
     pm: list[float], n: int, iters: int
 ) -> list[float]:
-    """Replicates queries_ext97: ITERS rounds of
+    """queries_ext97's power iteration: ITERS rounds of
     pi'[j] = fold_{i=1..n} round(acc + pi[i] * pm[n(i-1)+j], 12), init 0.0."""
     pi = [1.0 / n] * n
     for _ in range(iters):

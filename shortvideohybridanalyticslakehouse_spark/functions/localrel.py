@@ -14,8 +14,8 @@ markov scenario frames (7.5 s executorRunTime, 0.25 s cpu, 32 tasks,
 ``local_rows_df`` renders driver-bounded rows as a VALUES relation when
 every value has an EXACT SQL literal form, falling back to
 ``createDataFrame`` otherwise (unknown types, type/value mismatches,
-parser rejection, non-UTC driver timezone for timestamps, SVH_LOCALREL=0
-kill-switch). Exactness notes:
+parser rejection, non-UTC driver timezone for timestamps). Exactness
+notes:
 
 - doubles/floats round-trip through ``repr`` (shortest decimal) and a
   string->double CAST (Double.parseDouble is correctly rounded) —
@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import datetime
 import math
-import os
 import time
 from decimal import Decimal
 
@@ -110,19 +109,14 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     ``rows``: list of tuples/Rows (positional, matching the schema).
     ``schema``: DDL string or StructType. Identical values and column
     names/types as ``spark.createDataFrame(rows, schema)`` — only the
-    physical plan differs. Fully transparent fallback; SVH_LOCALREL=0
-    forces the createDataFrame path (A/B toggle).
+    physical plan differs. Fully transparent fallback.
     """
     if isinstance(schema, str):
         struct = T.StructType.fromDDL(schema)
     else:
         struct = schema
     rows = list(rows)
-    if (
-        os.environ.get("SVH_LOCALREL", "1") == "0"
-        or not rows
-        or len(rows) > _MAX_ROWS
-    ):
+    if not rows or len(rows) > _MAX_ROWS:
         return spark.createDataFrame(rows, schema)
     try:
         tuples = [

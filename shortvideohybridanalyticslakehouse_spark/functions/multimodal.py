@@ -81,9 +81,6 @@ DECODE_STATS_SCHEMA = StructType(
     ]
 )
 
-
-import os as _os
-
 _MM_CHAIN_ATTR = "_svh_mm_chain"
 
 
@@ -137,8 +134,7 @@ def _map_stage(
     are pruned to its ``in_cols`` before its kernel runs), so results
     are unchanged; only the number of boundary crossings drops. Fusion
     only fires when the previous stage's declared output covers
-    ``in_cols`` and can be disabled with SVH_MM_FUSE=0 (the un-fused
-    plan is the debugging view).
+    ``in_cols``.
 
     HARD REQUIREMENT: kernels must be DETERMINISTIC functions of their
     input batches. This already holds for re-execution under Spark task
@@ -149,11 +145,7 @@ def _map_stage(
     """
     in_cols = list(in_cols)
     chain = getattr(df, _MM_CHAIN_ATTR, None)
-    if (
-        chain is not None
-        and _os.environ.get("SVH_MM_FUSE", "1") != "0"
-        and set(in_cols) <= set(chain["out_names"])
-    ):
+    if chain is not None and set(in_cols) <= set(chain["out_names"]):
         stages = chain["stages"] + [(batches, in_cols)]
         out = chain["root"].select(*chain["root_cols"]).mapInPandas(
             _compose_kernels(stages), out_schema

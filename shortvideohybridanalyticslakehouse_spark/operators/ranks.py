@@ -140,7 +140,7 @@ def with_distributed_row_number(
     """
     part_cols = list(part_cols)
     order_cols = list(order_cols)
-    if single_pass and os.environ.get("SVH_RANKS_SINGLE_PASS", "1") != "0":
+    if single_pass:
         # released when the NEXT registered query builds (the returned
         # O(rows) plan still reads these blocks, so an in-builder release
         # is impossible — ADVICE r12)
@@ -240,7 +240,7 @@ def with_distributed_prefix_sum(
     """
     part_cols = list(part_cols)
     order_cols = list(order_cols)
-    if single_pass and os.environ.get("SVH_RANKS_SINGLE_PASS", "1") != "0":
+    if single_pass:
         # released when the NEXT registered query builds (the returned
         # O(rows) plan still reads these blocks, so an in-builder release
         # is impossible — ADVICE r12)
@@ -352,7 +352,7 @@ def with_distributed_prefix_max(
     """
     part_cols = list(part_cols)
     order_cols = list(order_cols)
-    if single_pass and os.environ.get("SVH_RANKS_SINGLE_PASS", "1") != "0":
+    if single_pass:
         # released when the NEXT registered query builds (the returned
         # O(rows) plan still reads these blocks, so an in-builder release
         # is impossible — ADVICE r12)

@@ -9,13 +9,14 @@ doubles derive from exact ints or are rounded to 5-6 decimals.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import dedupfns, similarity, text
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 # ---------------------------------------------------------------------------
@@ -572,12 +573,7 @@ def q_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash_candidate_pairs (both band-join sides + both est-Jaccard
     # re-attach joins); checkpoint it once so the shingle+md5+16-min
     # aggregation subtree executes once, not per consumer (guide §5).
-    if os.environ.get("SVH_LSHV_SIG_CKPT", "1") == "1":
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        with_sig = _dr(with_sig.localCheckpoint())
+    with_sig = defer_release(with_sig.localCheckpoint())
     cand = dedupfns.minhash_candidate_pairs(
         with_sig, id_col="doc_id", sig_col="minhash", num_hashes=16, band_size=2
     ).filter(F.col("est_jaccard") * 16 >= 4).select("doc_a", "doc_b")
@@ -586,21 +582,11 @@ def q_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verify stage in hash-once mode — lazily the md5-per-shingle
     # work ran twice over EVERY doc, candidates or not (guide §3.2/§1.2;
     # r12 profile: 32 s cpu in the verify stage). Checkpoint blocks are
-    # released when the next registered query builds. SVH_LSHV_ONCE=0
-    # keeps the old plan for A/B.
-    if os.environ.get("SVH_LSHV_ONCE", "1") == "1":
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release,
-        )
-
-        cand = defer_release(cand.localCheckpoint(eager=True))
-        verified = dedupfns.verify_candidate_jaccard(
-            docs, cand, "doc_id", "text", k=2, prehash_once=True
-        )
-    else:
-        verified = dedupfns.verify_candidate_jaccard(
-            docs, cand, "doc_id", "text", k=2
-        )
+    # released when the next registered query builds.
+    cand = defer_release(cand.localCheckpoint(eager=True))
+    verified = dedupfns.verify_candidate_jaccard(
+        docs, cand, "doc_id", "text", k=2, prehash_once=True
+    )
     return verified.filter(F.col("jaccard") >= 0.5).withColumn(
         "jaccard", F.round(F.col("jaccard"), 6)
     )

@@ -100,19 +100,6 @@ ORDER BY item, rnk
 )
 
 
-def _maybe_ckpt(df, env="SVH_COVIS_CKPT"):
-    """Eagerly materialize a multi-consumer session-items frame ONCE
-    (guide §1.2/§5): the sessionization (events scan + two windows +
-    distinct) otherwise re-executes for every consumer (pairs,
-    per-item counts, session count). Released via finalize_bounded when
-    the bounded result materializes. Env=0 keeps the lazy plan for A/B."""
-    import os
-
-    if os.environ.get(env, "1") == "0":
-        return df, False
-    return df.localCheckpoint(eager=True), True
-
-
 def _bounded_session_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -192,7 +179,11 @@ def q_item_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, session-capped against quadratic blowup."""
     ev_scan = load_table(spark, sf_dir, "events", ensure_parallelism=False)
     n_shuf = scaled_shuffle_partitions(ev_scan, rows_per_partition=250_000)
-    bounded, _ck = _maybe_ckpt(_bounded_session_items(spark, sf_dir))
+    # the sessionization (events scan + two windows + distinct) feeds
+    # three consumers (pairs, per-item counts, session count):
+    # materialize it once (guide §1.2/§5), released via finalize_bounded
+    # when the bounded result materializes
+    bounded = _bounded_session_items(spark, sf_dir).localCheckpoint(eager=True)
     pairs = _pairs(bounded, n_shuf)
     item_sessions = bounded.groupBy("item").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sess")
@@ -237,7 +228,7 @@ def q_item_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(50)
     )
-    return finalize_bounded(result, bounded) if _ck else result
+    return finalize_bounded(result, bounded)
 
 
 @register("item_cf_recommendations", _RECS_ORACLE)

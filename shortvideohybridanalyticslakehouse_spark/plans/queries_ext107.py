@@ -194,15 +194,16 @@ def q_covisitation_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.agg(((F.min(sec) + F.max(sec)) / 2).cast("bigint").alias("mid"))
     )
     ev_m = ev.crossJoin(anchor)
-    from shortvideohybridanalyticslakehouse_spark.plans.queries_ext106 import (
-        _maybe_ckpt,
-    )
 
     # train feeds BOTH the candidate miner and the session count, evale
     # BOTH probe sides — eagerly materialize each once (guide §1.2/§5),
     # released via finalize_bounded when the 1-row report materializes
-    train, _ck = _maybe_ckpt(_session_items(ev_m.filter(sec <= F.col("mid"))))
-    evale, _ = _maybe_ckpt(_session_items(ev_m.filter(sec > F.col("mid"))))
+    train = _session_items(ev_m.filter(sec <= F.col("mid"))).localCheckpoint(
+        eager=True
+    )
+    evale = _session_items(ev_m.filter(sec > F.col("mid"))).localCheckpoint(
+        eager=True
+    )
 
     recs = covis_candidates(train)
 
@@ -249,4 +250,4 @@ def q_covisitation_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST((sum(hit) * 1000000) DIV count(1) AS BIGINT)"
         ).alias("hit_rate_micro"),
     ).select("n_train_sessions", "n_eval_probes", "n_hits", "hit_rate_micro")
-    return finalize_bounded(result, train, evale) if _ck else result
+    return finalize_bounded(result, train, evale)

@@ -11,8 +11,6 @@ rule — with one cast-divide-round per output.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,7 +18,10 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext106 import (
     _RECS_ORACLE,
     q_item_cf_recommendations,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _REC_QUALITY_ORACLE = f"""
@@ -56,17 +57,12 @@ def q_rec_table_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     concentration of recommendation slots (popularity-bias tripwire:
     1e6/n_items = uniform, 1e6 = one item hogs every slot)."""
     recs = q_item_cf_recommendations(spark, sf_dir)
-    if os.environ.get("SVH_RECQ_CKPT", "1") != "0":
-        # r13: the whole item-CF pipeline feeds BOTH the slot-count
-        # aggregate and the broadcast stats aggregate — each re-ran it
-        # (profiled: its 1-task cosine stages appear twice per trial).
-        # Checkpoint the O(items x 3) rec table once (eager: the stats
-        # broadcast races a lazy one).
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        recs = _dr(recs.localCheckpoint(eager=True))
+    # r13: the whole item-CF pipeline feeds BOTH the slot-count
+    # aggregate and the broadcast stats aggregate — each re-ran it
+    # (profiled: its 1-task cosine stages appear twice per trial).
+    # Checkpoint the O(items x 3) rec table once (eager: the stats
+    # broadcast races a lazy one).
+    recs = defer_release(recs.localCheckpoint(eager=True))
     ev = load_table(spark, sf_dir, "events")
     catalog = F.broadcast(
         ev.select(

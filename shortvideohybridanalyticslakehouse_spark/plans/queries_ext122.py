@@ -18,21 +18,20 @@ Chain construction (deterministic, oracle-replayed):
     ratios; an unreachable channel's row falls to null with prob 1.
 
 Absorption probabilities come from K=60 value-iteration rounds folded
-IN-PLAN (the ext97 power-iteration contract: row-major 5x7 matrix list,
-round-12 index-order inner sums, DuckDB LIST accumulator). Removing a
+on the driver over the collected matrix (the ext97 power-iteration
+contract: row-major 5x7 matrix list, round-12 index-order inner sums,
+DuckDB LIST accumulator). Removing a
 channel is algebraically forcing its value to zero inside the fold —
 redirect-into-null needs no second matrix — so all five scenarios
 (full + 4 removals) share one transition array.
 
 Plan shape for 100 TB: O(events) work is the per-user sequence
 reduction (one shuffle on user_id, the window's partition key); the
-chain itself is a <=35-cell broadcast constant and the 5 value
-iterations are bounded folds. Journey count never touches the
+chain itself is a <=35-cell collected constant and the 5 value
+iterations are bounded driver folds. Journey count never touches the
 iteration cost."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -267,106 +266,38 @@ def q_markov_removal_attribution(
     nothing from the cluster. The matrix is collected once (the events
     scan/aggregation stays fully distributed) and folded on the driver
     with bit-identical arithmetic (functions/driverfold.py; guide §1.2).
-    SVH_MARKOV_DRIVER=0 keeps the in-plan expression for A/B.
     """
     pmat = transition_pmat(spark, sf_dir)
-    if os.environ.get("SVH_MARKOV_DRIVER", "1") == "1":
-        p = list(pmat.collect()[0][0])
-        if len(p) == _NF * _NT:
-            full = value_iteration_absorption(p, _NF, _NT, _K, 0)
-            out = []
-            for i, c in enumerate(CHANNELS):
-                removed = value_iteration_absorption(p, _NF, _NT, _K, i + 2)
-                re = (
-                    spark_round(1.0 - removed / full, 6)
-                    if full > 0
-                    else None
-                )
-                out.append(
-                    (c, spark_round(full, 6), spark_round(removed, 6), re)
-                )
-            # F.sum over doubles: first non-null value, then += in row order
-            re_tot = None
-            for r in out:
-                if r[3] is not None:
-                    re_tot = r[3] if re_tot is None else re_tot + r[3]
-            rows = [
-                (
-                    c,
-                    cf,
-                    cr,
-                    re,
-                    spark_round(re / re_tot, 6)
-                    if re_tot is not None and re_tot > 0 and re is not None
-                    else None,
-                )
-                for (c, cf, cr, re) in out
-            ]
-            return local_rows_df(
-                spark,
-                rows,
-                "channel string, conv_prob_full double, "
-                "conv_prob_removed double, removal_effect double, "
-                "attribution_share double",
-            )
-
-    def viter(rc):
-        """K rounds of v' = P_transient v + P_conv with v[rc] pinned 0."""
-
-        def inner(acc, s):
-            return F.aggregate(
-                F.sequence(F.lit(1), F.lit(_NF)),
-                F.element_at(F.col("p"), (s - F.lit(1)) * _NT + F.lit(6)),
-                lambda a, i: F.round(
-                    a
-                    + F.element_at(F.col("p"), (s - F.lit(1)) * _NT + i)
-                    * F.when(i == rc, F.lit(0.0)).otherwise(
-                        F.element_at(acc, i)
-                    ),
-                    12,
-                ),
-            )
-
-        v0 = F.array(*[F.lit(0.0) for _ in range(_NF)])
-        return F.element_at(
-            F.aggregate(
-                F.sequence(F.lit(1), F.lit(_K)),
-                v0,
-                lambda acc, _x: F.transform(
-                    F.sequence(F.lit(1), F.lit(_NF)), lambda s: inner(acc, s)
-                ),
-            ),
-            1,
+    p = list(pmat.collect()[0][0])
+    if len(p) != _NF * _NT:  # the NF x NT grid left join: one cell each
+        raise ValueError(f"transition matrix has {len(p)} cells")
+    full = value_iteration_absorption(p, _NF, _NT, _K, 0)
+    out = []
+    for i, c in enumerate(CHANNELS):
+        removed = value_iteration_absorption(p, _NF, _NT, _K, i + 2)
+        re = spark_round(1.0 - removed / full, 6) if full > 0 else None
+        out.append((c, spark_round(full, 6), spark_round(removed, 6), re))
+    # F.sum over doubles: first non-null value, then += in row order
+    re_tot = None
+    for r in out:
+        if r[3] is not None:
+            re_tot = r[3] if re_tot is None else re_tot + r[3]
+    rows = [
+        (
+            c,
+            cf,
+            cr,
+            re,
+            spark_round(re / re_tot, 6)
+            if re_tot is not None and re_tot > 0 and re is not None
+            else None,
         )
-
-    scen = local_rows_df(
+        for (c, cf, cr, re) in out
+    ]
+    return local_rows_df(
         spark,
-        [(c, i + 2) for i, c in enumerate(CHANNELS)],
-        "channel string, rc int",
-    )
-    vals = scen.crossJoin(F.broadcast(pmat)).select(
-        "channel",
-        viter(F.col("rc")).alias("p_removed"),
-        viter(F.lit(0)).alias("p_full"),
-    )
-    eff = vals.select(
-        "channel",
-        F.round("p_full", 6).alias("conv_prob_full"),
-        F.round("p_removed", 6).alias("conv_prob_removed"),
-        F.when(
-            F.col("p_full") > 0,
-            F.round(1.0 - F.col("p_removed") / F.col("p_full"), 6),
-        ).alias("removal_effect"),
-    )
-    # normalize over the bounded 4-row frame (broadcast total, no window)
-    tot = eff.agg(F.sum("removal_effect").alias("re_tot"))
-    return eff.crossJoin(F.broadcast(tot)).select(
-        "channel",
-        "conv_prob_full",
-        "conv_prob_removed",
-        "removal_effect",
-        F.when(
-            F.col("re_tot") > 0,
-            F.round(F.col("removal_effect") / F.col("re_tot"), 6),
-        ).alias("attribution_share"),
+        rows,
+        "channel string, conv_prob_full double, "
+        "conv_prob_removed double, removal_effect double, "
+        "attribution_share double",
     )

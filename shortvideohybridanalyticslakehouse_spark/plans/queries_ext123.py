@@ -131,16 +131,10 @@ def textrank_over(docs: DataFrame) -> DataFrame:
     # iteration's analyzed plan otherwise carries (and the FIRST
     # consumer re-executes) the full pairs pipeline; nodes now derives
     # from the materialized edge list instead of re-running it
-    # (guide §1.2/§5). SVH_TEXTRANK_CKPT=0 restores the lazy plan.
-    import os as _os
-
+    # (guide §1.2/§5).
     edges = und.withColumn(
         "wdeg", F.sum("w").over(_W.partitionBy("src"))
-    )
-    if _os.environ.get("SVH_TEXTRANK_CKPT", "1") == "1":
-        edges = edges.localCheckpoint(eager=True)
-    else:
-        edges = edges.persist()
+    ).localCheckpoint(eager=True)
     nodes = edges.select(F.col("src").alias("term")).distinct()
     rank = nodes.withColumn("rank", F.lit("1.0").cast("decimal(28,12)"))
     for _ in range(_ITERS):

@@ -14,14 +14,11 @@ Spark side shares transition_pmat() with the removal-effect query, so
 the two statistics cannot drift apart.
 
 Plan shape: identical to ext122 — the O(events) journey reduction,
-then a bounded fold over the broadcast 35-cell matrix."""
+then a bounded driver fold over the collected 35-cell matrix."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
     expected_steps_fold,
@@ -85,50 +82,11 @@ def q_markov_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: the fold over the collected 35-double matrix runs on the driver
     (bit-identical arithmetic, functions/driverfold.py) — the in-plan
     Catalyst expression cost seconds of codegen on a 1-row frame and is
-    O(1) work (guide §1.2). SVH_MARKOV_DRIVER=0 keeps the in-plan fold.
+    O(1) work (guide §1.2).
     """
-    pmat = transition_pmat(spark, sf_dir)
-    if os.environ.get("SVH_MARKOV_DRIVER", "1") == "1":
-        p = list(pmat.collect()[0][0])
-        if len(p) == _NF * _NT:
-            h = expected_steps_fold(p, _NF, _NT, _K)
-            rows = [
-                (n, spark_round(h[i], 6))
-                for i, n in enumerate(_STATE_NAMES)
-            ]
-            return local_rows_df(
-                spark, rows, "state string, expected_steps double"
-            )
-
-    def inner(acc, s):
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(_NF)),
-            F.lit(1.0),
-            lambda a, i: F.round(
-                a
-                + F.element_at(F.col("p"), (s - F.lit(1)) * _NT + i)
-                * F.element_at(acc, i),
-                12,
-            ),
-        )
-
-    h0 = F.array(*[F.lit(0.0) for _ in range(_NF)])
-    h = F.aggregate(
-        F.sequence(F.lit(1), F.lit(_K)),
-        h0,
-        lambda acc, _x: F.transform(
-            F.sequence(F.lit(1), F.lit(_NF)), lambda s: inner(acc, s)
-        ),
-    )
-    states = local_rows_df(
-        spark,
-        [(n, i + 1) for i, n in enumerate(_STATE_NAMES)],
-        "state string, sidx int",
-    )
-    folded = pmat.select(h.alias("h"))
-    return states.crossJoin(F.broadcast(folded)).select(
-        "state",
-        F.round(F.element_at(F.col("h"), F.col("sidx")), 6).alias(
-            "expected_steps"
-        ),
-    )
+    p = list(transition_pmat(spark, sf_dir).collect()[0][0])
+    if len(p) != _NF * _NT:  # the NF x NT grid left join: one cell each
+        raise ValueError(f"transition matrix has {len(p)} cells")
+    h = expected_steps_fold(p, _NF, _NT, _K)
+    rows = [(n, spark_round(h[i], 6)) for i, n in enumerate(_STATE_NAMES)]
+    return local_rows_df(spark, rows, "state string, expected_steps double")

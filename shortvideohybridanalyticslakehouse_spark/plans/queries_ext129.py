@@ -161,13 +161,13 @@ FROM maj GROUP BY 1
 
 
 def _band_keys_kernel(it):
-    """Arrow twin of the 16 `_plane_bit` Catalyst folds + explode: one
-    numpy int64 GEMM against the (16 x 64) plane matrix per batch
-    instead of 16 interpreted `aggregate(zip_with())` 64-element folds
-    per ROW (guide §4.2 — the map stage feeding the bucket shuffle was
-    the lane's hottest stage). Bit semantics replicated exactly from the
-    HOF path: NULL vector -> NULL dot -> `when(s >= 0).otherwise(0)`
-    = all bits 0; EMPTY vector -> fold init 0 -> s = 0 >= 0 = all bits
+    """The 16 hyperplane sign bits + band-key explode as one numpy int64
+    GEMM against the (16 x 64) plane matrix per batch, instead of 16
+    interpreted `aggregate(zip_with())` 64-element folds per ROW (guide
+    §4.2 — the map stage feeding the bucket shuffle was the lane's
+    hottest stage). Bit semantics are those of the per-row fold
+    `when(dot >= 0, 1).otherwise(0)`: NULL vector -> NULL dot -> all
+    bits 0; EMPTY vector -> fold init 0 -> s = 0 >= 0 = all bits
     1; short vector -> plane sliced to len(v) (== zero-padded dot);
     v longer than the 64-entry plane -> zip_with NULL-pads -> NULL dot
     -> bits 0. Emits the exploded (vec_id, label, v, bkey) rows the
@@ -280,43 +280,17 @@ def q_knn_label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _int_vec("embedding").alias("v"),
     )
 
-    def _plane_bit(p: int) -> F.Column:
-        lit = F.array(*[F.lit(h) for h in _KNN_PLANES[p]])
-        # slice the plane to the vector's length so short fixture
-        # vectors (<64 dims) project identically in both engines
-        s = F.aggregate(
-            F.zip_with(
-                F.col("v"),
-                F.slice(lit, F.lit(1), F.size("v")),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        return F.when(s >= 0, 1).otherwise(0)
-
-    if os.environ.get("SVH_KNN_KERNEL", "1") != "0":
-        # One numpy GEMM per Arrow batch for the 16 plane bits, then a
-        # WIDTH-PINNED repartition on the 32-value bucket key so the
-        # CPU-heavy per-bucket Python GEMM stage keeps its parallelism —
-        # AQE byte-coalesces the ~4 MB bucket shuffle down to 4 tasks
-        # otherwise (the ext141 starvation, guide §2.5). The repartition's
-        # hashpartitioning(bkey) satisfies applyInPandas's clustered
-        # distribution, so no second exchange is planned.
-        banded = base.mapInPandas(
-            _band_keys_kernel,
-            "vec_id long, label long, v array<long>, bkey int",
-        ).repartition(32, "bkey")
-    else:
-        bkeys = F.array(
-            *[
-                F.lit(b * 4) + _plane_bit(2 * b) * 2 + _plane_bit(2 * b + 1)
-                for b in range(_KNN_BANDS)
-            ]
-        )
-        banded = base.select(
-            "vec_id", "label", "v", F.explode(bkeys).alias("bkey")
-        )
+    # One numpy GEMM per Arrow batch for the 16 plane bits, then a
+    # WIDTH-PINNED repartition on the 32-value bucket key so the
+    # CPU-heavy per-bucket Python GEMM stage keeps its parallelism —
+    # AQE byte-coalesces the ~4 MB bucket shuffle down to 4 tasks
+    # otherwise (the ext141 starvation, guide §2.5). The repartition's
+    # hashpartitioning(bkey) satisfies applyInPandas's clustered
+    # distribution, so no second exchange is planned.
+    banded = base.mapInPandas(
+        _band_keys_kernel,
+        "vec_id long, label long, v array<long>, bkey int",
+    ).repartition(32, "bkey")
 
     # Per-bucket Arrow GEMM with LOCAL per-ida top-5 (the
     # lsh_bucket_topk_pairs strategy): a global-5-NN neighbor of ida is
@@ -435,7 +409,6 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dmin either way. (A numpy mapInPandas distance kernel was measured
     # here and REVERTED: per-round Arrow round-trips of the v column
     # cost more than the 64-element fold saves — B/A 1.45 at sf0.1.)
-    _KC_EAGER = os.environ.get("SVH_KC_EAGER", "0") != "0"
 
     def _sqd_to(vec: list) -> F.Column:
         lit = F.array(*[F.lit(int(c)) for c in vec])
@@ -451,7 +424,7 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = defer_release(
             base.filter(F.col("vec_id") != seed[0].vec_id)
             .select("vec_id", "v", _sqd_to(list(seed[0].v)).alias("dmin"))
-            .localCheckpoint(eager=_KC_EAGER)
+            .localCheckpoint(eager=False)
         )
         for rnd in range(2, _KC_K + 1):
             rows = (
@@ -472,7 +445,7 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("dmin"), _sqd_to(list(rows[0].v))
                         ).alias("dmin"),
                     )
-                    .localCheckpoint(eager=_KC_EAGER)
+                    .localCheckpoint(eager=False)
                 )
     result = local_rows_df(
         spark, out_rows, "round bigint, vec_id bigint, dist_sq bigint"

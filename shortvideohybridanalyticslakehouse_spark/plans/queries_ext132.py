@@ -25,12 +25,13 @@ a calendar gap-fill join, then an O(parts) bounded fold; ljung-box is a
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _N_PARTS = 8
@@ -116,17 +117,12 @@ def q_croston_intermittent_forecast(
         )
         .agg(F.sum("l_quantity").cast("bigint").alias("qty"))
     )
-    if os.environ.get("SVH_CROSTON_CKPT", "1") != "0":
-        # r13: the weekly demand aggregate feeds THREE consumers (the
-        # top-parts cut, the calendar bounds, and the grid left join) —
-        # each re-ran the lineitem x orders join+aggregate (the lane's
-        # three ~7 MB-shuffle stages). Checkpoint the O(part x week)
-        # frame once (eager: sibling branches race a lazy one).
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        weekly = _dr(weekly.localCheckpoint(eager=True))
+    # r13: the weekly demand aggregate feeds THREE consumers (the
+    # top-parts cut, the calendar bounds, and the grid left join) —
+    # each re-ran the lineitem x orders join+aggregate (the lane's
+    # three ~7 MB-shuffle stages). Checkpoint the O(part x week)
+    # frame once (eager: sibling branches race a lazy one).
+    weekly = defer_release(weekly.localCheckpoint(eager=True))
     top_parts = (
         weekly.groupBy("part")
         .agg(F.sum("qty").alias("tq"))

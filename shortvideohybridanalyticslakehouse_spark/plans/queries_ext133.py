@@ -354,11 +354,8 @@ def q_covis_rule_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events", ensure_parallelism=False),
         rows_per_partition=250_000,
     )
-    from shortvideohybridanalyticslakehouse_spark.plans.queries_ext106 import (
-        _maybe_ckpt,
-    )
-
-    bounded, _ck = _maybe_ckpt(_bounded_session_items(spark, sf_dir))
+    # multi-consumer sessionization: materialized once (ext106)
+    bounded = _bounded_session_items(spark, sf_dir).localCheckpoint(eager=True)
     pairs = _pairs(bounded, n_shuf)
     item_sessions = bounded.groupBy("item").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sess")
@@ -418,4 +415,4 @@ def q_covis_rule_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("confidence_micro"), F.asc("ante"), F.asc("cons"))
         .limit(_RULE_TOP)
     )
-    return finalize_bounded(result, bounded) if _ck else result
+    return finalize_bounded(result, bounded)

@@ -27,15 +27,10 @@ join — nothing grows with the corpus except the scans.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
-    register,
-)
+from shortvideohybridanalyticslakehouse_spark.plans.registry import register
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _PSI_BINS = 10
@@ -364,76 +359,28 @@ def q_ks_weekend_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    if os.environ.get("SVH_KS_SINGLEPASS", "0") == "1":
-        # DEFAULT OFF (r13): interleaved A/B measured 0.90, but the full
-        # 349-lane bench (the driver's context) measured this lane
-        # 1.0 s -> 5.4 s with the checkpoint, consistent across trials —
-        # a late-session eager-checkpoint cost the paired harness does
-        # not reproduce. The old two-scan plan stays the default; the
-        # toggle preserves the single-pass variant for a cluster rerun.
-        # Single events scan: the bounds broadcast and the bin counts
-        # both derive from ONE per-cents pre-aggregate (checkpointed,
-        # O(distinct cent values) rows — bounded by the price domain).
-        # Without this the broadcast-bounds branch re-scans and re-binned
-        # the whole events table a second time (guide §2.4: two
-        # operations keyed the same way share one pass). Binning per
-        # distinct cents value then summing the group counts is the
-        # identical integer arithmetic per row.
-        per = ev.groupBy("cents").agg(
-            F.sum(F.when(~F.col("weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("na_c"),
-            F.sum(F.when(F.col("weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("nb_c"),
+    bounds = F.broadcast(
+        ev.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
+    )
+    binned = ev.crossJoin(bounds).select(
+        "weekend",
+        F.least(
+            F.lit(_KS_BINS - 1),
+            (F.col("cents") - F.col("lo"))
+            * _KS_BINS
+            / (F.col("hi") - F.col("lo") + 1),
         )
-        per = defer_release(per.localCheckpoint())
-        bounds = F.broadcast(
-            per.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
-        )
-        counts = (
-            per.crossJoin(bounds)
-            .select(
-                F.least(
-                    F.lit(_KS_BINS - 1),
-                    (F.col("cents") - F.col("lo"))
-                    * _KS_BINS
-                    / (F.col("hi") - F.col("lo") + 1),
-                )
-                .cast("bigint")
-                .alias("bin"),
-                "na_c",
-                "nb_c",
-            )
-            .groupBy("bin")
-            .agg(
-                F.sum("na_c").cast("bigint").alias("ca"),
-                F.sum("nb_c").cast("bigint").alias("cb"),
-            )
-        )
-    else:
-        bounds = F.broadcast(
-            ev.agg(F.min("cents").alias("lo"), F.max("cents").alias("hi"))
-        )
-        binned = ev.crossJoin(bounds).select(
-            "weekend",
-            F.least(
-                F.lit(_KS_BINS - 1),
-                (F.col("cents") - F.col("lo"))
-                * _KS_BINS
-                / (F.col("hi") - F.col("lo") + 1),
-            )
-            .cast("bigint")
-            .alias("bin"),
-        )
-        counts = binned.groupBy("bin").agg(
-            F.sum(F.when(~F.col("weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("ca"),
-            F.sum(F.when(F.col("weekend"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("cb"),
-        )
+        .cast("bigint")
+        .alias("bin"),
+    )
+    counts = binned.groupBy("bin").agg(
+        F.sum(F.when(~F.col("weekend"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("ca"),
+        F.sum(F.when(F.col("weekend"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("cb"),
+    )
     grid = spark.range(_KS_BINS).select(F.col("id").alias("bin_g"))
     # bounded 100-bin grid range join (the allow-listed gini shape)
     cum = (

@@ -27,7 +27,6 @@ K x K aggregate over the closed event_type alphabet.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -191,7 +190,6 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.col("ts").cast("long") / 86400).cast("bigint").alias("day"),
     )
-    single_pass = os.environ.get("SVH_KM_SINGLEPASS", "1") != "0"
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "signup", F.col("day"))).alias(
             "d0"
@@ -205,17 +203,14 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the whole events table a second time (guide §2.4)
         F.max("day").alias("dmax_u"),
     )
-    if single_pass:
-        # lazy: the horizon broadcast's own (tiny) job materializes the
-        # checkpoint blocks; the main query then reads them — one events
-        # scan + one per-user aggregation total, no separate
-        # materialization job
-        per_user = defer_release(per_user.localCheckpoint(eager=False))
-        horizon = F.broadcast(
-            per_user.agg(F.max("dmax_u").alias("dmax"))
-        )
-    else:
-        horizon = F.broadcast(ev.agg(F.max("day").alias("dmax")))
+    # lazy: the horizon broadcast's own (tiny) job materializes the
+    # checkpoint blocks; the main query then reads them — one events
+    # scan + one per-user aggregation total, no separate
+    # materialization job
+    per_user = defer_release(per_user.localCheckpoint(eager=False))
+    horizon = F.broadcast(
+        per_user.agg(F.max("dmax_u").alias("dmax"))
+    )
     conv = (
         F.col("dp").isNotNull()
         & (F.col("dp") >= F.col("d0"))

@@ -17,10 +17,11 @@ a double that is exact below 2^53); distances are integer; sqrt is
 correctly-rounded IEEE; every derived double is floored to milli/micro
 before comparison or summation.
 
-Plan shapes at 100 TB: one posexplode shuffle to (label, pos) grain for
-centroids (K x dim rows), then an O(N) scan joining a K-row broadcast
-(closed label alphabet) — nothing quadratic in N; the label-pair matrix
-is K x K.
+Plan shapes at 100 TB: one Arrow-kernel pass of per-partition
+(label, dim) partial sums, aggregated to K x dim rows and collected as
+the centroids (closed label alphabet), then an O(N) kernel scan against
+the K centroids — nothing quadratic in N; the label-pair matrix is
+K x K on the driver.
 """
 
 from __future__ import annotations
@@ -28,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.queries_ext115 import (
-    _int_vec,
+from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
+    local_rows_df,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import register
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -103,63 +104,12 @@ GROUP BY 1, 2, 3
 )
 
 
-def _centroids(spark: SparkSession, sf_dir: str):
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.col("label").cast("bigint").alias("label"),
-        _int_vec("embedding").alias("v"),
-    )
-    expl = base.select(
-        "label", F.posexplode("v").alias("pos", "val")
-    )
-    cells = expl.groupBy("label", "pos").agg(
-        F.sum("val").cast("bigint").alias("s"),
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-    )
-    cent = (
-        cells.select(
-            "label",
-            "n",
-            "pos",
-            F.floor(F.col("s").cast("double") / F.col("n"))
-            .cast("bigint")
-            .alias("cv"),
-        )
-        .groupBy("label", "n")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda e: e.cv,
-            ).alias("c")
-        )
-    )
-    return base, cent
-
-
-def _sqd(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-# ---------------------------------------------------------------------
-# r13 Arrow path (guide §4.2): the posexplode centroid aggregation and
-# the per-member HOF distance scans run as exact-int64 numpy kernels.
+# Arrow kernels (r13, guide §4.2): the per-label centroid aggregation and
+# the per-member distance scans run as exact-int64 numpy kernels.
 # Quantization floor(x*1e6+0.5), integer squared distances and the
-# milli-floored sqrt replicate the Catalyst expressions' IEEE ops one
-# for one; integer partial sums are associative, so results are
-# bit-identical (toggle-equality tested; oracle-gated at all SFs).
-# SVH_CENTROID_ARROW=0 restores the posexplode/HOF plan.
-# ---------------------------------------------------------------------
-
-
-def _arrow_on() -> bool:
-    import os
-
-    return os.environ.get("SVH_CENTROID_ARROW", "1") == "1"
+# milli-floored sqrt are the oracle's ops one for one; integer partial
+# sums are associative, so results are bit-identical (oracle-gated at
+# all SFs; brute-force twins in tests/test_kernel_twins.py).
 
 
 def _emb_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,8 +173,8 @@ def _centroids_driver(
     for lab, cells in by_label.items():
         dim = len(cells)
         n = cells[0][1]
-        # floor over the DOUBLE quotient — the Catalyst expression casts
-        # both sides to double first, so replicate float(s)/float(n)
+        # floor over the DOUBLE quotient — the oracle casts s to double
+        # first, so replicate float(s)/float(n)
         cents[lab] = (
             n,
             [int(math.floor(float(cells[d][0]) / float(cells[d][1]))) for d in range(dim)],
@@ -238,141 +188,72 @@ def q_label_centroid_db_index(
 ) -> DataFrame:
     """Per-label Davies-Bouldin components: scatter (milli) and the
     worst (S_i+S_j)/M_ij separation ratio (micro) vs any other label."""
-    if _arrow_on():
-        import math
+    import math
 
-        raw, cents = _centroids_driver(spark, sf_dir)
-        from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
-            local_rows_df,
-        )
+    raw, cents = _centroids_driver(spark, sf_dir)
+    schema = (
+        "label bigint, n_vecs bigint, s_milli bigint, "
+        "worst_ratio_micro bigint"
+    )
+    if not cents:
+        return local_rows_df(spark, [], schema)
+    cvecs = {lab: c for lab, (_, c) in cents.items()}
 
-        schema = (
-            "label bigint, n_vecs bigint, s_milli bigint, "
-            "worst_ratio_micro bigint"
-        )
-        if not cents:
-            return local_rows_df(spark, [], schema)
-        cvecs = {lab: c for lab, (_, c) in cents.items()}
+    def scatter_kernel(it):
+        import numpy as np  # noqa: PLC0415
+        import pandas as pd  # noqa: PLC0415
 
-        def scatter_kernel(it):
-            import numpy as np  # noqa: PLC0415
-            import pandas as pd  # noqa: PLC0415
+        for pdf in it:
+            if not len(pdf):
+                continue
+            V = _quant_np(pdf["e"])
+            labels = pdf["label"].to_numpy()
+            rows = {"label": [], "cnt": [], "dm": []}
+            for lab in np.unique(labels):
+                c = np.asarray(cvecs[int(lab)], dtype=np.int64)
+                diff = V[labels == lab] - c
+                d2 = np.einsum("ij,ij->i", diff, diff)
+                dm = np.floor(
+                    np.sqrt(d2.astype(np.float64)) * 1000.0
+                ).astype(np.int64)
+                rows["label"].append(int(lab))
+                rows["cnt"].append(int((labels == lab).sum()))
+                rows["dm"].append(int(dm.sum()))
+            yield pd.DataFrame(rows).astype("int64")
 
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                V = _quant_np(pdf["e"])
-                labels = pdf["label"].to_numpy()
-                rows = {"label": [], "cnt": [], "dm": []}
-                for lab in np.unique(labels):
-                    c = np.asarray(cvecs[int(lab)], dtype=np.int64)
-                    diff = V[labels == lab] - c
-                    d2 = np.einsum("ij,ij->i", diff, diff)
-                    dm = np.floor(
-                        np.sqrt(d2.astype(np.float64)) * 1000.0
-                    ).astype(np.int64)
-                    rows["label"].append(int(lab))
-                    rows["cnt"].append(int((labels == lab).sum()))
-                    rows["dm"].append(int(dm.sum()))
-                yield pd.DataFrame(rows).astype("int64")
-
-        sc = (
-            raw.mapInPandas(scatter_kernel, "label long, cnt long, dm long")
-            .groupBy("label")
-            .agg(F.sum("cnt").alias("n_vecs"), F.sum("dm").alias("dm"))
-            .collect()
-        )
-        s_milli = {
-            int(r.label): (
-                int(r.n_vecs),
-                int(math.floor(float(r.dm) / float(r.n_vecs))),
-            )
-            for r in sc
-        }
-        rows = []
-        for lab, (n_vecs, si) in s_milli.items():
-            worst = None
-            for other, (_, sj) in s_milli.items():
-                if other == lab:
-                    continue
-                diff2 = sum(
-                    (x - y) * (x - y)
-                    for x, y in zip(cvecs[lab], cvecs[other])
-                )
-                m = int(math.floor(math.sqrt(float(diff2)) * 1000.0))
-                r = (
-                    9223372036854775807
-                    if m == 0
-                    else (si + sj) * 1_000_000 // m
-                )
-                worst = r if worst is None or r > worst else worst
-            if worst is not None:
-                rows.append((lab, n_vecs, si, worst))
-        return local_rows_df(spark, rows, schema)
-
-    base, cent = _centroids(spark, sf_dir)
-    # K-row centroid frame over the closed label alphabet: broadcast
-    member_d = F.floor(
-        F.sqrt(_sqd(F.col("v"), F.col("c")).cast("double")) * 1000.0
-    ).cast("bigint")
-    scatter = (
-        base.join(F.broadcast(cent.select("label", "c")), "label")
-        .select("label", member_d.alias("d_milli"))
+    sc = (
+        raw.mapInPandas(scatter_kernel, "label long, cnt long, dm long")
         .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-            F.sum("d_milli").cast("bigint").alias("dist_sum_milli"),
+        .agg(F.sum("cnt").alias("n_vecs"), F.sum("dm").alias("dm"))
+        .collect()
+    )
+    s_milli = {
+        int(r.label): (
+            int(r.n_vecs),
+            int(math.floor(float(r.dm) / float(r.n_vecs))),
         )
-        .select(
-            "label",
-            "n_vecs",
-            F.floor(
-                F.col("dist_sum_milli").cast("double") / F.col("n_vecs")
+        for r in sc
+    }
+    rows = []
+    for lab, (n_vecs, si) in s_milli.items():
+        worst = None
+        for other, (_, sj) in s_milli.items():
+            if other == lab:
+                continue
+            diff2 = sum(
+                (x - y) * (x - y)
+                for x, y in zip(cvecs[lab], cvecs[other])
             )
-            .cast("bigint")
-            .alias("s_milli"),
-        )
-    )
-    si = scatter.select(
-        F.col("label"), F.col("n_vecs"), F.col("s_milli")
-    ).join(cent.select("label", F.col("c").alias("ci")), "label")
-    sj = scatter.select(
-        F.col("label").alias("other_label"),
-        F.col("s_milli").alias("sj_milli"),
-    ).join(
-        cent.select(
-            F.col("label").alias("other_label"), F.col("c").alias("cj")
-        ),
-        "other_label",
-    )
-    m_milli = F.floor(
-        F.sqrt(_sqd(F.col("ci"), F.col("cj")).cast("double")) * 1000.0
-    ).cast("bigint")
-    # K x K label-pair matrix over the closed alphabet; pure integer
-    # DIV (all operands positive, so Spark's truncation == DuckDB's
-    # floor //) — no double round-trip near 2^53. Two labels with
-    # IDENTICAL floor-averaged centroids give m_milli = 0: Spark DIV
-    # would silently yield NULL while DuckDB errors (ADVICE r10), so
-    # both engines emit an explicit int64-max sentinel ("infinitely
-    # bad separation") which max() then propagates deterministically.
-    ratios = (
-        si.join(F.broadcast(sj), F.col("label") != F.col("other_label"))
-        .withColumn("m_milli", m_milli)
-        .select(
-            "label",
-            "n_vecs",
-            "s_milli",
-            F.expr(
-                "CASE WHEN m_milli = 0"
-                " THEN CAST(9223372036854775807 AS BIGINT)"
-                " ELSE CAST((s_milli + sj_milli) * CAST(1000000 AS BIGINT)"
-                " DIV m_milli AS BIGINT) END"
-            ).alias("r_micro"),
-        )
-    )
-    return ratios.groupBy("label", "n_vecs", "s_milli").agg(
-        F.max("r_micro").cast("bigint").alias("worst_ratio_micro")
-    )
+            m = int(math.floor(math.sqrt(float(diff2)) * 1000.0))
+            r = (
+                9223372036854775807
+                if m == 0
+                else (si + sj) * 1_000_000 // m
+            )
+            worst = r if worst is None or r > worst else worst
+        if worst is not None:
+            rows.append((lab, n_vecs, si, worst))
+    return local_rows_df(spark, rows, schema)
 
 
 _CONFUSION_ORACLE = (
@@ -403,71 +284,52 @@ def q_centroid_label_confusion(
     """Confusion matrix of own label vs nearest label centroid (integer
     squared distance, label tie-break) — the classifier-free label
     separability audit."""
-    from pyspark.sql import Window
+    raw, cents = _centroids_driver(spark, sf_dir)
+    if not cents:
+        return local_rows_df(
+            spark, [], "label bigint, nearest_label bigint, n_vecs bigint"
+        )
+    cand = sorted(cents)  # ascending label = argmin tie-break
+    cmat = [cents[lab][1] for lab in cand]
 
-    if _arrow_on():
-        raw, cents = _centroids_driver(spark, sf_dir)
-        if cents:
-            cand = sorted(cents)  # ascending label = argmin tie-break
-            cmat = [cents[lab][1] for lab in cand]
+    def confusion_kernel(it):
+        import numpy as np  # noqa: PLC0415
+        import pandas as pd  # noqa: PLC0415
 
-            def confusion_kernel(it):
-                import numpy as np  # noqa: PLC0415
-                import pandas as pd  # noqa: PLC0415
-
-                C = np.array(cmat, dtype=np.int64)
-                cids = np.array(cand, dtype=np.int64)
-                for pdf in it:
-                    if not len(pdf):
-                        continue
-                    V = _quant_np(pdf["e"])
-                    labels = pdf["label"].to_numpy()
-                    best_d = None
-                    best_c = None
-                    for j in range(len(C)):
-                        diff = V - C[j]
-                        d2 = np.einsum("ij,ij->i", diff, diff)
-                        if best_d is None:
-                            best_d = d2
-                            best_c = np.full(len(V), cids[j], np.int64)
-                        else:
-                            upd = d2 < best_d
-                            best_d = np.where(upd, d2, best_d)
-                            best_c = np.where(upd, cids[j], best_c)
-                    out = (
-                        pd.DataFrame(
-                            {"label": labels, "nearest_label": best_c}
-                        )
-                        .groupby(["label", "nearest_label"], as_index=False)
-                        .size()
-                        .rename(columns={"size": "cnt"})
-                    )
-                    yield out.astype("int64")
-
-            return (
-                raw.mapInPandas(
-                    confusion_kernel,
-                    "label long, nearest_label long, cnt long",
+        C = np.array(cmat, dtype=np.int64)
+        cids = np.array(cand, dtype=np.int64)
+        for pdf in it:
+            if not len(pdf):
+                continue
+            V = _quant_np(pdf["e"])
+            labels = pdf["label"].to_numpy()
+            best_d = None
+            best_c = None
+            for j in range(len(C)):
+                diff = V - C[j]
+                d2 = np.einsum("ij,ij->i", diff, diff)
+                if best_d is None:
+                    best_d = d2
+                    best_c = np.full(len(V), cids[j], np.int64)
+                else:
+                    upd = d2 < best_d
+                    best_d = np.where(upd, d2, best_d)
+                    best_c = np.where(upd, cids[j], best_c)
+            out = (
+                pd.DataFrame(
+                    {"label": labels, "nearest_label": best_c}
                 )
-                .groupBy("label", "nearest_label")
-                .agg(F.sum("cnt").cast("bigint").alias("n_vecs"))
+                .groupby(["label", "nearest_label"], as_index=False)
+                .size()
+                .rename(columns={"size": "cnt"})
             )
+            yield out.astype("int64")
 
-    base, cent = _centroids(spark, sf_dir)
-    assign = base.crossJoin(
-        F.broadcast(cent.select(F.col("label").alias("cand"), "c"))
-    ).select(
-        "vec_id",
-        "label",
-        "cand",
-        _sqd(F.col("v"), F.col("c")).alias("d2"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("d2").asc(), F.col("cand").asc()
-    )
     return (
-        assign.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("label", F.col("cand").alias("nearest_label"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
+        raw.mapInPandas(
+            confusion_kernel,
+            "label long, nearest_label long, cnt long",
+        )
+        .groupBy("label", "nearest_label")
+        .agg(F.sum("cnt").cast("bigint").alias("n_vecs"))
     )

@@ -16,8 +16,6 @@ documents its two-phase prefix-sum upgrade path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,7 +24,10 @@ from shortvideohybridanalyticslakehouse_spark.functions.dedupfns import hash60
 from shortvideohybridanalyticslakehouse_spark.plans.queries_ext import (  # noqa: F401
     _duck_shingles,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _TOKS = r"regexp_split_to_array(lower(trim(text)), '\s+')"
@@ -144,32 +145,21 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup happens BEFORE the join so the probe side is distinct pairs.
     """
     docs = load_table(spark, sf_dir, "documents")
-    if os.environ.get("SVH_CONTAM_CKPT", "1") != "0":
-        # r13: (a) buckets 80-89 (the val split) are never consumed —
-        # filter them out at DOC level so 10% of the corpus skips the
-        # 8-gram explode entirely; (b) the exploded gram relation feeds
-        # both the train vocabulary and the test pairs — checkpoint it
-        # once instead of shingling the corpus twice (guide §5).
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        bucket = hash60(F.col("doc_id").cast("string")) % 100
-        pruned = docs.withColumn("bucket", bucket).filter(
-            (F.col("bucket") < 80) | (F.col("bucket") >= 90)
-        )
-        ex = pruned.select(
-            "doc_id",
-            "bucket",
-            F.explode(dedupfns.shingles(F.col("text"), 8)).alias("gram"),
-        ).select("doc_id", "bucket", hash60(F.col("gram")).alias("gh"))
-        ex = _dr(ex.localCheckpoint(eager=True))
-    else:
-        ex = docs.select(
-            "doc_id",
-            (hash60(F.col("doc_id").cast("string")) % 100).alias("bucket"),
-            F.explode(dedupfns.shingles(F.col("text"), 8)).alias("gram"),
-        ).select("doc_id", "bucket", hash60(F.col("gram")).alias("gh"))
+    # r13: (a) buckets 80-89 (the val split) are never consumed —
+    # filter them out at DOC level so 10% of the corpus skips the
+    # 8-gram explode entirely; (b) the exploded gram relation feeds
+    # both the train vocabulary and the test pairs — checkpoint it
+    # once instead of shingling the corpus twice (guide §5).
+    bucket = hash60(F.col("doc_id").cast("string")) % 100
+    pruned = docs.withColumn("bucket", bucket).filter(
+        (F.col("bucket") < 80) | (F.col("bucket") >= 90)
+    )
+    ex = pruned.select(
+        "doc_id",
+        "bucket",
+        F.explode(dedupfns.shingles(F.col("text"), 8)).alias("gram"),
+    ).select("doc_id", "bucket", hash60(F.col("gram")).alias("gh"))
+    ex = defer_release(ex.localCheckpoint(eager=True))
     train_g = ex.filter(F.col("bucket") < 80).select("gh").distinct()
     test_pairs = ex.filter(F.col("bucket") >= 90).select("doc_id", "gh").distinct()
     n_test = test_pairs.agg(

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions.suffixes import (
-    partition_covered_positions,
     partition_covered_positions_capped,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import register
@@ -188,32 +187,19 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sorting within partitions makes anchor groups contiguous so the
     # capped kernel flushes whole-group chunks under SVH_SA_MAX_TOKENS
     # buffered tokens (output-identical; tests/test_ext141_sa_cap.py
-    # proves equality on a planted-skew fixture). SVH_SA_CAP=0 keeps
-    # the one-concat kernel.
-    if os.environ.get("SVH_SA_CAP", "1") == "1":
-        max_tok = int(os.environ.get("SVH_SA_MAX_TOKENS", "4000000"))
-        cov = (
-            joined.select("ahash", "doc_id", "start", "snip")
-            .sortWithinPartitions("ahash")
-            .mapInPandas(
-                lambda it: partition_covered_positions_capped(
-                    it, _L, max_tok
-                ),
-                "doc_id long, pos long",
-            )
-            .distinct()
+    # proves equality on a planted-skew fixture).
+    max_tok = int(os.environ.get("SVH_SA_MAX_TOKENS", "4000000"))
+    cov = (
+        joined.select("ahash", "doc_id", "start", "snip")
+        .sortWithinPartitions("ahash")
+        .mapInPandas(
+            lambda it: partition_covered_positions_capped(
+                it, _L, max_tok
+            ),
+            "doc_id long, pos long",
         )
-    else:
-        cov = (
-            # only the columns the kernel reads cross the Python
-            # boundary (guide §4.1); ahash has done its co-location job
-            joined.select("doc_id", "start", "snip")
-            .mapInPandas(
-                lambda it: partition_covered_positions(it, _L),
-                "doc_id long, pos long",
-            )
-            .distinct()
-        )
+        .distinct()
+    )
     w = Window.partitionBy("doc_id").orderBy("pos")
     runs = (
         cov.withColumn("grp", F.col("pos") - F.row_number().over(w))

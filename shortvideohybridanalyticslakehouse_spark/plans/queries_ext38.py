@@ -12,8 +12,6 @@ CTEs. Three iterations, damping 0.85, degree-normalized push.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,15 +135,14 @@ def q_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deg", F.count(F.lit(1)).over(_W.partitionBy("src"))
     ).persist()
     nodes = docs.select("doc_id").distinct()
-    if os.environ.get("SVH_PR_NODES_CKPT", "1") != "0":
-        # the node list is consumed by every iteration's dangling-node
-        # left join (and the seed rank): lazily checkpoint it so the
-        # docs scan+distinct runs once, materialized inside the first
-        # action instead of as an extra serial job (the measured-win
-        # posture from the edges persist above); released together with
-        # the edge relation in finalize_bounded below (the cache-hygiene
-        # gate asserts this builder leaves zero persisted RDDs behind)
-        nodes = nodes.localCheckpoint(eager=False)
+    # the node list is consumed by every iteration's dangling-node
+    # left join (and the seed rank): lazily checkpoint it so the
+    # docs scan+distinct runs once, materialized inside the first
+    # action instead of as an extra serial job (the measured-win
+    # posture from the edges persist above); released together with
+    # the edge relation in finalize_bounded below (the cache-hygiene
+    # gate asserts this builder leaves zero persisted RDDs behind)
+    nodes = nodes.localCheckpoint(eager=False)
     rank = nodes.withColumn("rank", F.lit("1.0").cast("decimal(28,12)"))
     for _ in range(_ITERS):
         contrib = (
@@ -271,11 +268,7 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("est_jaccard") * 16 >= 4)
         .select("doc_a", "doc_b")
     )
-    # SVH_TRI_CKPT=0 restores the lazy (recompute-per-branch) plan for
-    # A/B measurement on a noisy host; default is the checkpointed path.
-    _ckpt = os.environ.get("SVH_TRI_CKPT", "1") != "0"
-    if _ckpt:
-        pairs = pairs.localCheckpoint()
+    pairs = pairs.localCheckpoint()
     und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
@@ -289,8 +282,7 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("u", "v")
     )
-    if _ckpt:
-        oriented = oriented.localCheckpoint()
+    oriented = oriented.localCheckpoint()
     e1 = oriented.alias("e1")
     e2 = oriented.select(
         F.col("u").alias("mid"), F.col("v").alias("w")
@@ -328,6 +320,4 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one-row result: materialize it, then release the checkpointed
     # candidate/edge blocks immediately
-    if _ckpt:
-        return finalize_bounded(result, pairs, oriented)
-    return result
+    return finalize_bounded(result, pairs, oriented)

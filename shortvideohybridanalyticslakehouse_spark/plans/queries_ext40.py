@@ -15,8 +15,6 @@ ONE query and gets the funnel a curation pipeline actually executes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -176,11 +174,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage-2 report branch (profiled: the 887 KB quality stage appears
     # 2x per trial). Checkpointing s2 runs it once; s3's window and the
     # report branch both read the blocks.
-    if (
-        os.environ.get("SVH_FUNNEL_CKPT", "1") != "0"
-        and os.environ.get("SVH_FUNNEL_CKPT_S2", "1") != "0"
-    ):
-        s2 = s2.localCheckpoint()
+    s2 = s2.localCheckpoint()
 
     # r12 (guide §1.2/§2.4; supersedes the r5 lazy-vs-persist note): the
     # six stage aggregates + the near-dup/contamination probes re-run the
@@ -189,16 +183,13 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full lineage still planned per branch). EAGER localCheckpoint of s3
     # (post exact-dedup) and s4 (post near-dedup) runs each funnel stage
     # exactly once and truncates every downstream branch's lineage.
-    # SVH_FUNNEL_CKPT=0 restores the lazy plan for paired A/B.
-    _ck = os.environ.get("SVH_FUNNEL_CKPT", "1") != "0"
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.col("doc_id").asc())
     s3 = (
         s2.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if _ck:
-        s3 = s3.localCheckpoint()
+    s3 = s3.localCheckpoint()
 
     with_sig = dedupfns.minhash_signatures_df(
         s3, "doc_id", "text", k=2, num_hashes=16, out_col="minhash"
@@ -212,8 +203,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     s4 = s3.join(near_drop, "doc_id", "left_anti")
-    if _ck:
-        s4 = s4.localCheckpoint()
+    s4 = s4.localCheckpoint()
 
     holdout = base.filter(hash60(F.col("doc_id").cast("string")) % 10 == 9)
     hold_g = (
@@ -245,8 +235,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(stage(s5, 5, "decontaminated"))
         .orderBy("stage_no")
     )
-    if _ck:
-        # 6-row report: materialize, then release the checkpointed stage
-        # frames (cache lifetimes stay query-scoped — the hygiene gate)
-        return finalize_bounded(report, s2, s3, s4)
-    return report
+    # 6-row report: materialize, then release the checkpointed stage
+    # frames (cache lifetimes stay query-scoped — the hygiene gate)
+    return finalize_bounded(report, s2, s3, s4)

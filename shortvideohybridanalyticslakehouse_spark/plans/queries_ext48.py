@@ -23,13 +23,14 @@ DROP when clipped AND dark; REVIEW on any single flag; else KEEP.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import multimodal
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _CROSS_MODAL_ORACLE = """
@@ -273,17 +274,12 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = with_starts.select(
         "doc_id", F.explode(F.transform(ks, chunk_md5)).alias("chunk_md5")
     )
-    if os.environ.get("SVH_CDC_CKPT", "1") != "0":
-        # r13: the chunk relation feeds BOTH the frequency aggregate and
-        # the join probe side — each re-ran the CDC boundary HOFs + md5
-        # chunking over the corpus (the lane's two heaviest stages,
-        # ~17 s + ~11 s CPU at sf0.1). Checkpoint the O(chunks) md5
-        # relation once (eager: sibling consumers race a lazy one).
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        chunks = _dr(chunks.localCheckpoint(eager=True))
+    # r13: the chunk relation feeds BOTH the frequency aggregate and
+    # the join probe side — each re-ran the CDC boundary HOFs + md5
+    # chunking over the corpus (the lane's two heaviest stages,
+    # ~17 s + ~11 s CPU at sf0.1). Checkpoint the O(chunks) md5
+    # relation once (eager: sibling consumers race a lazy one).
+    chunks = defer_release(chunks.localCheckpoint(eager=True))
     freq = chunks.groupBy("chunk_md5").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )

@@ -27,8 +27,6 @@ part of the brief's text-analysis/training-data-pipeline mandate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -111,8 +109,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4x per run (guide §5: reuse > recompute). Checkpoint it once;
     # storage is the aggregated postings list (far smaller than the
     # corpus), released when the next lane builds.
-    if os.environ.get("SVH_BM25_TF_CKPT", "1") != "0":
-        tf = defer_release(tf.localCheckpoint())
+    tf = defer_release(tf.localCheckpoint())
     # doc length re-aggregates the (much smaller) TF frame instead of a
     # second tokenize+explode pass over the corpus
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dlen"))

@@ -23,8 +23,6 @@ of O(distinct bigrams).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,15 +73,14 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
     )
-    if os.environ.get("SVH_PHRASE_CKPT", "1") != "0":
-        # the token-array frame feeds the n-gram count branch AND every
-        # broadcast-pruned postings side (2 for the bigram lane, 3 for
-        # the trigram chain) — without materialization each consumer
-        # re-runs the regex split+lower+trim over the whole corpus in
-        # its own map stage (no exchange between them for ReuseExchange
-        # to share; profiled 3x per trial). Eager: sibling stages race
-        # a lazy checkpoint (the winnowing lesson).
-        toks = defer_release(toks.localCheckpoint(eager=True))
+    # the token-array frame feeds the n-gram count branch AND every
+    # broadcast-pruned postings side (2 for the bigram lane, 3 for
+    # the trigram chain) — without materialization each consumer
+    # re-runs the regex split+lower+trim over the whole corpus in
+    # its own map stage (no exchange between them for ReuseExchange
+    # to share; profiled 3x per trial). Eager: sibling stages race
+    # a lazy checkpoint (the winnowing lesson).
+    toks = defer_release(toks.localCheckpoint(eager=True))
     # workload derivation: adjacent-bigram counts, map-side pair
     # construction with array HOFs (no per-token shuffle before the agg)
     pairs = F.expr(
@@ -202,15 +199,8 @@ def q_phrase3_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
     )
-    if os.environ.get("SVH_PHRASE_CKPT", "1") != "0":
-        # the token-array frame feeds the n-gram count branch AND every
-        # broadcast-pruned postings side (2 for the bigram lane, 3 for
-        # the trigram chain) — without materialization each consumer
-        # re-runs the regex split+lower+trim over the whole corpus in
-        # its own map stage (no exchange between them for ReuseExchange
-        # to share; profiled 3x per trial). Eager: sibling stages race
-        # a lazy checkpoint (the winnowing lesson).
-        toks = defer_release(toks.localCheckpoint(eager=True))
+    # multi-consumer token arrays: materialized once, as above
+    toks = defer_release(toks.localCheckpoint(eager=True))
     tris = F.expr(
         "transform(slice(toks, 1, greatest(size(toks) - 2, 0)),"
         " (x, i) -> struct(x AS t0, toks[i + 1] AS t1, toks[i + 2] AS t2))"

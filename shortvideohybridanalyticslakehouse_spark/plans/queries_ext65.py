@@ -22,8 +22,6 @@ runs this" families.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -114,10 +112,8 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join sides) — lazily each re-ran the distinct + size-filter
     # join (guide §1.2/§5). Materialize the skinny (orderkey, partkey)
     # frame once; released via finalize_bounded after the top-20 row set
-    # materializes. SVH_BASKET_CKPT=0 keeps the lazy plan for A/B.
-    _ck = os.environ.get("SVH_BASKET_CKPT", "1") == "1"
-    if _ck:
-        baskets = baskets.localCheckpoint(eager=True)
+    # materializes.
+    baskets = baskets.localCheckpoint(eager=True)
     n_orders = baskets.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n")
     )
@@ -174,7 +170,7 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.orderBy(
         F.col("n_ab").desc(), F.col("part_a").asc(), F.col("part_b").asc()
     ).limit(20)
-    return finalize_bounded(top, baskets) if _ck else top
+    return finalize_bounded(top, baskets)
 
 
 _ATTR_ORACLE = """

@@ -22,8 +22,6 @@ implementations of these queries fall over at scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -101,87 +99,55 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already-reduced side, safe to persist at any scale.
     per_user = defer_release(per_user.localCheckpoint(eager=True))
 
-    if os.environ.get("SVH_RFM_FUSED", "1") == "1":
-        # r13 (guide §1.2): ONE partitioned rank pass over the 3-way
-        # union instead of three independent global passes — same exact
-        # row numbers (row_number partitioned by dim over (_key, user_id)
-        # == each dim's global rank; approx cuts only balance buckets),
-        # one approx_percentile action + one ranked join instead of
-        # three of each (the r12 profile shows this lane as 82
-        # plan/action-overhead stages totalling 4 s of executor time).
-        dims = (
+    # r13 (guide §1.2): ONE partitioned rank pass over the 3-way
+    # union instead of three independent global passes — same exact
+    # row numbers (row_number partitioned by dim over (_key, user_id)
+    # == each dim's global rank; approx cuts only balance buckets),
+    # one approx_percentile action + one ranked join instead of
+    # three of each (the r12 profile shows this lane as 82
+    # plan/action-overhead stages totalling 4 s of executor time).
+    dims = (
+        per_user.select(
+            "user_id",
+            F.col("recency_days").alias("_key"),
+            F.lit("r").alias("_dim"),
+        )
+        .unionByName(
             per_user.select(
                 "user_id",
-                F.col("recency_days").alias("_key"),
-                F.lit("r").alias("_dim"),
-            )
-            .unionByName(
-                per_user.select(
-                    "user_id",
-                    (-F.col("frequency")).alias("_key"),
-                    F.lit("f").alias("_dim"),
-                )
-            )
-            .unionByName(
-                per_user.select(
-                    "user_id",
-                    (-F.col("monetary_cents")).alias("_key"),
-                    F.lit("m").alias("_dim"),
-                )
+                (-F.col("frequency")).alias("_key"),
+                F.lit("f").alias("_dim"),
             )
         )
-        ranked = with_distributed_row_number(
-            dims,
-            ["_dim"],
-            ["_key", "user_id"],
-            n_buckets=16,
-            rn_col="_rn",
-            n_col="_n",
-        )
-        tiles = ranked.select(
-            "user_id",
-            "_dim",
-            ntile_from_rank(F.col("_rn"), F.col("_n"), 5).alias("_tile"),
-        )
-        per_dim = tiles.groupBy("user_id").agg(
-            F.max(F.when(F.col("_dim") == "r", F.col("_tile"))).alias("r"),
-            F.max(F.when(F.col("_dim") == "f", F.col("_tile"))).alias("f"),
-            F.max(F.when(F.col("_dim") == "m", F.col("_tile"))).alias("m"),
-        )
-        s = per_user.select("user_id", "monetary_cents").join(
-            per_dim, "user_id"
-        )
-    else:
-
-        def quintile(order_col: str, asc: bool, out: str) -> DataFrame:
-            # with_distributed_row_number sorts ASCENDING on its keys;
-            # for a descending metric rank the NEGATED value (ties still
-            # by user_id)
-            d = per_user.select(
+        .unionByName(
+            per_user.select(
                 "user_id",
-                (F.col(order_col) if asc else -F.col(order_col)).alias(
-                    "_key"
-                ),
+                (-F.col("monetary_cents")).alias("_key"),
+                F.lit("m").alias("_dim"),
             )
-            ranked = with_distributed_row_number(
-                d,
-                [],
-                ["_key", "user_id"],
-                n_buckets=16,
-                rn_col="_rn",
-                n_col="_n",
-            )
-            return ranked.select(
-                "user_id",
-                ntile_from_rank(F.col("_rn"), F.col("_n"), 5).alias(out),
-            )
-
-        s = (
-            per_user.select("user_id", "monetary_cents")
-            .join(quintile("recency_days", True, "r"), "user_id")
-            .join(quintile("frequency", False, "f"), "user_id")
-            .join(quintile("monetary_cents", False, "m"), "user_id")
         )
+    )
+    ranked = with_distributed_row_number(
+        dims,
+        ["_dim"],
+        ["_key", "user_id"],
+        n_buckets=16,
+        rn_col="_rn",
+        n_col="_n",
+    )
+    tiles = ranked.select(
+        "user_id",
+        "_dim",
+        ntile_from_rank(F.col("_rn"), F.col("_n"), 5).alias("_tile"),
+    )
+    per_dim = tiles.groupBy("user_id").agg(
+        F.max(F.when(F.col("_dim") == "r", F.col("_tile"))).alias("r"),
+        F.max(F.when(F.col("_dim") == "f", F.col("_tile"))).alias("f"),
+        F.max(F.when(F.col("_dim") == "m", F.col("_tile"))).alias("m"),
+    )
+    s = per_user.select("user_id", "monetary_cents").join(
+        per_dim, "user_id"
+    )
     return s.groupBy("r", "f", "m").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
         F.sum("monetary_cents").cast("bigint").alias("segment_cents"),

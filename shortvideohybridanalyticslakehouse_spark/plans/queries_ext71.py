@@ -21,8 +21,6 @@ broadcast query vector); fusion is O(k) regardless of corpus size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,8 +114,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same single-execution posture as q_bm25_topk: TF feeds the qterms
     # branch, the consts/dl branch and both scoring-join sides — without
     # this the corpus is tokenized 4x inside one lane.
-    if os.environ.get("SVH_BM25_TF_CKPT", "1") != "0":
-        tf = defer_release(tf.localCheckpoint())
+    tf = defer_release(tf.localCheckpoint())
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dlen"))
     stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     consts = docs.agg(

@@ -12,29 +12,34 @@ Cross-engine determinism, layer by layer:
    DuckDB's scan order give byte-identical covariance numerators:
    cov_ij ∝ n*S_ij - S_i*S_j (all int64; overflow headroom asserted in
    functions/similarity.int_gram_stats).
-2. The 64x64 matrix folds through 8 power iterations entirely in array
-   expressions: u = round(mat·v, 12) per component via an ORDERED
-   zip_with/aggregate fold (0.0 + x1 == x1 in IEEE, so Spark's explicit
-   zero seed equals DuckDB's first-element seed), norm and normalize
-   round-12 quantized — the EWMA/survival recipe applied to vectors.
+2. The 64x64 matrix folds through 8 power iterations on the driver
+   (functions/driverfold.pca_power_fold): u = round(mat·v, 12) per
+   component via an ORDERED fold (0.0 + x1 == x1 in IEEE, so the
+   explicit zero seed equals DuckDB's first-element seed), norm and
+   normalize round-12 quantized — the EWMA/survival recipe applied to
+   vectors; spark_round is bit-identical to Spark's round().
 3. v0 = 1/sqrt(64) = 0.125 exactly (dyadic), so even the start state
    carries no rounding.
 
 Scale shape: one mapInPandas GEMM pass (per-partition X^T X, int64
-exact) + a groupBy over 64x64+65 cells; the iteration runs on a 1-row
-frame of literal-sized arrays — no shuffle, no collect. At 100 TB the
+exact) + a groupBy over 64x64+65 cells, collected (4161 rows whatever
+the corpus size) and folded on the driver. At 100 TB the
 GEMM pass is the only data-sized stage and it is embarrassingly
 parallel with a 4 KB-per-partition reduce payload.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import similarity
+from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
+    pca_power_fold,
+    spark_round,
+)
+from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
+    local_rows_df,
+)
 from shortvideohybridanalyticslakehouse_spark.plans.registry import register
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
@@ -118,28 +123,6 @@ FROM lam, range(0, {_D}) AS d(d)
 """
 
 
-def _mv(mat, v):
-    """round-12 matrix-vector product: ordered per-row zip_with fold."""
-    return F.transform(
-        mat,
-        lambda row: F.round(
-            F.aggregate(
-                F.zip_with(row, v, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-            12,
-        ),
-    )
-
-
-def _normalize(u):
-    nrm = F.round(
-        F.sqrt(F.aggregate(u, F.lit(0.0), lambda a, b: a + b * b)), 12
-    )
-    return F.transform(u, lambda x: F.round(x / nrm, 12))
-
-
 @register("embedding_pca_power", _PCA_ORACLE)
 def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top covariance eigenvector (8 fixed power-iteration rounds,
@@ -150,112 +133,30 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = similarity.int_gram_stats(
         emb, "vec_id", "embedding", dim=_D, scale=_SCALE
     )
-    if os.environ.get("SVH_PCA_DRIVERFOLD", "1") != "0":
-        # r13 (the markov-lane treatment, guide §1.2/§5): the 8-round
-        # power iteration runs on a SINGLE 64x64-matrix row — as a
-        # Catalyst expression it is a ~2 s single-task stage of
-        # interpreted array HOFs (plus its codegen/planning cost) that
-        # scales with NOTHING. Collect the 4161 exact-integer stat rows
-        # (produced by the distributed ANSI-guarded GEMM SUM, which
-        # keeps the overflow gate) and fold on the driver with
-        # bit-identical arithmetic (driverfold.pca_power_fold).
-        rows = stats.collect()
-        n_val = next(
-            (r["s"] for r in rows if r["i"] == -1 and r["j"] == -1), None
-        )
-        if n_val:
-            from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
-                pca_power_fold,
-            )
-            from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
-                local_rows_df,
-            )
-
-            gram = {
-                (r["i"], r["j"]): r["s"]
-                for r in rows
-                if r["i"] >= 0 and r["j"] >= 0
-            }
-            marg = {
-                r["i"]: r["s"] for r in rows if r["i"] >= 0 and r["j"] == -1
-            }
-            v, lam = pca_power_fold(n_val, gram, marg, _D, _ITERS)
-            from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
-                spark_round,
-            )
-
-            out = [
-                (d, spark_round(v[d], 6), lam) for d in range(_D)
-            ]
-            return local_rows_df(
-                spark, out, "dim int, loading double, eigenvalue double"
-            )
-    packed = stats.agg(
-        F.max(
-            F.when((F.col("i") == -1) & (F.col("j") == -1), F.col("s"))
-        ).alias("n"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    (F.col("i") >= 0) & (F.col("j") == -1),
-                    F.struct("i", "s"),
-                )
-            )
-        ).alias("marg"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    (F.col("i") >= 0) & (F.col("j") >= 0),
-                    F.struct("i", "j", "s"),
-                )
-            )
-        ).alias("cells"),
+    # r13 (the markov-lane treatment, guide §1.2/§5): the 8-round
+    # power iteration runs on a SINGLE 64x64 matrix — as a Catalyst
+    # expression it was a ~2 s single-task stage of interpreted array
+    # HOFs (plus its codegen/planning cost) that scales with NOTHING.
+    # Collect the 4161 exact-integer stat rows (produced by the
+    # distributed ANSI-guarded GEMM SUM, which keeps the overflow gate)
+    # and fold on the driver with bit-identical arithmetic
+    # (driverfold.pca_power_fold).
+    rows = stats.collect()
+    n_val = next(
+        (r["s"] for r in rows if r["i"] == -1 and r["j"] == -1), None
     )
-    n = F.col("n")
-    nsq = (n.cast("double") * n.cast("double"))
-    gram = F.transform(F.col("cells"), lambda c: c["s"])
-    marg = F.transform(F.col("marg"), lambda c: c["s"])
-    mat = F.transform(
-        F.sequence(F.lit(0), F.lit(_D - 1)),
-        lambda i: F.transform(
-            F.sequence(F.lit(0), F.lit(_D - 1)),
-            lambda j: (
-                (
-                    n * F.element_at(gram, (i * _D + j + 1).cast("int"))
-                    - F.element_at(marg, (i + 1).cast("int"))
-                    * F.element_at(marg, (j + 1).cast("int"))
-                ).cast("double")
-                / nsq
-            ),
-        ),
-    )
-    v0 = F.array_repeat(F.lit(0.125), _D)
-    with_mat = packed.select(mat.alias("mat"), F.lit(1).alias("_one"))
-    v_final = F.aggregate(
-        F.sequence(F.lit(1), F.lit(_ITERS)),
-        v0,
-        lambda v, _k: _normalize(_mv(F.col("mat"), v)),
-    )
-    folded = with_mat.select(
-        v_final.alias("v"),
-        F.col("mat"),
-    ).select(
-        F.col("v"),
-        _mv(F.col("mat"), F.col("v")).alias("u"),
-    )
-    lam = F.round(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("u"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-        6,
-    )
-    return folded.select(
-        F.posexplode(F.col("v")).alias("dim", "_loading"),
-        lam.alias("eigenvalue"),
-    ).select(
-        F.col("dim").cast("int").alias("dim"),
-        F.round(F.col("_loading"), 6).alias("loading"),
-        "eigenvalue",
+    # an empty corpus has no covariance: NULL loadings and eigenvalue,
+    # as the oracle answers
+    out = [(d, None, None) for d in range(_D)]
+    if n_val:
+        gram = {
+            (r["i"], r["j"]): r["s"]
+            for r in rows
+            if r["i"] >= 0 and r["j"] >= 0
+        }
+        marg = {r["i"]: r["s"] for r in rows if r["i"] >= 0 and r["j"] == -1}
+        v, lam = pca_power_fold(n_val, gram, marg, _D, _ITERS)
+        out = [(d, spark_round(v[d], 6), lam) for d in range(_D)]
+    return local_rows_df(
+        spark, out, "dim int, loading double, eigenvalue double"
     )

@@ -19,8 +19,6 @@ key; skewed parts salt like any per-key window.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -85,29 +83,20 @@ def q_part_flow_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = bal.withColumn(
         "drawdown", F.max("balance").over(w_run) - F.col("balance")
     )
-    if os.environ.get("SVH_DRAWDOWN_WINDOW", "1") != "0":
-        # r13: the groupBy(max) + self-join consumed the window subtree
-        # TWICE (profiled: the 9.4 MB ledger-window stage ran 2x per
-        # trial). A whole-partition max window rides the SAME
-        # l_partkey exchange + day sort the running windows already pay
-        # for — one pass, no join; max OVER (PARTITION BY) equals the
-        # grouped max on the identical exact decimals (guide §2.4:
-        # window keyed like the aggregation needs no second shuffle).
-        w_part = Window.partitionBy("l_partkey")
-        located = (
-            dd.withColumn("max_dd", F.max("drawdown").over(w_part))
-            .filter(F.col("drawdown") == F.col("max_dd"))
-            .groupBy("l_partkey", "max_dd")
-            .agg(F.min("day").alias("trough_day"))
-        )
-    else:
-        best = dd.groupBy("l_partkey").agg(F.max("drawdown").alias("max_dd"))
-        located = (
-            dd.join(best, "l_partkey")
-            .filter(F.col("drawdown") == F.col("max_dd"))
-            .groupBy("l_partkey", "max_dd")
-            .agg(F.min("day").alias("trough_day"))
-        )
+    # r13: the groupBy(max) + self-join consumed the window subtree
+    # TWICE (profiled: the 9.4 MB ledger-window stage ran 2x per
+    # trial). A whole-partition max window rides the SAME
+    # l_partkey exchange + day sort the running windows already pay
+    # for — one pass, no join; max OVER (PARTITION BY) equals the
+    # grouped max on the identical exact decimals (guide §2.4:
+    # window keyed like the aggregation needs no second shuffle).
+    w_part = Window.partitionBy("l_partkey")
+    located = (
+        dd.withColumn("max_dd", F.max("drawdown").over(w_part))
+        .filter(F.col("drawdown") == F.col("max_dd"))
+        .groupBy("l_partkey", "max_dd")
+        .agg(F.min("day").alias("trough_day"))
+    )
     return (
         located.orderBy(F.col("max_dd").desc(), F.col("l_partkey").asc())
         .limit(_TOP)

@@ -30,12 +30,13 @@ bucket-bounded. Positions cap at 2^20 per doc by the key packing
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    defer_release,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _K = 5
@@ -190,18 +191,12 @@ def q_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = fps.select(
         "doc_id", (F.col("wmin") / _POS_PACK).cast("bigint").alias("fph")
     ).distinct()
-    if os.environ.get("SVH_WINNOW_CKPT", "1") != "0":
-        # the distinct hash frame feeds THREE consumers (the bucket
-        # aggregate + both self-join sides); without materialization the
-        # explode + window-min fingerprint subtree (the run's two
-        # heaviest stages, ~20 s CPU each at sf0.1) executes twice.
-        # Lazy checkpoint: the single final action materializes it once
-        # and every consumer reads the blocks (guide §5).
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release as _dr,
-        )
-
-        hashes = _dr(hashes.localCheckpoint(eager=True))
+    # the distinct hash frame feeds THREE consumers (the bucket
+    # aggregate + both self-join sides); without materialization the
+    # explode + window-min fingerprint subtree (the run's two
+    # heaviest stages, ~20 s CPU each at sf0.1) executes twice.
+    # Checkpoint it once and every consumer reads the blocks (guide §5).
+    hashes = defer_release(hashes.localCheckpoint(eager=True))
     buck = (
         hashes.groupBy("fph")
         .agg(F.count(F.lit(1)).alias("n_docs"))

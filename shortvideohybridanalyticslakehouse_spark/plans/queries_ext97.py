@@ -1,7 +1,8 @@
 """Extension queries, round 97: behavioral sequence analytics — funnel
 paths with exclusion steps, integer autocorrelation periodicity over
 hourly traffic, Fano-factor burstiness, and the stationary distribution
-of the event-type Markov chain via an in-plan power iteration.
+of the event-type Markov chain via a power iteration over the
+collected 25-cell transition matrix.
 
 Determinism notes:
   - event ordering uses the packed key offset_sec * 2^24 + event_id
@@ -17,8 +18,6 @@ Determinism notes:
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -363,11 +362,11 @@ ORDER BY state
 @register("markov_stationary_power", _MARKOV_ORACLE)
 def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the user event-type Markov chain by 20
-    power-iteration steps executed INSIDE the plan: transition counts ->
-    row-normalized 25-slot row-major array (round-12 cells, self-loop
-    backstop for empty rows) -> array fold pi' = pi P with round-12
-    index-order inner sums. SQL-replayable end to end (DuckDB LIST
-    accumulator — the 1.0 struct-fold bug never applies)."""
+    power-iteration steps: transition counts -> row-normalized 25-slot
+    row-major array (round-12 cells, self-loop backstop for empty rows)
+    -> array fold pi' = pi P with round-12 index-order inner sums on the
+    driver. SQL-replayable end to end (DuckDB LIST accumulator — the 1.0
+    struct-fold bug never applies)."""
     keyed = _keyed(spark, sf_dir)
     from pyspark.sql import Window
 
@@ -418,46 +417,13 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the 20-iteration power fold over the collected 25-double
     # matrix is O(1) scalar work — folded on the driver with
     # bit-identical arithmetic (functions/driverfold.py, guide §1.2)
-    # instead of a giant Catalyst expression. SVH_MARKOV_DRIVER=0 keeps
-    # the in-plan fold for A/B.
-    if os.environ.get("SVH_MARKOV_DRIVER", "1") == "1":
-        pm = list(pmat.collect()[0][0])
-        if len(pm) == _N_STATES * _N_STATES:
-            pi = stationary_power_fold(pm, _N_STATES, _N_ITER)
-            rows = [
-                (s, spark_round(pi[i], 8)) for i, s in enumerate(states)
-            ]
-            return local_rows_df(
-                spark, rows, "state string, stationary_prob double"
-            ).orderBy("state")
-
-    def step(acc, pm):
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(_N_STATES)),
-            lambda j: F.aggregate(
-                F.sequence(F.lit(1), F.lit(_N_STATES)),
-                F.lit(0.0),
-                lambda a, i: F.round(
-                    a
-                    + F.element_at(acc, i)
-                    * F.element_at(pm, _N_STATES * (i - F.lit(1)) + j),
-                    12,
-                ),
-            ),
-        )
-
-    pi0 = F.array(*[F.lit(1.0 / _N_STATES) for _ in range(_N_STATES)])
-    folded = pmat.select(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(_N_ITER)),
-            pi0,
-            lambda acc, _x: step(acc, F.col("p")),
-        ).alias("pi")
-    )
-    out = folded.crossJoin(F.broadcast(sdf)).select(
-        F.col("s").alias("state"),
-        F.round(F.element_at(F.col("pi"), F.col("idx")), 8).alias(
-            "stationary_prob"
-        ),
-    )
-    return out.orderBy("state")
+    # instead of a giant Catalyst expression. The 5x5 grid left join
+    # yields exactly one cell per (i, j).
+    pm = list(pmat.collect()[0][0])
+    if len(pm) != _N_STATES * _N_STATES:
+        raise ValueError(f"transition matrix has {len(pm)} cells")
+    pi = stationary_power_fold(pm, _N_STATES, _N_ITER)
+    rows = [(s, spark_round(pi[i], 8)) for i, s in enumerate(states)]
+    return local_rows_df(
+        spark, rows, "state string, stationary_prob double"
+    ).orderBy("state")

@@ -58,7 +58,7 @@ def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
     # every downstream action on the finalized frame otherwise pays ~0.5 s
     # of Python-worker round-trips for a handful of rows (guide §4/§5;
     # falls back to createDataFrame for any value without an exact SQL
-    # literal form, and under SVH_LOCALREL=0).
+    # literal form).
     from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
         bounded_rows_df,
     )

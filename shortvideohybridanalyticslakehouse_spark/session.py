@@ -26,6 +26,10 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract).
+    Raises if a session is already running with a different value for any
+    conf set here: ``getOrCreate`` would silently re-apply the SQL confs
+    to it at runtime (and ignore the static ones), changing the session
+    under every other user of it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -35,19 +39,18 @@ def get_spark(
         except ValueError:
             shuffle_partitions = 32
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    conf = {
+        "spark.master": master,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # AQE: runtime shuffle-partition coalescing + skew-join handling.
         # (The reference disables AQE only because its jobs are pure
         # streaming, spark-defaults.conf:29; batch/serving mode wants it on.)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # Arrow for any pandas interchange (toPandas, pandas UDFs).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # InferFiltersFromGenerate turns every explode(f(x)) into a pushed
         # `size(f(x))>0` filter — duplicating the generator expression into
         # the scan stage, BELOW any parallelizing repartition. For this
@@ -56,20 +59,31 @@ def get_spark(
         # (measured: ngram_jaccard_top_pairs 5.3 s -> 1.2 s at sf0.1 with
         # the rule off). The rule only saves skipping empty-array rows —
         # negligible here.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        "spark.sql.optimizer.excludedRules": (
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+        ),
         # ANSI off: the reference relies on permissive casts (bad timestamp
         # strings -> NULL -> quarantine row, never job failure).
-        .config("spark.sql.ansi.enabled", "false")
+        "spark.sql.ansi.enabled": "false",
         # Fixture parquet stores ns-precision timestamps (TIMESTAMP(NANOS))
         # which Spark has no native type for; read as long and convert in the
         # loader (sources/batch.py) via timestamp_micros(ns div 1000).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SVH_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.memory": os.environ.get("SVH_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        differ = sorted(
+            k for k, v in conf.items() if active.conf.get(k, None) != v
+        )
+        if differ:
+            raise RuntimeError(
+                "get_spark() would change the running session's confs "
+                f"{differ}; use the running session instead"
+            )
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -42,13 +42,10 @@ with the beyond-reference LLM-data-pipeline surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import dedupfns
-from shortvideohybridanalyticslakehouse_spark.functions.dedupfns import hash60
 from shortvideohybridanalyticslakehouse_spark.plans.queries_ext9 import (
     QF_MAX_TOP_FRACTION,
     QF_MEAN_WORD_LEN_HI,
@@ -88,7 +85,6 @@ def build_curation_probe_table(
     with_sig = dedupfns.minhash_signatures_df(
         corpus, id_col, text_col, k=2, num_hashes=num_hashes, out_col="minhash"
     )
-    _vec = os.environ.get("SVH_FUNNEL_VEC", "1") != "0"
     bands = with_sig.select(
         F.col(id_col).alias("corpus_id"),
         F.col("minhash").alias("sig_corpus"),
@@ -107,23 +103,18 @@ def build_curation_probe_table(
         # are legitimately null on gram rows, so they can't serve)
         F.lit(1).alias("_probe_hit"),
     )
-    if _vec:
-        # distinct gram hash60s per doc from ONE Arrow batch kernel
-        # (hashlib md5 == Spark md5 on UTF-8 bytes) instead of an
-        # interpreted concat-per-window + md5-per-gram lambda chain;
-        # the downstream explode+distinct consumes a SET, so set
-        # equality of the hashes is result equality (guide §4.2)
-        _htoks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        gram_col = F.explode(dedupfns.gram_hash_udf(gram_k)(_htoks)).alias(
-            "g"
-        )
-        grams_src = holdout.select(gram_col).select(
-            F.col("g").cast("string").alias("pkey")
-        )
-    else:
-        grams_src = holdout.select(
-            F.explode(dedupfns.shingles(F.col(text_col), gram_k)).alias("g")
-        ).select(hash60(F.col("g")).cast("string").alias("pkey"))
+    # distinct gram hash60s per doc from ONE Arrow batch kernel
+    # (hashlib md5 == Spark md5 on UTF-8 bytes) instead of an
+    # interpreted concat-per-window + md5-per-gram lambda chain;
+    # the downstream explode+distinct consumes a SET, so set
+    # equality of the hashes is result equality (guide §4.2)
+    _htoks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    gram_col = F.explode(dedupfns.gram_hash_udf(gram_k)(_htoks)).alias(
+        "g"
+    )
+    grams_src = holdout.select(gram_col).select(
+        F.col("g").cast("string").alias("pkey")
+    )
     grams = (
         grams_src
         .distinct()
@@ -187,45 +178,40 @@ def ingest_curation_plan(
     sum_len = F.aggregate(
         toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
     )
-    if os.environ.get("SVH_FUNNEL_TOPCNT_SORT", "1") != "0":
-        # max token multiplicity as the longest equal-run of the SORTED
-        # token array — O(n log n) sort + one O(n) fold, instead of the
-        # quadratic transform-over-distinct x filter-over-all scan
-        # (interpreted HOF lambdas both ways, so the op count is what
-        # matters; guide §1.2). Identical integers: runs of equal
-        # strings in a sorted array ARE the multiplicities, and split()
-        # never yields NULL elements.
-        run_max = F.aggregate(
-            F.array_sort(toks),
-            F.struct(
-                F.lit(None).cast("string").alias("prev"),
-                F.lit(0).cast("bigint").alias("run"),
-                F.lit(0).cast("bigint").alias("best"),
-            ),
-            lambda a, t: F.struct(
-                t.alias("prev"),
-                F.when(a["prev"] == t, a["run"] + 1)
-                .otherwise(F.lit(1).cast("bigint"))
-                .alias("run"),
-                F.greatest(
-                    a["best"],
-                    F.when(a["prev"] == t, a["run"] + 1).otherwise(
-                        F.lit(1).cast("bigint")
-                    ),
-                ).alias("best"),
-            ),
-            lambda a: a["best"],
-        )
-        # empty token array -> fold returns 0; array_max over the
-        # transform path returns NULL there. Reproduce the NULL so the
-        # quality predicate decides identically.
-        top_cnt = F.when(F.size(toks) == 0, F.lit(None)).otherwise(
-            run_max
-        ).cast("bigint")
-    else:
-        top_cnt = F.array_max(
-            F.transform(uniq, lambda d: F.size(F.filter(toks, lambda t: t == d)))
-        ).cast("bigint")
+    # max token multiplicity as the longest equal-run of the SORTED
+    # token array — O(n log n) sort + one O(n) fold, instead of the
+    # quadratic transform-over-distinct x filter-over-all scan
+    # (interpreted HOF lambdas both ways, so the op count is what
+    # matters; guide §1.2). Identical integers: runs of equal
+    # strings in a sorted array ARE the multiplicities, and split()
+    # never yields NULL elements.
+    run_max = F.aggregate(
+        F.array_sort(toks),
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).cast("bigint").alias("run"),
+            F.lit(0).cast("bigint").alias("best"),
+        ),
+        lambda a, t: F.struct(
+            t.alias("prev"),
+            F.when(a["prev"] == t, a["run"] + 1)
+            .otherwise(F.lit(1).cast("bigint"))
+            .alias("run"),
+            F.greatest(
+                a["best"],
+                F.when(a["prev"] == t, a["run"] + 1).otherwise(
+                    F.lit(1).cast("bigint")
+                ),
+            ).alias("best"),
+        ),
+        lambda a: a["best"],
+    )
+    # empty token array -> fold returns 0; array_max over the
+    # transform path returns NULL there. Reproduce the NULL so the
+    # quality predicate decides identically.
+    top_cnt = F.when(F.size(toks) == 0, F.lit(None)).otherwise(
+        run_max
+    ).cast("bigint")
     scored = s1.withColumn("n_tok", q_n).withColumn(
         "_q",
         F.struct(
@@ -263,21 +249,15 @@ def ingest_curation_plan(
 
     # One probe row per (band ++ gram): a single explode and a single
     # left join against the unified static table serve BOTH screens.
-    _vec = os.environ.get("SVH_FUNNEL_VEC", "1") != "0"
     _toks2 = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    if _vec:
-        # signature + gram hashes from Arrow batch kernels (exact-twin
-        # md5/affine arithmetic in numpy) instead of per-row interpreted
-        # HOF minima and per-gram lambda hashing — the hottest CPU of
-        # this plan's single pass (guide §4.2). Tokenization stays in
-        # Catalyst so Java-regex split semantics are untouched.
-        with_sig = s3.withColumn(
-            "minhash", dedupfns.minhash_sig_udf(2, num_hashes)(_toks2)
-        )
-    else:
-        with_sig = dedupfns.with_minhash(
-            s3, text_col="text", k=2, num_hashes=num_hashes, out_col="minhash"
-        )
+    # signature + gram hashes from Arrow batch kernels (exact-twin
+    # md5/affine arithmetic in numpy) instead of per-row interpreted
+    # HOF minima and per-gram lambda hashing — the hottest CPU of
+    # this plan's single pass (guide §4.2). Tokenization stays in
+    # Catalyst so Java-regex split semantics are untouched.
+    with_sig = s3.withColumn(
+        "minhash", dedupfns.minhash_sig_udf(2, num_hashes)(_toks2)
+    )
     band_probes = F.transform(
         dedupfns.lsh_bands(F.col("minhash"), num_hashes, band_size),
         lambda b: F.struct(
@@ -285,22 +265,13 @@ def ingest_curation_plan(
             F.concat_ws(":", b["band_id"], b["band_hash"]).alias("pkey"),
         ),
     )
-    if _vec:
-        gram_probes = F.transform(
-            dedupfns.gram_hash_udf(gram_k)(_toks2),
-            lambda h: F.struct(
-                F.lit("gram").alias("ptype"),
-                h.cast("string").alias("pkey"),
-            ),
-        )
-    else:
-        gram_probes = F.transform(
-            dedupfns.shingles(F.col("text"), gram_k),
-            lambda g: F.struct(
-                F.lit("gram").alias("ptype"),
-                hash60(g).cast("string").alias("pkey"),
-            ),
-        )
+    gram_probes = F.transform(
+        dedupfns.gram_hash_udf(gram_k)(_toks2),
+        lambda h: F.struct(
+            F.lit("gram").alias("ptype"),
+            h.cast("string").alias("pkey"),
+        ),
+    )
     probes = with_sig.select(
         "doc_id",
         "ingest_ts",

@@ -1,27 +1,21 @@
 """driverfold.spark_round must be bit-identical to Spark SQL round() on
-doubles, and the markov driver folds must reproduce the in-plan Catalyst
-folds exactly (toggle A/B at sf0.001)."""
+doubles, and the markov and PCA driver folds must reproduce hand-solved
+chains and eigenpairs."""
 
 from __future__ import annotations
 
 import math
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
+    expected_steps_fold,
+    pca_power_fold,
     spark_round,
+    stationary_power_fold,
+    value_iteration_absorption,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-# NOTE: no module-level spark fixture — use conftest's shared local[4]
-# session. get_spark() here would re-apply builder confs as RUNTIME confs
-# on the existing session (shuffle.partitions 4 -> 32) and
-# order-dependently break width-asserting tests later in the suite
-# (the r13 toggle-file lesson).
 
 
 def test_spark_round_bit_exact_grid(spark):
@@ -46,30 +40,58 @@ def test_spark_round_bit_exact_grid(spark):
             assert mine.hex() == theirs.hex(), (v, scale, mine, theirs)
 
 
-@pytest.mark.parametrize(
-    "lane",
-    [
-        "markov_removal_attribution",
-        "markov_expected_steps",
-        "markov_stationary_power",
-    ],
-)
-def test_markov_driver_fold_matches_inplan(spark, lane, monkeypatch):
-    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-        load_all,
-    )
+# The ext122/ext128 planted journey chain (hand-solved there): from-states
+# 1=start, 2..5 = click, error, signup, view; to-states add 6=conv, 7=null.
+# start -> {click 1/2, view 1/4, conv 1/4}; click -> {conv 1/2, view 1/2};
+# view -> {conv 1/2, null 1/2}; the unreached error/signup rows -> null.
+_NF, _NT, _K = 5, 7, 60
+_CHAIN = {
+    (1, 2): 0.5, (1, 5): 0.25, (1, 6): 0.25,
+    (2, 6): 0.5, (2, 5): 0.5,
+    (3, 7): 1.0,
+    (4, 7): 1.0,
+    (5, 6): 0.5, (5, 7): 0.5,
+}
+_P = [
+    _CHAIN.get((s, t), 0.0)
+    for s in range(1, _NF + 1)
+    for t in range(1, _NT + 1)
+]
 
-    registry = load_all()
-    fn, _ = registry[lane]
 
-    def rows(toggle: str):
-        monkeypatch.setenv("SVH_MARKOV_DRIVER", toggle)
-        out = fn(spark, SF_DIR).collect()
-        return sorted(
-            tuple(
-                v.hex() if isinstance(v, float) else v for v in r
-            )
-            for r in out
-        )
+def test_value_iteration_absorption_hand_solved():
+    """v_full(start) = 3/4; remove click -> 3/8; remove view -> 1/2;
+    removing an unreached channel changes nothing."""
 
-    assert rows("1") == rows("0")
+    def v(rc):
+        return spark_round(value_iteration_absorption(_P, _NF, _NT, _K, rc), 6)
+
+    assert v(0) == 0.75
+    assert v(2) == 0.375
+    assert v(5) == 0.5
+    assert v(3) == v(4) == 0.75
+
+
+def test_expected_steps_fold_hand_solved():
+    """h(view) = 1, h(click) = 1.5, h(start) = 2; unreached channels
+    absorb in one step."""
+    h = [spark_round(x, 6) for x in expected_steps_fold(_P, _NF, _NT, _K)]
+    assert h == [2.0, 1.5, 1.0, 1.0, 1.0]
+
+
+def test_stationary_power_fold_hand_solved():
+    """P = [[1/2, 1/2], [1/4, 3/4]] has pi = (1/3, 2/3); the second
+    eigenvalue 1/4 leaves 20 power steps ~1e-12 from it."""
+    pi = stationary_power_fold([0.5, 0.5, 0.25, 0.75], 2, 20)
+    assert [spark_round(x, 8) for x in pi] == [0.33333333, 0.66666667]
+
+
+def test_pca_power_fold_hand_solved():
+    """Points (+-2, 0), (0, +-1): n = 4, zero marginals, covariance
+    diag(2, 1/2) — top eigenpair (2, e1); 8 power steps from (1, 1)
+    leave the e2 loading at 4**-8."""
+    gram = {(0, 0): 8, (1, 1): 2, (0, 1): 0, (1, 0): 0}
+    v, lam = pca_power_fold(4, gram, {0: 0, 1: 0}, 2, 8)
+    assert lam == 2.0
+    assert spark_round(v[0], 6) == 1.0
+    assert abs(v[1] - 4.0**-8) < 1e-9

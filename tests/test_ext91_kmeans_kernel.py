@@ -1,37 +1,31 @@
-"""kmeans_lloyd_integer: the numpy mapInPandas kernel path must produce
-output identical to the Catalyst HOF path (all-integer arithmetic is
-associative, so this is exact equality, not approx)."""
+"""kmeans_lloyd_integer: the numpy mapInPandas kernel path must replay
+the pure-python Lloyd reference exactly on the sf0.001 embeddings
+(all-integer arithmetic, so this is exact equality, not approx)."""
 
 from __future__ import annotations
 
-import pytest
+import numpy as np
+import pyarrow.parquet as pq
+from test_ext91_kmeans import _K, _py_lloyd
 
+from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# NOTE: no module-level spark fixture — use conftest's shared local[4]
-# session. get_spark() here would re-apply builder confs as RUNTIME confs
-# on the existing session (shuffle.partitions 4 -> 32) and
-# order-dependently break width-asserting tests later in the suite
-# (the r13 toggle-file lesson).
-
-
-def test_kernel_matches_hof_path(spark, monkeypatch):
-    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-        load_all,
-    )
-
+def test_lane_matches_python_lloyd(spark):
+    t = pq.read_table(f"{SF_DIR}/embeddings.parquet").sort_by("vec_id")
+    ids = t.column("vec_id").to_pylist()
+    assert ids[:_K] == list(range(_K))  # the lane seeds with vec_id < K
+    mat = np.array(t.column("embedding").to_pylist(), dtype=np.float32)
     fn, _ = load_all()["kmeans_lloyd_integer"]
-
-    def rows(toggle: str):
-        monkeypatch.setenv("SVH_KMEANS_ARROW", toggle)
-        return sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-
-    a = rows("0")
-    b = rows("1")
-    assert a == b
-    assert len(a) > 0
+    got = {
+        r.cluster: (r.n_members, r.inertia, r.centroid_abs_sum)
+        for r in fn(spark, SF_DIR).collect()
+    }
+    want = {k: v for k, v in _py_lloyd(mat).items() if v[0] > 0}
+    assert got == want
+    assert len(got) > 0
 
 
 def test_kernel_partials_exact_tiny():

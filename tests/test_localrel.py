@@ -6,21 +6,11 @@ from __future__ import annotations
 
 import datetime
 import math
-import os
-
-import pytest
 
 from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
     bounded_rows_df,
     local_rows_df,
 )
-
-
-# NOTE: no module-level spark fixture — use conftest's shared local[4]
-# session. get_spark() here would re-apply builder confs as RUNTIME confs
-# on the existing session (shuffle.partitions 4 -> 32) and
-# order-dependently break width-asserting tests later in the suite
-# (the r13 toggle-file lesson).
 
 
 def _assert_same(spark, rows, schema):
@@ -114,13 +104,6 @@ def test_fallback_on_unsupported_type(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     plan = b._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan or "LocalTableScan" not in plan
-
-
-def test_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SVH_LOCALREL", "0")
-    b = local_rows_df(spark, [(1, "a")], "k bigint, v string")
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" not in plan
 
 
 def test_bounded_rows_df_roundtrip(spark):

@@ -1,84 +1,97 @@
-"""Paired A/B bench for env-toggled plan variants (guide §1).
+"""Paired A/B bench of two git revisions (guide §1).
 
-The sandbox host's speed drifts by 10-50% across minutes (CPU steal
-bursts from co-tenants), so comparing a change against a baseline
-recorded earlier is meaningless at the per-lane level. This harness
-measures both variants INTERLEAVED inside one Spark session —
-A,B,A,B,... per query — so both arms sample the same host conditions;
-the per-arm MEDIAN over >=3 trials is then directly comparable.
+Host speed drifts by 10-50% across minutes (CPU steal from co-tenants),
+so a baseline recorded earlier is meaningless per lane. Both revisions
+are checked out as git worktrees and measured INTERLEAVED — per lane
+and trial one fresh process per arm, alternating which arm runs first —
+so the per-arm MEDIAN over >=3 trials is directly comparable.
 
-Usage:
-  python tools/ab_bench.py ENVVAR=a_val:b_val query [query ...]
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SVH_AB_TRIALS (default 3).
+Usage: python tools/ab_bench.py [--trials N] REV_A REV_B lane [lane ...]
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 
-The toggle env var is read at PLAN BUILD time by the code under test,
-so each trial rebuilds the DataFrame with the variant's plan. Timed
-action = bench.py's xxhash64-of-struct sum (same methodology).
+A trial process warms up like bench.py, builds and runs the lane once
+untimed, then times the build plus bench.py's xxhash64-of-struct sum.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+def child(lane: str) -> None:
+    sys.path.insert(0, os.getcwd())  # the revision's worktree
+    from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
-from shortvideohybridanalyticslakehouse_spark.session import get_spark
+    from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
+    from shortvideohybridanalyticslakehouse_spark.session import get_spark
 
-
-def main() -> None:
-    toggle, names = sys.argv[1], sys.argv[2:]
-    var, vals = toggle.split("=", 1)
-    a_val, b_val = vals.split(":", 1)
-    trials = int(os.environ.get("SVH_AB_TRIALS", "3"))
+    fn, _ = load_all()[lane]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    registry = load_all()
     spark = get_spark("svh-ab-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # bench.py warmup
     spark.range(1_000_000).groupBy((F.col("id") % 10).alias("k")).agg(
         F.sum("id")
     ).collect()
-    spark.createDataFrame([(1,)], "x int").mapInPandas(
-        lambda it: it, "x int"
-    ).collect()
-
-    def steal() -> int:
-        with open("/proc/stat") as fh:
-            return int(fh.readline().split()[8])
-
-    print(f"# arm A: {var}={a_val}   arm B: {var}={b_val}   trials={trials}")
-    for name in names:
-        fn, _ = registry[name]
-        times: dict[str, list[float]] = {a_val: [], b_val: []}
-        s0 = steal()
-        for t in range(trials):
-            for val in (a_val, b_val):
-                os.environ[var] = val
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                df.select(
-                    F.sum(F.xxhash64(F.to_json(F.struct(*df.columns)))).alias("h")
-                ).collect()
-                times[val].append(time.time() - t0)
-        os.environ.pop(var, None)
-        sdelta = steal() - s0
-        med = {v: sorted(ts)[len(ts) // 2] for v, ts in times.items()}
-        ratio = med[b_val] / med[a_val] if med[a_val] else float("nan")
-        print(
-            f"{name}: A({var}={a_val}) med={med[a_val]:.3f}s "
-            f"{[round(x,2) for x in times[a_val]]}  "
-            f"B({var}={b_val}) med={med[b_val]:.3f}s "
-            f"{[round(x,2) for x in times[b_val]]}  B/A={ratio:.3f} "
-            f"steal={sdelta}j",
-            flush=True,
-        )
+    for _ in range(2):
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        h = F.xxhash64(F.to_json(F.struct(*df.columns)))
+        df.select(F.sum(h)).collect()
+    print(time.time() - t0)
     spark.stop()
 
 
+def steal() -> int:
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8])
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--trials", type=int, default=3)
+    ap.add_argument("revs", nargs=2, metavar="REV")
+    ap.add_argument("lanes", nargs="+")
+    args = ap.parse_args()
+    with tempfile.TemporaryDirectory(prefix="ab-bench-") as tmp:
+        trees = [os.path.join(tmp, arm) for arm in "AB"]
+        try:
+            for tree, rev in zip(trees, args.revs):
+                git = ["git", "worktree", "add", "-q", "--detach", tree, rev]
+                subprocess.run(git, check=True)
+            print(f"# A: {args.revs[0]}  B: {args.revs[1]}  trials={args.trials}")
+            cmd = [sys.executable, os.path.abspath(__file__), "--child"]
+            for lane in args.lanes:
+                times: list[list[float]] = [[], []]
+                s0 = steal()
+                for t in range(args.trials):
+                    for arm in (0, 1) if t % 2 == 0 else (1, 0):
+                        out = subprocess.run(
+                            cmd + [lane], cwd=trees[arm], check=True,
+                            capture_output=True, text=True,
+                        ).stdout
+                        times[arm].append(float(out.split()[-1]))
+                med = [sorted(ts)[len(ts) // 2] for ts in times]
+                arms = "  ".join(
+                    f"{ab} med={m:.3f}s {[round(x, 2) for x in ts]}"
+                    for ab, m, ts in zip("AB", med, times)
+                )
+                print(
+                    f"{lane}: {arms}  B/A={med[1] / med[0]:.3f} "
+                    f"steal={steal() - s0}j",
+                    flush=True,
+                )
+        finally:
+            for tree in trees:
+                subprocess.run(["git", "worktree", "remove", "--force", tree])
+
+
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--child"]:
+        child(sys.argv[2])
+    else:
+        main()
