@@ -529,56 +529,39 @@ def verify_candidate_jaccard(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = DEFAULT_SHINGLE_K,
-    prehash_once: bool = False,
 ) -> DataFrame:
     """Exact Jaccard restricted to candidate (doc_a, doc_b) pairs.
 
-    The verify stage of the LSH pipeline: shingles explode once, then two
-    equi-joins pin each exploded side to the candidate list before the
-    intersection count — work scales with |candidates| x shingles-per-doc.
-
-    ``prehash_once=True`` (r13, guide §3.2/§1.2): the exploded side feeds
-    BOTH join inputs, so lazily every doc's shingles are md5-hashed TWICE
-    (the dominant CPU of the lane — 32 s of the 35 s hot stage in the r12
-    profile); and docs with no candidate pair are hashed for nothing.
-    With the flag, ``candidates`` must already be materialized (cheap to
-    re-read): docs are semi-filtered to ids that appear in a candidate
-    pair — consistent with the existing broadcast-candidates posture, the
-    id list is at most 2x the LSH-bounded pair count — hashed ONCE into a
-    per-doc hash array, checkpointed (released at next query build), and
-    both join sides explode from the materialized arrays. Identical join
-    semantics: the same (doc, hash) multiset reaches the same joins.
+    The verify stage of the LSH pipeline. Docs are semi-filtered to ids
+    that appear in a candidate pair (the id list is at most 2x the
+    LSH-bounded pair count), each doc's shingles are hashed once into a
+    per-doc hash array, and that array is checkpointed (released when the
+    next registered query builds). Both join sides explode from the
+    materialized arrays, so the md5-per-shingle work runs once per
+    candidate doc rather than once per join side over every doc. Two
+    equi-joins then pin each exploded side to the candidate list before
+    the intersection count — work scales with |candidates| x
+    shingles-per-doc. ``candidates`` feeds the id list and the broadcast,
+    so pass it materialized when it is expensive to recompute.
     """
-    if prehash_once:
-        from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-            defer_release,
-        )
+    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+        defer_release,
+    )
 
-        ids = (
-            candidates.select(F.col("doc_a").alias(id_col))
-            .unionByName(candidates.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        docs = docs.join(F.broadcast(ids), id_col, "semi")
-        hs = docs.select(
-            F.col(id_col),
-            F.transform(
-                shingles(F.col(text_col), k), lambda s: hash60(s)
-            ).alias("hs"),
-        ).withColumn("sh_size", F.size("hs"))
-        hs = defer_release(hs.localCheckpoint(eager=True))
-        ex = hs.select(
-            id_col, "sh_size", F.explode("hs").alias("shingle_h")
-        )
-    else:
-        sh = docs.select(
-            F.col(id_col), shingles(F.col(text_col), k).alias("sh")
-        ).withColumn("sh_size", F.size("sh"))
-        ex = (
-            sh.select(id_col, "sh_size", F.explode("sh").alias("shingle"))
-            .withColumn("shingle_h", hash60(F.col("shingle")))
-            .drop("shingle")
-        )
+    ids = (
+        candidates.select(F.col("doc_a").alias(id_col))
+        .unionByName(candidates.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+    )
+    docs = docs.join(F.broadcast(ids), id_col, "semi")
+    hs = docs.select(
+        F.col(id_col),
+        F.transform(shingles(F.col(text_col), k), lambda s: hash60(s)).alias(
+            "hs"
+        ),
+    ).withColumn("sh_size", F.size("hs"))
+    hs = defer_release(hs.localCheckpoint(eager=True))
+    ex = hs.select(id_col, "sh_size", F.explode("hs").alias("shingle_h"))
     a = ex.select(
         F.col(id_col).alias("doc_a"),
         F.col("sh_size").alias("size_a"),

@@ -565,12 +565,9 @@ def semdedup_prune(
             [], "cell_id long, n_members bigint, n_kept bigint, n_dropped bigint"
         )
 
-    # r13 (guide §4.2): assignment + within-cell prune as two numpy
-    # kernels instead of a K-medoid HOF argmin per row plus an
-    # O(m^2)-row self-join with a per-pair HOF cosine (the r12
-    # profile shows 24 s executorRunTime in the pair stage and 13 s
-    # in assignment at sf0.1). Assignment distances keep a fixed
-    # operation order (elementwise (x-y)*(x-y), left-to-right
+    # Assignment + within-cell prune as two numpy kernels (guide
+    # §4.2). Assignment distances keep a fixed operation order
+    # (elementwise (x-y)*(x-y), left-to-right
     # accumulation, medoids visited in ascending cell_id with strict <
     # — the argmin tie-break of array_min over struct(dist, cell_id)).
     # The pair cosine uses one blocked GEMM per cell with round_to

@@ -577,15 +577,12 @@ def q_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = dedupfns.minhash_candidate_pairs(
         with_sig, id_col="doc_id", sig_col="minhash", num_hashes=16, band_size=2
     ).filter(F.col("est_jaccard") * 16 >= 4).select("doc_a", "doc_b")
-    # r13: materialize the LSH-bounded candidate list once (it feeds the
-    # broadcast, the semi-filter id list, and the verify join) and run
-    # the verify stage in hash-once mode — lazily the md5-per-shingle
-    # work ran twice over EVERY doc, candidates or not (guide §3.2/§1.2;
-    # r12 profile: 32 s cpu in the verify stage). Checkpoint blocks are
-    # released when the next registered query builds.
+    # Materialize the LSH-bounded candidate list once: it feeds the
+    # broadcast, the semi-filter id list and the verify join. Checkpoint
+    # blocks are released when the next registered query builds.
     cand = defer_release(cand.localCheckpoint(eager=True))
     verified = dedupfns.verify_candidate_jaccard(
-        docs, cand, "doc_id", "text", k=2, prehash_once=True
+        docs, cand, "doc_id", "text", k=2
     )
     return verified.filter(F.col("jaccard") >= 0.5).withColumn(
         "jaccard", F.round(F.col("jaccard"), 6)

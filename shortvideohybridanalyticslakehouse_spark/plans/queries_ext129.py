@@ -162,15 +162,12 @@ FROM maj GROUP BY 1
 
 def _band_keys_kernel(it):
     """The 16 hyperplane sign bits + band-key explode as one numpy int64
-    GEMM against the (16 x 64) plane matrix per batch, instead of 16
-    interpreted `aggregate(zip_with())` 64-element folds per ROW (guide
-    §4.2 — the map stage feeding the bucket shuffle was the lane's
-    hottest stage). Bit semantics are those of the per-row fold
-    `when(dot >= 0, 1).otherwise(0)`: NULL vector -> NULL dot -> all
-    bits 0; EMPTY vector -> fold init 0 -> s = 0 >= 0 = all bits
-    1; short vector -> plane sliced to len(v) (== zero-padded dot);
-    v longer than the 64-entry plane -> zip_with NULL-pads -> NULL dot
-    -> bits 0. Emits the exploded (vec_id, label, v, bkey) rows the
+    GEMM against the (16 x 64) plane matrix per batch (guide §4.2: the
+    map stage feeding the bucket shuffle is the lane's hottest stage).
+    Bit semantics are `dot >= 0 -> 1, else 0` with: NULL vector -> all
+    bits 0; EMPTY vector -> dot 0 -> all bits 1; short vector -> plane
+    sliced to len(v) (== zero-padded dot); v longer than the 64-entry
+    plane -> bits 0. Emits the exploded (vec_id, label, v, bkey) rows the
     downstream per-bucket GEMM groups on."""
     import numpy as np  # noqa: PLC0415 — Arrow path only
     import pandas as pd  # noqa: PLC0415

@@ -99,13 +99,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already-reduced side, safe to persist at any scale.
     per_user = defer_release(per_user.localCheckpoint(eager=True))
 
-    # r13 (guide §1.2): ONE partitioned rank pass over the 3-way
-    # union instead of three independent global passes — same exact
-    # row numbers (row_number partitioned by dim over (_key, user_id)
-    # == each dim's global rank; approx cuts only balance buckets),
-    # one approx_percentile action + one ranked join instead of
-    # three of each (the r12 profile shows this lane as 82
-    # plan/action-overhead stages totalling 4 s of executor time).
+    # ONE partitioned rank pass over the 3-way union (guide §1.2):
+    # row_number partitioned by dim over (_key, user_id) == each dim's
+    # global rank (approx cuts only balance buckets), so the three
+    # dims share one approx_percentile action and one ranked join.
     dims = (
         per_user.select(
             "user_id",

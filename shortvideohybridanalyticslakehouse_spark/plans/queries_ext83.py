@@ -133,11 +133,9 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = similarity.int_gram_stats(
         emb, "vec_id", "embedding", dim=_D, scale=_SCALE
     )
-    # r13 (the markov-lane treatment, guide §1.2/§5): the 8-round
-    # power iteration runs on a SINGLE 64x64 matrix — as a Catalyst
-    # expression it was a ~2 s single-task stage of interpreted array
-    # HOFs (plus its codegen/planning cost) that scales with NOTHING.
-    # Collect the 4161 exact-integer stat rows (produced by the
+    # The 8-round power iteration runs on a SINGLE 64x64 matrix, so
+    # its cost scales with nothing (guide §1.2/§5). Collect the 4161
+    # exact-integer stat rows (produced by the
     # distributed ANSI-guarded GEMM SUM, which keeps the overflow gate)
     # and fold on the driver with bit-identical arithmetic
     # (driverfold.pca_power_fold).

@@ -152,9 +152,7 @@ def _kmeans_partials_kernel(
     oracle does). All arithmetic is int64
     (micro-quantized inputs keep every product far below 2^63), and
     integer addition is associative — the numpy fold is bit-identical to
-    a per-row Catalyst HOF fold, just ~10x cheaper per row (guide §4.2:
-    the r12 profile shows 5-7 s of executor CPU per Lloyd round at sf0.1
-    in the zip_with/aggregate assignment + posexplode re-aggregation)."""
+    the oracle's SQL fold whatever the batch split (guide §4.2)."""
     mc = measure_cents if measure_cents is not None else assign_cents
 
     def fn(it):

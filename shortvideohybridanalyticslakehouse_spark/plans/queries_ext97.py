@@ -414,11 +414,10 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cells")
     ).select(F.transform(F.col("cells"), lambda c: c["p"]).alias("p"))
 
-    # r13: the 20-iteration power fold over the collected 25-double
-    # matrix is O(1) scalar work — folded on the driver with
-    # bit-identical arithmetic (functions/driverfold.py, guide §1.2)
-    # instead of a giant Catalyst expression. The 5x5 grid left join
-    # yields exactly one cell per (i, j).
+    # The 20-iteration power fold over the collected 25-double matrix
+    # is O(1) scalar work — folded on the driver with bit-identical
+    # arithmetic (functions/driverfold.py, guide §1.2). The 5x5 grid
+    # left join yields exactly one cell per (i, j).
     pm = list(pmat.collect()[0][0])
     if len(pm) != _N_STATES * _N_STATES:
         raise ValueError(f"transition matrix has {len(pm)} cells")

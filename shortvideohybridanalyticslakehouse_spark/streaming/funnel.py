@@ -104,10 +104,9 @@ def build_curation_probe_table(
         F.lit(1).alias("_probe_hit"),
     )
     # distinct gram hash60s per doc from ONE Arrow batch kernel
-    # (hashlib md5 == Spark md5 on UTF-8 bytes) instead of an
-    # interpreted concat-per-window + md5-per-gram lambda chain;
-    # the downstream explode+distinct consumes a SET, so set
-    # equality of the hashes is result equality (guide §4.2)
+    # (hashlib md5 == Spark md5 on UTF-8 bytes); the downstream
+    # explode+distinct consumes a SET, so set equality of the hashes
+    # is result equality (guide §4.2)
     _htoks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     gram_col = F.explode(dedupfns.gram_hash_udf(gram_k)(_htoks)).alias(
         "g"
@@ -179,12 +178,9 @@ def ingest_curation_plan(
         toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
     )
     # max token multiplicity as the longest equal-run of the SORTED
-    # token array — O(n log n) sort + one O(n) fold, instead of the
-    # quadratic transform-over-distinct x filter-over-all scan
-    # (interpreted HOF lambdas both ways, so the op count is what
-    # matters; guide §1.2). Identical integers: runs of equal
-    # strings in a sorted array ARE the multiplicities, and split()
-    # never yields NULL elements.
+    # token array — O(n log n) sort + one O(n) fold (guide §1.2):
+    # runs of equal strings in a sorted array ARE the multiplicities,
+    # and split() never yields NULL elements.
     run_max = F.aggregate(
         F.array_sort(toks),
         F.struct(
@@ -206,9 +202,8 @@ def ingest_curation_plan(
         ),
         lambda a: a["best"],
     )
-    # empty token array -> fold returns 0; array_max over the
-    # transform path returns NULL there. Reproduce the NULL so the
-    # quality predicate decides identically.
+    # empty token array -> NULL top count, as the oracle's max(cnt)
+    # over no tokens (the fold alone would return 0).
     top_cnt = F.when(F.size(toks) == 0, F.lit(None)).otherwise(
         run_max
     ).cast("bigint")
@@ -251,9 +246,8 @@ def ingest_curation_plan(
     # left join against the unified static table serve BOTH screens.
     _toks2 = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     # signature + gram hashes from Arrow batch kernels (exact-twin
-    # md5/affine arithmetic in numpy) instead of per-row interpreted
-    # HOF minima and per-gram lambda hashing — the hottest CPU of
-    # this plan's single pass (guide §4.2). Tokenization stays in
+    # md5/affine arithmetic in numpy) — the hottest CPU of this
+    # plan's single pass (guide §4.2). Tokenization stays in
     # Catalyst so Java-regex split semantics are untouched.
     with_sig = s3.withColumn(
         "minhash", dedupfns.minhash_sig_udf(2, num_hashes)(_toks2)
