@@ -535,8 +535,8 @@ def verify_candidate_jaccard(
     The verify stage of the LSH pipeline. Docs are semi-filtered to ids
     that appear in a candidate pair (the id list is at most 2x the
     LSH-bounded pair count), each doc's shingles are hashed once into a
-    per-doc hash array, and that array is checkpointed (released when the
-    next registered query builds). Both join sides explode from the
+    per-doc hash array, and that array is materialized in the query's
+    scope. Both join sides explode from the
     materialized arrays, so the md5-per-shingle work runs once per
     candidate doc rather than once per join side over every doc. Two
     equi-joins then pin each exploded side to the candidate list before
@@ -545,7 +545,7 @@ def verify_candidate_jaccard(
     so pass it materialized when it is expensive to recompute.
     """
     from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-        defer_release,
+        materialize,
     )
 
     ids = (
@@ -560,7 +560,7 @@ def verify_candidate_jaccard(
             "hs"
         ),
     ).withColumn("sh_size", F.size("hs"))
-    hs = defer_release(hs.localCheckpoint(eager=True))
+    hs = materialize(hs)
     ex = hs.select(id_col, "sh_size", F.explode("hs").alias("shingle_h"))
     a = ex.select(
         F.col(id_col).alias("doc_a"),
@@ -673,19 +673,20 @@ def reband_hot_buckets(
     exit as soon as no bucket is hot (the only case the oracle scales ever
     see). The per-level collect is bounded by rows/bucket_cap keys.
 
-    Each level's frontier is persisted (skinny id+fingerprint+key rows) so
-    the next count and the final scorer reuse it instead of recomputing the
-    fingerprint lineage.
+    Each level's frontier is materialized (skinny id+fingerprint+key rows)
+    so the next count and the final scorer reuse it instead of recomputing
+    the fingerprint lineage; a superseded frontier is released as soon as
+    the next one is in blocks, and the last one lives in the query's scope.
     """
-    from pyspark import StorageLevel
+    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+        materialize,
+        release_materialized,
+    )
 
     def _hot_count(df: DataFrame) -> list:
-        """One job: a full-pass bucket count that BOTH materializes the
-        freshly-persisted frontier (groupBy consumes every cached row)
-        and returns the next level's hot-bucket list — fusing the old
-        separate `nxt.count()` materialization job with the next
-        iteration's count job (r13, guide §1.2: one pass per level
-        instead of two)."""
+        """One job: a full-pass bucket count that BOTH fills the lazily
+        materialized frontier (groupBy consumes every row) and returns the
+        next level's hot-bucket list — one pass per level (guide §1.2)."""
         return (
             df.groupBy("bkey")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -693,7 +694,7 @@ def reband_hot_buckets(
             .collect()
         )
 
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    banded = materialize(banded, eager=False)
     hot_rows = _hot_count(banded)
     for lvl in range(1, max_extra_levels + 1):
         if not hot_rows:
@@ -758,12 +759,11 @@ def reband_hot_buckets(
             .filter(F.col("_drop").isNull())
             .drop("_drop", "_parent", "_g", "_pn")
         )
-        nxt = cold.unionByName(hot_ext).persist(StorageLevel.MEMORY_AND_DISK)
-        # Materialize the new frontier BEFORE dropping the old one so the
-        # next level's count (and the final scorer) read cached rows instead
-        # of recomputing the whole fingerprint lineage from scratch.
+        nxt = materialize(cold.unionByName(hot_ext), eager=False)
+        # Fill the new frontier BEFORE dropping the old one: its rows are
+        # computed from the old frontier's blocks.
         hot_rows = _hot_count(nxt)
-        banded.unpersist()
+        release_materialized(banded)
         banded = nxt
     return banded
 

@@ -44,9 +44,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
-)
+from shortvideohybridanalyticslakehouse_spark.plans.registry import materialize
 
 
 def with_tiny_rank(
@@ -126,7 +124,7 @@ def with_distributed_row_number(
     remaining columns break ties. Adds ``rn_col`` (1-based bigint) and
     ``n_col`` (rows in the group).
 
-    ``single_pass=True`` materializes ``df`` once (localCheckpoint)
+    ``single_pass=True`` materializes ``df`` once (registry.materialize)
     before the cuts pre-pass: the helper reads its input three times
     (approx_percentile cuts, bucket counts, the ranked join), so when
     ``df`` is a DERIVED frame (joins/explodes upstream) the pre-pass
@@ -141,10 +139,7 @@ def with_distributed_row_number(
     part_cols = list(part_cols)
     order_cols = list(order_cols)
     if single_pass:
-        # released when the NEXT registered query builds (the returned
-        # O(rows) plan still reads these blocks, so an in-builder release
-        # is impossible — ADVICE r12)
-        df = defer_release(df.localCheckpoint())
+        df = materialize(df)
     v = order_cols[0]
 
     probs = [i / n_buckets for i in range(1, n_buckets)]
@@ -241,10 +236,7 @@ def with_distributed_prefix_sum(
     part_cols = list(part_cols)
     order_cols = list(order_cols)
     if single_pass:
-        # released when the NEXT registered query builds (the returned
-        # O(rows) plan still reads these blocks, so an in-builder release
-        # is impossible — ADVICE r12)
-        df = defer_release(df.localCheckpoint())
+        df = materialize(df)
     v = order_cols[0]
 
     probs = [i / n_buckets for i in range(1, n_buckets)]
@@ -353,10 +345,7 @@ def with_distributed_prefix_max(
     part_cols = list(part_cols)
     order_cols = list(order_cols)
     if single_pass:
-        # released when the NEXT registered query builds (the returned
-        # O(rows) plan still reads these blocks, so an in-builder release
-        # is impossible — ADVICE r12)
-        df = defer_release(df.localCheckpoint())
+        df = materialize(df)
     v = order_cols[0]
 
     probs = [i / n_buckets for i in range(1, n_buckets)]

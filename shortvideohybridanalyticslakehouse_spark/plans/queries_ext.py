@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import dedupfns, similarity, text
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -573,14 +573,13 @@ def q_near_dup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash_candidate_pairs (both band-join sides + both est-Jaccard
     # re-attach joins); checkpoint it once so the shingle+md5+16-min
     # aggregation subtree executes once, not per consumer (guide §5).
-    with_sig = defer_release(with_sig.localCheckpoint())
+    with_sig = materialize(with_sig)
     cand = dedupfns.minhash_candidate_pairs(
         with_sig, id_col="doc_id", sig_col="minhash", num_hashes=16, band_size=2
     ).filter(F.col("est_jaccard") * 16 >= 4).select("doc_a", "doc_b")
     # Materialize the LSH-bounded candidate list once: it feeds the
-    # broadcast, the semi-filter id list and the verify join. Checkpoint
-    # blocks are released when the next registered query builds.
-    cand = defer_release(cand.localCheckpoint(eager=True))
+    # broadcast, the semi-filter id list and the verify join.
+    cand = materialize(cand)
     verified = dedupfns.verify_candidate_jaccard(
         docs, cand, "doc_id", "text", k=2
     )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import (
@@ -181,9 +182,8 @@ def q_item_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_shuf = scaled_shuffle_partitions(ev_scan, rows_per_partition=250_000)
     # the sessionization (events scan + two windows + distinct) feeds
     # three consumers (pairs, per-item counts, session count):
-    # materialize it once (guide §1.2/§5), released via finalize_bounded
-    # when the bounded result materializes
-    bounded = _bounded_session_items(spark, sf_dir).localCheckpoint(eager=True)
+    # materialize it once (guide §1.2/§5)
+    bounded = materialize(_bounded_session_items(spark, sf_dir))
     pairs = _pairs(bounded, n_shuf)
     item_sessions = bounded.groupBy("item").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sess")
@@ -228,7 +228,7 @@ def q_item_covisitation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(50)
     )
-    return finalize_bounded(result, bounded)
+    return finalize_bounded(result)
 
 
 @register("item_cf_recommendations", _RECS_ORACLE)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -196,14 +197,9 @@ def q_covisitation_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_m = ev.crossJoin(anchor)
 
     # train feeds BOTH the candidate miner and the session count, evale
-    # BOTH probe sides — eagerly materialize each once (guide §1.2/§5),
-    # released via finalize_bounded when the 1-row report materializes
-    train = _session_items(ev_m.filter(sec <= F.col("mid"))).localCheckpoint(
-        eager=True
-    )
-    evale = _session_items(ev_m.filter(sec > F.col("mid"))).localCheckpoint(
-        eager=True
-    )
+    # BOTH probe sides — eagerly materialize each once (guide §1.2/§5)
+    train = materialize(_session_items(ev_m.filter(sec <= F.col("mid"))))
+    evale = materialize(_session_items(ev_m.filter(sec > F.col("mid"))))
 
     recs = covis_candidates(train)
 
@@ -250,4 +246,4 @@ def q_covisitation_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST((sum(hit) * 1000000) DIV count(1) AS BIGINT)"
         ).alias("hit_rate_micro"),
     ).select("n_train_sessions", "n_eval_probes", "n_hits", "hit_rate_micro")
-    return finalize_bounded(result, train, evale)
+    return finalize_bounded(result)

@@ -19,7 +19,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext106 import (
     q_item_cf_recommendations,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -62,7 +62,7 @@ def q_rec_table_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (profiled: its 1-task cosine stages appear twice per trial).
     # Checkpoint the O(items x 3) rec table once (eager: the stats
     # broadcast races a lazy one).
-    recs = defer_release(recs.localCheckpoint(eager=True))
+    recs = materialize(recs)
     ev = load_table(spark, sf_dir, "events")
     catalog = F.broadcast(
         ev.select(

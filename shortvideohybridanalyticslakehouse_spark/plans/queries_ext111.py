@@ -32,7 +32,10 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext6 import (
 from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
     local_rows_df,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    materialize,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 # split buckets: 0-7 train, 8 val, 9 test (the train_val_test_split mix)
@@ -111,12 +114,12 @@ def q_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", ensure_parallelism=True)
     # The Jaccard self-join is this lane's dominant cost and its output is
     # consumed THREE times (CC edge list, leak audit join x2 sides);
-    # localCheckpoint executes it once — the r11 shape re-derived it from
-    # the scan for the leak audit at final-action time (guide §5 cache
+    # materializing executes it once instead of re-deriving it from the
+    # scan for the leak audit at final-action time (guide §5 cache
     # discipline; measured r12: 7.4 s -> 4.9 s for the lane).
-    edges = dedupfns.exact_jaccard_pairs(
-        docs, "doc_id", "text", k=3, min_jaccard=0.5
-    ).localCheckpoint(eager=True)
+    edges = materialize(
+        dedupfns.exact_jaccard_pairs(docs, "doc_id", "text", k=3, min_jaccard=0.5)
+    )
     labels = connected_components(edges, "doc_a", "doc_b")
     assigned = (
         docs.select("doc_id", "n_chars")
@@ -251,10 +254,10 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     nparts = max(2, spark.sparkContext.defaultParallelism)
-    ranged = (
-        pur_raw.repartitionByRange(nparts, "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranged = materialize(
+        pur_raw.repartitionByRange(nparts, "event_id").withColumn(
+            "pid", F.spark_partition_id()
+        )
     )
     counts = {
         r["pid"]: r["n"]

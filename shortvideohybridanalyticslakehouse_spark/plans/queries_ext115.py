@@ -37,6 +37,7 @@ from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -130,7 +131,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = base.filter(F.col("vec_id") == MMR_QUERY_ID).select(
         F.col("v").alias("qv")
     )
-    cand = (
+    cand = materialize(
         base.filter(F.col("vec_id") != MMR_QUERY_ID)
         .crossJoin(F.broadcast(q))
         .select(
@@ -138,39 +139,29 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
         .limit(MMR_N_CAND)
-        .persist()
     )
     a = cand.select(
         F.col("vec_id").alias("ca"), F.col("v").alias("va"), "rel"
     )
     b = cand.select(F.col("vec_id").alias("cb"), F.col("v").alias("vb"))
-    sims = (
-        a.join(F.broadcast(b), F.col("ca") != F.col("cb"))
-        .select(
+    sims = materialize(
+        a.join(F.broadcast(b), F.col("ca") != F.col("cb")).select(
             "ca",
             "cb",
             "rel",
             _int_dot(F.col("va"), F.col("vb")).alias("sim"),
         )
-        .persist()
     )
 
     selected: list[int] = []
     out_rows: list[tuple[int, int, int, int, int]] = []
-    try:
-        for rnd in range(1, MMR_K + 1):
-            rows = _mmr_round(cand, sims, selected, rnd).collect()
-            if not rows:  # pool smaller than MMR_K: greedy set exhausted
-                break
-            r = rows[0]
-            selected.append(r.vec_id)
-            out_rows.append(
-                (rnd, r.vec_id, r.rel, r.max_sim, r.rel - r.max_sim)
-            )
-    except Exception:
-        cand.unpersist()
-        sims.unpersist()
-        raise
+    for rnd in range(1, MMR_K + 1):
+        rows = _mmr_round(cand, sims, selected, rnd).collect()
+        if not rows:  # pool smaller than MMR_K: greedy set exhausted
+            break
+        r = rows[0]
+        selected.append(r.vec_id)
+        out_rows.append((rnd, r.vec_id, r.rel, r.max_sim, r.rel - r.max_sim))
 
     result = local_rows_df(
         spark,
@@ -178,7 +169,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round bigint, vec_id bigint, rel bigint, max_sim bigint, "
         "mmr_score bigint",
     )
-    return finalize_bounded(result, cand, sims)
+    return finalize_bounded(result)
 
 
 def _mmr_round(cand, sims, selected: list[int], rnd: int):

@@ -28,7 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    finalize_bounded,
+    materialize,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _DAMP = "0.85"
@@ -127,14 +131,12 @@ def textrank_over(docs: DataFrame) -> DataFrame:
     # weighted degree is loop-invariant: attach once (ext38 lesson)
     from pyspark.sql import Window as _W
 
-    # r13: eager localCheckpoint instead of lazy persist — every
-    # iteration's analyzed plan otherwise carries (and the FIRST
-    # consumer re-executes) the full pairs pipeline; nodes now derives
-    # from the materialized edge list instead of re-running it
-    # (guide §1.2/§5).
-    edges = und.withColumn(
-        "wdeg", F.sum("w").over(_W.partitionBy("src"))
-    ).localCheckpoint(eager=True)
+    # materialized eagerly: every iteration's analyzed plan would otherwise
+    # carry (and the FIRST consumer re-execute) the full pairs pipeline;
+    # nodes derives from the materialized edge list (guide §1.2/§5).
+    edges = materialize(
+        und.withColumn("wdeg", F.sum("w").over(_W.partitionBy("src")))
+    )
     nodes = edges.select(F.col("src").alias("term")).distinct()
     rank = nodes.withColumn("rank", F.lit("1.0").cast("decimal(28,12)"))
     for _ in range(_ITERS):
@@ -170,8 +172,4 @@ def textrank_over(docs: DataFrame) -> DataFrame:
         .orderBy(F.col("textrank").desc(), F.col("term").asc())
         .limit(_TOPK)
     )
-    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-        finalize_bounded,
-    )
-
-    return finalize_bounded(top, edges)
+    return finalize_bounded(top)

@@ -47,8 +47,8 @@ from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
     local_rows_df,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -391,7 +391,7 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     center: the rework keeps one O(N) frame of (vec_id, v, dmin) and per
     round folds `least(dmin, d2(v, new_center))` with the new center as
     a LITERAL 64-int array (no join at all, so no broadcast and no
-    shuffle in the fold), localCheckpointing each round to truncate
+    shuffle in the fold), materializing each round to truncate
     lineage (the HITS pattern). O(N*K) total work, O(N) peak storage.
     The oracle is unchanged — it replays the same greedy rounds.
     """
@@ -418,10 +418,11 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if seed:
         out_rows.append((1, seed[0].vec_id, 0))
-        cur = defer_release(
-            base.filter(F.col("vec_id") != seed[0].vec_id)
-            .select("vec_id", "v", _sqd_to(list(seed[0].v)).alias("dmin"))
-            .localCheckpoint(eager=False)
+        cur = materialize(
+            base.filter(F.col("vec_id") != seed[0].vec_id).select(
+                "vec_id", "v", _sqd_to(list(seed[0].v)).alias("dmin")
+            ),
+            eager=False,
         )
         for rnd in range(2, _KC_K + 1):
             rows = (
@@ -433,16 +434,15 @@ def q_kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             out_rows.append((rnd, rows[0].vec_id, rows[0].dmin))
             if rnd < _KC_K:
-                cur = defer_release(
-                    cur.filter(F.col("vec_id") != rows[0].vec_id)
-                    .select(
+                cur = materialize(
+                    cur.filter(F.col("vec_id") != rows[0].vec_id).select(
                         "vec_id",
                         "v",
                         F.least(
                             F.col("dmin"), _sqd_to(list(rows[0].v))
                         ).alias("dmin"),
-                    )
-                    .localCheckpoint(eager=False)
+                    ),
+                    eager=False,
                 )
     result = local_rows_df(
         spark, out_rows, "round bigint, vec_id bigint, dist_sq bigint"
@@ -638,16 +638,15 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executors, not partitions).
     n_li = load_table(spark, sf_dir, "lineitem").count()
     nparts = int(max(1, min(4096, -(-n_li // 150_000))))
-    e = (
+    e = materialize(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select("cust", "part")
         .distinct()
         .coalesce(nparts)
-        .persist()
     )
     # Join-strategy selection (guide §3.1): the score frames are
     # O(distinct nodes) <= O(lineitem rows); when that bound fits the
-    # broadcast envelope, BHJ leaves the persisted edge list unshuffled
+    # broadcast envelope, BHJ leaves the materialized edge list unshuffled
     # all K rounds (the big side never crosses an Exchange) and the
     # groupBy gets map-side partial aggregation. Past the envelope
     # (billions of nodes at 100 TB) fall back to the shuffle join —
@@ -666,29 +665,27 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = None
     for _ in range(_HITS_ROUNDS):
-        # localCheckpoint the RAW sums (one execution of the heavy
+        # materialize the RAW sums (one execution of the heavy
         # join+agg), fold the 1-row max to the driver from the
         # materialized frame, and normalize LAZILY on top of the
         # checkpoint. The previous shape (broadcast-max crossJoin, then
         # checkpoint the normalized frame) executed every join+agg
         # TWICE per half-round — once building the broadcast, once for
         # the checkpoint.
-        hraw = (
+        hraw = materialize(
             e.join(_scores_side(a), "part")
             .groupBy("cust")
             .agg(F.sum("s").cast("bigint").alias("s"))
-            .localCheckpoint(eager=True)
         )
         hmx = hraw.agg(F.max("s").alias("mx")).collect()[0][0] or 1
         h = hraw.select(
             "cust",
             F.expr(f"CAST(s * 1000000 DIV {int(hmx)} AS BIGINT)").alias("s"),
         )
-        araw = (
+        araw = materialize(
             e.join(_scores_side(h), "cust")
             .groupBy("part")
             .agg(F.sum("s").cast("bigint").alias("s"))
-            .localCheckpoint(eager=True)
         )
         amx = araw.agg(F.max("s").alias("mx")).collect()[0][0] or 1
         a = araw.select(
@@ -714,7 +711,7 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).filter(F.col("rank") <= _HITS_TOP)
         )
     )
-    return finalize_bounded(tops, e)
+    return finalize_bounded(tops)
 
 
 # --------------------------------------------------------------------------

@@ -44,6 +44,7 @@ from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -104,58 +105,54 @@ def q_esd_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/std over the survivors and removes the max-|z| day (z floored
     to micro; ties to the earlier day)."""
     ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
+    daily = materialize(
+        ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("c")
+        )
     )
     removed: list = []
     out_rows: list[tuple] = []
-    try:
-        for rnd in range(1, _ESD_K + 1):
-            rest = daily.filter(~F.col("day").isin(removed))
-            m = rest.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("c").cast("bigint").alias("s"),
-                F.sum(F.col("c").cast("decimal(38,0)") * F.col("c")).alias(
-                    "sq"
-                ),
-            )
-            mean = F.col("s").cast("double") / F.col("n")
-            var = (
-                F.col("n") * F.col("sq").cast("double")
-                - F.col("s").cast("double") * F.col("s")
-            ) / (F.col("n").cast("double") * (F.col("n") - 1))
-            rows = (
-                rest.crossJoin(F.broadcast(m))
-                .select(
-                    "day",
-                    "c",
-                    F.floor(
-                        F.abs(F.col("c") - mean)
-                        / F.sqrt(var)
-                        * F.lit(1000000.0)
-                    )
-                    .cast("bigint")
-                    .alias("z_micro"),
+    for rnd in range(1, _ESD_K + 1):
+        rest = daily.filter(~F.col("day").isin(removed))
+        m = rest.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("c").cast("bigint").alias("s"),
+            F.sum(F.col("c").cast("decimal(38,0)") * F.col("c")).alias(
+                "sq"
+            ),
+        )
+        mean = F.col("s").cast("double") / F.col("n")
+        var = (
+            F.col("n") * F.col("sq").cast("double")
+            - F.col("s").cast("double") * F.col("s")
+        ) / (F.col("n").cast("double") * (F.col("n") - 1))
+        rows = (
+            rest.crossJoin(F.broadcast(m))
+            .select(
+                "day",
+                "c",
+                F.floor(
+                    F.abs(F.col("c") - mean)
+                    / F.sqrt(var)
+                    * F.lit(1000000.0)
                 )
-                .orderBy(F.col("z_micro").desc(), F.col("day").asc())
-                .limit(1)
-                .collect()
+                .cast("bigint")
+                .alias("z_micro"),
             )
-            if not rows:
-                break
-            removed.append(rows[0].day)
-            out_rows.append((rnd, rows[0].day, rows[0].c, rows[0].z_micro))
-    except Exception:
-        daily.unpersist()
-        raise
+            .orderBy(F.col("z_micro").desc(), F.col("day").asc())
+            .limit(1)
+            .collect()
+        )
+        if not rows:
+            break
+        removed.append(rows[0].day)
+        out_rows.append((rnd, rows[0].day, rows[0].c, rows[0].z_micro))
     result = local_rows_df(
         spark,
         out_rows,
         "round bigint, day timestamp, n_events bigint, z_micro bigint",
     )
-    return finalize_bounded(result, daily)
+    return finalize_bounded(result)
 
 
 # --------------------------------------------------------------------------

@@ -37,6 +37,7 @@ from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -280,15 +281,17 @@ def q_binseg_daily_changepoints(
         Window.unboundedPreceding, Window.currentRow
     )
     word = Window.orderBy(F.col("day").asc())
-    pre = daily.select(
-        "day",
-        "c",
-        F.row_number().over(word).cast("bigint").alias("idx"),
-        F.sum("c").over(w).cast("bigint").alias("cum_s"),
-        F.sum(F.col("c").cast("decimal(38,0)") * F.col("c"))
-        .over(w)
-        .alias("cum_sq"),
-    ).persist()
+    pre = materialize(
+        daily.select(
+            "day",
+            "c",
+            F.row_number().over(word).cast("bigint").alias("idx"),
+            F.sum("c").over(w).cast("bigint").alias("cum_s"),
+            F.sum(F.col("c").cast("decimal(38,0)") * F.col("c"))
+            .over(w)
+            .alias("cum_sq"),
+        )
+    )
     t = pre.agg(
         F.max("idx").alias("n"),
         F.max("cum_s").alias("s"),
@@ -301,23 +304,74 @@ def q_binseg_daily_changepoints(
         ) / ln.cast("double")
 
     out_rows: list[tuple] = []
-    try:
-        cost1 = sse(
-            F.col("cum_sq"), F.lit(0), F.col("cum_s"), F.lit(0), F.col("idx")
-        ) + sse(
-            F.col("sq"),
-            F.col("cum_sq"),
-            F.col("s"),
-            F.col("cum_s"),
-            F.col("n") - F.col("idx"),
+    cost1 = sse(
+        F.col("cum_sq"), F.lit(0), F.col("cum_s"), F.lit(0), F.col("idx")
+    ) + sse(
+        F.col("sq"),
+        F.col("cum_sq"),
+        F.col("s"),
+        F.col("cum_s"),
+        F.col("n") - F.col("idx"),
+    )
+    r1 = (
+        pre.crossJoin(F.broadcast(t))
+        .filter(F.col("idx") < F.col("n"))
+        .select(
+            "idx",
+            "day",
+            F.floor(cost1 * F.lit(1000000.0))
+            .cast("bigint")
+            .alias("cost_micro"),
         )
-        r1 = (
-            pre.crossJoin(F.broadcast(t))
-            .filter(F.col("idx") < F.col("n"))
-            .select(
+        .orderBy(F.col("cost_micro").asc(), F.col("idx").asc())
+        .limit(1)
+        .collect()
+    )
+    if r1:
+        k1 = r1[0]
+        out_rows.append((1, k1.day, k1.cost_micro))
+        pa = pre.select(
+            F.col("idx").alias("ia"),
+            F.col("cum_s").alias("sa"),
+            F.col("cum_sq").alias("qa"),
+        )
+        pb = pre.select(
+            F.col("idx").alias("ib"),
+            F.col("cum_s").alias("sb"),
+            F.col("cum_sq").alias("qb"),
+        )
+        k = pre.crossJoin(F.broadcast(t)).filter(
+            (F.col("idx") < F.col("n")) & (F.col("idx") != F.lit(k1.idx))
+        )
+        cand = k.join(
+            F.broadcast(pa),
+            F.col("ia") == F.least(F.col("idx"), F.lit(k1.idx)),
+        ).join(
+            F.broadcast(pb),
+            F.col("ib") == F.greatest(F.col("idx"), F.lit(k1.idx)),
+        )
+        cost2 = (
+            sse(F.col("qa"), F.lit(0), F.col("sa"), F.lit(0), F.col("ia"))
+            + sse(
+                F.col("qb"),
+                F.col("qa"),
+                F.col("sb"),
+                F.col("sa"),
+                F.col("ib") - F.col("ia"),
+            )
+            + sse(
+                F.col("sq"),
+                F.col("qb"),
+                F.col("s"),
+                F.col("sb"),
+                F.col("n") - F.col("ib"),
+            )
+        )
+        r2 = (
+            cand.select(
                 "idx",
                 "day",
-                F.floor(cost1 * F.lit(1000000.0))
+                F.floor(cost2 * F.lit(1000000.0))
                 .cast("bigint")
                 .alias("cost_micro"),
             )
@@ -325,67 +379,12 @@ def q_binseg_daily_changepoints(
             .limit(1)
             .collect()
         )
-        if r1:
-            k1 = r1[0]
-            out_rows.append((1, k1.day, k1.cost_micro))
-            pa = pre.select(
-                F.col("idx").alias("ia"),
-                F.col("cum_s").alias("sa"),
-                F.col("cum_sq").alias("qa"),
-            )
-            pb = pre.select(
-                F.col("idx").alias("ib"),
-                F.col("cum_s").alias("sb"),
-                F.col("cum_sq").alias("qb"),
-            )
-            k = pre.crossJoin(F.broadcast(t)).filter(
-                (F.col("idx") < F.col("n")) & (F.col("idx") != F.lit(k1.idx))
-            )
-            cand = k.join(
-                F.broadcast(pa),
-                F.col("ia") == F.least(F.col("idx"), F.lit(k1.idx)),
-            ).join(
-                F.broadcast(pb),
-                F.col("ib") == F.greatest(F.col("idx"), F.lit(k1.idx)),
-            )
-            cost2 = (
-                sse(F.col("qa"), F.lit(0), F.col("sa"), F.lit(0), F.col("ia"))
-                + sse(
-                    F.col("qb"),
-                    F.col("qa"),
-                    F.col("sb"),
-                    F.col("sa"),
-                    F.col("ib") - F.col("ia"),
-                )
-                + sse(
-                    F.col("sq"),
-                    F.col("qb"),
-                    F.col("s"),
-                    F.col("sb"),
-                    F.col("n") - F.col("ib"),
-                )
-            )
-            r2 = (
-                cand.select(
-                    "idx",
-                    "day",
-                    F.floor(cost2 * F.lit(1000000.0))
-                    .cast("bigint")
-                    .alias("cost_micro"),
-                )
-                .orderBy(F.col("cost_micro").asc(), F.col("idx").asc())
-                .limit(1)
-                .collect()
-            )
-            if r2:
-                out_rows.append((2, r2[0].day, r2[0].cost_micro))
-    except Exception:
-        pre.unpersist()
-        raise
+        if r2:
+            out_rows.append((2, r2[0].day, r2[0].cost_micro))
     result = local_rows_df(
         spark, out_rows, "split_rank bigint, day timestamp, cost_micro bigint"
     )
-    return finalize_bounded(result, pre)
+    return finalize_bounded(result)
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -122,7 +122,7 @@ def q_croston_intermittent_forecast(
     # each re-ran the lineitem x orders join+aggregate (the lane's
     # three ~7 MB-shuffle stages). Checkpoint the O(part x week)
     # frame once (eager: sibling branches race a lazy one).
-    weekly = defer_release(weekly.localCheckpoint(eager=True))
+    weekly = materialize(weekly)
     top_parts = (
         weekly.groupBy("part")
         .agg(F.sum("qty").alias("tq"))

@@ -44,6 +44,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext106 import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import (
@@ -355,7 +356,7 @@ def q_covis_rule_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows_per_partition=250_000,
     )
     # multi-consumer sessionization: materialized once (ext106)
-    bounded = _bounded_session_items(spark, sf_dir).localCheckpoint(eager=True)
+    bounded = materialize(_bounded_session_items(spark, sf_dir))
     pairs = _pairs(bounded, n_shuf)
     item_sessions = bounded.groupBy("item").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sess")
@@ -415,4 +416,4 @@ def q_covis_rule_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("confidence_micro"), F.asc("ante"), F.asc("cons"))
         .limit(_RULE_TOP)
     )
-    return finalize_bounded(result, bounded)
+    return finalize_bounded(result)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -207,7 +207,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint blocks; the main query then reads them — one events
     # scan + one per-user aggregation total, no separate
     # materialization job
-    per_user = defer_release(per_user.localCheckpoint(eager=False))
+    per_user = materialize(per_user, eager=False)
     horizon = F.broadcast(
         per_user.agg(F.max("dmax_u").alias("dmax"))
     )

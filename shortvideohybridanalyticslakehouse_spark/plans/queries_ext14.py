@@ -25,7 +25,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext import (  # noqa
     _duck_shingles,
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -159,7 +159,7 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.explode(dedupfns.shingles(F.col("text"), 8)).alias("gram"),
     ).select("doc_id", "bucket", hash60(F.col("gram")).alias("gh"))
-    ex = defer_release(ex.localCheckpoint(eager=True))
+    ex = materialize(ex)
     train_g = ex.filter(F.col("bucket") < 80).select("gh").distinct()
     test_pairs = ex.filter(F.col("bucket") >= 90).select("doc_id", "gh").distinct()
     n_test = test_pairs.agg(

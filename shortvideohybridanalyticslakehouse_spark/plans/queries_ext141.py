@@ -52,7 +52,10 @@ from pyspark.sql import functions as F
 from shortvideohybridanalyticslakehouse_spark.functions.suffixes import (
     partition_covered_positions_capped,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    materialize,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import (
     load_table,
     scaled_shuffle_partitions,
@@ -134,7 +137,10 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             == F.get(F.col("_kh"), p - 1),
         ),
     )
-    snip_rows = (
+    # one tokenize+anchor pass feeds BOTH the >=2-docs filter and the
+    # probe side, sibling stages of one action (without it the anchor HOF
+    # subtree executes once per branch)
+    snip_rows = materialize(
         toks.withColumn("_kh", kh)
         .withColumn("_wm", winmin)
         .select(
@@ -151,10 +157,6 @@ def q_exact_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ts", F.greatest(F.lit(1), F.col("a") - (_W - 1)), _SNIP
             ).alias("snip"),
         )
-        # one tokenize+anchor pass feeds BOTH the >=2-docs filter and
-        # the probe side (ext92's localCheckpoint doctrine — without it
-        # the anchor HOF subtree executes once per branch)
-        .localCheckpoint(eager=False)
     )
     # anchors whose VALUE spans >=2 distinct docs: the shared-anchor
     # vocabulary GROWS with the corpus (volume build) — merge pin, the

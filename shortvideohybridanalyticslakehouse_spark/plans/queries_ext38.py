@@ -22,6 +22,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -121,28 +122,23 @@ def q_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    # Degree is loop-invariant: attach it to the edge list ONCE and persist
-    # the combined relation, so each of the _ITERS iterations is one join
-    # (edges_deg x rank) + one grouped sum instead of two joins — measured
-    # 5.5 -> 3.0 s median at sf0.1 (removes 3 shuffles of the edge list).
-    # r12 NOTE (measured, guide §1): an eager localCheckpoint here was
-    # TRIED and reverted — it serializes the checkpoint job before the
-    # iterations (4.4 -> 5.3 s median at sf0.1), whereas the lazy persist
-    # materializes inside the first iteration's action with full overlap.
+    # Degree is loop-invariant: attach it to the edge list ONCE and
+    # materialize the combined relation, so each of the _ITERS iterations
+    # is one join (edges_deg x rank) + one grouped sum instead of two
+    # joins — measured 5.5 -> 3.0 s median at sf0.1 (removes 3 shuffles of
+    # the edge list). Lazy: an eager materialization serializes its job
+    # before the iterations (4.4 -> 5.3 s median at sf0.1, r12), while the
+    # iterations read it one after another inside the final action.
     from pyspark.sql import Window as _W
 
-    edges = edges.withColumn(
-        "deg", F.count(F.lit(1)).over(_W.partitionBy("src"))
-    ).persist()
-    nodes = docs.select("doc_id").distinct()
-    # the node list is consumed by every iteration's dangling-node
-    # left join (and the seed rank): lazily checkpoint it so the
-    # docs scan+distinct runs once, materialized inside the first
-    # action instead of as an extra serial job (the measured-win
-    # posture from the edges persist above); released together with
-    # the edge relation in finalize_bounded below (the cache-hygiene
-    # gate asserts this builder leaves zero persisted RDDs behind)
-    nodes = nodes.localCheckpoint(eager=False)
+    edges = materialize(
+        edges.withColumn("deg", F.count(F.lit(1)).over(_W.partitionBy("src"))),
+        eager=False,
+    )
+    # the node list is consumed by every iteration's dangling-node left
+    # join (and the seed rank): materialized lazily like the edges, so the
+    # docs scan+distinct runs once without an extra serial job
+    nodes = materialize(docs.select("doc_id").distinct(), eager=False)
     rank = nodes.withColumn("rank", F.lit("1.0").cast("decimal(28,12)"))
     for _ in range(_ITERS):
         contrib = (
@@ -174,9 +170,8 @@ def q_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("pagerank").desc(), F.col("doc_id").asc())
         .limit(20)
     )
-    # Top-20 is driver-bounded: materialize it, then drop the persisted
-    # edge relation so the cache doesn't outlive the query.
-    return finalize_bounded(top, edges, nodes)
+    # Top-20 is driver-bounded: collect it and release the edges and nodes.
+    return finalize_bounded(top)
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +246,7 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the last common Exchange; profiled r12 baseline: the 16 s-CPU
     # signature stage executed in both the wedge join and the degree
     # branch), and the ~6600-line analyzed plan costs ~2-3 s of driver
-    # planning per trial. EAGER localCheckpoint of pairs + oriented runs
+    # planning per trial. EAGER materialization of pairs + oriented runs
     # the candidate generation exactly once and truncates every branch's
     # lineage to a scan of materialized blocks — strictly better than
     # both old regimes at every scale (the r5 "persist slower" result
@@ -268,7 +263,7 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("est_jaccard") * 16 >= 4)
         .select("doc_a", "doc_b")
     )
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs)
     und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
@@ -282,7 +277,7 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("u", "v")
     )
-    oriented = oriented.localCheckpoint()
+    oriented = materialize(oriented)
     e1 = oriented.alias("e1")
     e2 = oriented.select(
         F.col("u").alias("mid"), F.col("v").alias("w")
@@ -318,6 +313,5 @@ def q_similarity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("global_clustering"),
         )
     )
-    # one-row result: materialize it, then release the checkpointed
-    # candidate/edge blocks immediately
-    return finalize_bounded(result, pairs, oriented)
+    # one-row result: collect it and release the candidate/edge blocks
+    return finalize_bounded(result)

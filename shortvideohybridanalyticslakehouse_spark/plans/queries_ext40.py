@@ -33,6 +33,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext9 import (
 )
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -174,22 +175,20 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage-2 report branch (profiled: the 887 KB quality stage appears
     # 2x per trial). Checkpointing s2 runs it once; s3's window and the
     # report branch both read the blocks.
-    s2 = s2.localCheckpoint()
+    s2 = materialize(s2)
 
-    # r12 (guide §1.2/§2.4; supersedes the r5 lazy-vs-persist note): the
-    # six stage aggregates + the near-dup/contamination probes re-run the
-    # funnel prefix wherever exchange reuse does not fire (the r5 "persist
-    # slower" measurement was persist's materialize-then-read WITH the
-    # full lineage still planned per branch). EAGER localCheckpoint of s3
-    # (post exact-dedup) and s4 (post near-dedup) runs each funnel stage
-    # exactly once and truncates every downstream branch's lineage.
+    # The six stage aggregates + the near-dup/contamination probes re-run
+    # the funnel prefix wherever exchange reuse does not fire (guide
+    # §1.2/§2.4). EAGER materialization of s3 (post exact-dedup) and s4
+    # (post near-dedup) runs each funnel stage exactly once and truncates
+    # every downstream branch's lineage.
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.col("doc_id").asc())
     s3 = (
         s2.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    s3 = s3.localCheckpoint()
+    s3 = materialize(s3)
 
     with_sig = dedupfns.minhash_signatures_df(
         s3, "doc_id", "text", k=2, num_hashes=16, out_col="minhash"
@@ -203,7 +202,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     s4 = s3.join(near_drop, "doc_id", "left_anti")
-    s4 = s4.localCheckpoint()
+    s4 = materialize(s4)
 
     holdout = base.filter(hash60(F.col("doc_id").cast("string")) % 10 == 9)
     hold_g = (
@@ -235,6 +234,5 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(stage(s5, 5, "decontaminated"))
         .orderBy("stage_no")
     )
-    # 6-row report: materialize, then release the checkpointed stage
-    # frames (cache lifetimes stay query-scoped — the hygiene gate)
-    return finalize_bounded(report, s2, s3, s4)
+    # 6-row report: collect it and release the stage frames
+    return finalize_bounded(report)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import multimodal
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -279,7 +279,7 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunking over the corpus (the lane's two heaviest stages,
     # ~17 s + ~11 s CPU at sf0.1). Checkpoint the O(chunks) md5
     # relation once (eager: sibling consumers race a lazy one).
-    chunks = defer_release(chunks.localCheckpoint(eager=True))
+    chunks = materialize(chunks)
     freq = chunks.groupBy("chunk_md5").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from shortvideohybridanalyticslakehouse_spark.functions import text
 from shortvideohybridanalyticslakehouse_spark.operators.ranks import with_tiny_rank
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -109,7 +109,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4x per run (guide §5: reuse > recompute). Checkpoint it once;
     # storage is the aggregated postings list (far smaller than the
     # corpus), released when the next lane builds.
-    tf = defer_release(tf.localCheckpoint())
+    tf = materialize(tf)
     # doc length re-aggregates the (much smaller) TF frame instead of a
     # second tokenize+explode pass over the corpus
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dlen"))

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.operators.ranks import with_tiny_rank
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -80,7 +80,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its own map stage (no exchange between them for ReuseExchange
     # to share; profiled 3x per trial). Eager: sibling stages race
     # a lazy checkpoint (the winnowing lesson).
-    toks = defer_release(toks.localCheckpoint(eager=True))
+    toks = materialize(toks)
     # workload derivation: adjacent-bigram counts, map-side pair
     # construction with array HOFs (no per-token shuffle before the agg)
     pairs = F.expr(
@@ -200,7 +200,7 @@ def q_phrase3_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
     )
     # multi-consumer token arrays: materialized once, as above
-    toks = defer_release(toks.localCheckpoint(eager=True))
+    toks = materialize(toks)
     tris = F.expr(
         "transform(slice(toks, 1, greatest(size(toks) - 2, 0)),"
         " (x, i) -> struct(x AS t0, toks[i + 1] AS t1, toks[i + 2] AS t2))"

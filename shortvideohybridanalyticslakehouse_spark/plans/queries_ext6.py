@@ -19,12 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import dedupfns
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
+    release_materialized,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 
 def connected_components(
@@ -46,7 +46,7 @@ def connected_components(
     here is tiny so the simple form wins).
     """
     # The edge derivation upstream (e.g. a Jaccard self-join) is expensive;
-    # localCheckpoint it ONCE (the r11 persist-the-union shape executed the
+    # materialize it ONCE (the r11 persist-the-union shape executed the
     # upstream join once per union branch at materialization), then
     # symmetrize over the materialized blocks. The checkpointed edge count
     # is a free byproduct and funds two scale-adaptive choices (guide
@@ -57,9 +57,9 @@ def connected_components(
     # into the per-round join while it fits (labels <= 2x edges rows), so
     # the edge list never crosses an Exchange; past the envelope
     # (SVH_CC_BCAST_MAX_NODES) the shuffle join returns — same fixpoint.
-    base = defer_release(edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint(eager=True))
+    base = materialize(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    )
     n_edges = base.count()
     nparts = int(max(1, min(4096, -(-n_edges // 500_000))))
     bcast_labels = 2 * n_edges <= int(
@@ -73,31 +73,27 @@ def connected_components(
         .withColumn("cluster_id", F.col("node"))
     )
     prev_sum = None
-    cached = []
     for _ in range(max_iter):
         lab = F.broadcast(labels) if bcast_labels else labels
         neighbor = sym.join(lab, sym.s == lab.node).select(
             F.col("d").alias("node"), "cluster_id"
         )
-        labels = (
+        nxt = materialize(
             neighbor.union(labels)
             .groupBy("node")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            .coalesce(nparts)
-            .persist()
+            .coalesce(nparts),
+            eager=False,
         )
-        cached.append(labels)
-        # one tiny action per round; persisted parent keeps it O(|labels|)
-        cur = labels.agg(F.sum("cluster_id")).collect()[0][0]
+        # one tiny action per round fills the new labels from the previous
+        # round's blocks, which are then superseded
+        cur = nxt.agg(F.sum("cluster_id")).collect()[0][0]
+        release_materialized(labels)
+        labels = nxt
         if cur == prev_sum:
             break
         prev_sum = cur
-    out = defer_release(
-        labels.select("node", "cluster_id").localCheckpoint(eager=True)
-    )
-    for df in cached:
-        df.unpersist()
-    return out
+    return labels
 
 
 _DUCK_SHINGLES_3 = (

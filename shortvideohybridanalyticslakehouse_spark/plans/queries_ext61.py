@@ -36,12 +36,11 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext import (
 from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
     local_rows_df,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _K = 2
 _ROUNDS = 4
@@ -131,32 +130,27 @@ def q_similarity_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Each round materializes its survivor set ONCE; the only driver-side
     # fetches are the O(rounds) scalar counts — the same bounded pattern
-    # as the connected-components loop (queries_ext6). localCheckpoint
+    # as the connected-components loop (queries_ext6). A checkpoint
     # (not persist) so each round's ANALYZED plan restarts from the
     # materialized blocks instead of re-analyzing an ever-deeper lineage:
     # a lazy 4-branch union re-peeled rounds 1..r for every round r
     # (37 s), persist-only still paid quadratic analysis (23 s), the
     # checkpointed loop is ~12 s at sf0.01 — and stays fully distributed.
-    edges = defer_release(edges.localCheckpoint(eager=True))
-    alive = defer_release(
-        edges.select("src")
-        .distinct()
-        .withColumnRenamed("src", "doc_id")
-        .localCheckpoint(eager=True)
+    edges = materialize(edges)
+    alive = materialize(
+        edges.select("src").distinct().withColumnRenamed("src", "doc_id")
     )
     prev_n = alive.count()
     stats: list[tuple[int, int, int]] = []
     for rnd in range(1, _ROUNDS + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(alive.withColumnRenamed("doc_id", "src"), "src")
             .join(alive.select(F.col("doc_id").alias("dst")), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _K)
             .select(F.col("src").alias("doc_id"))
-            .localCheckpoint(eager=True)
         )
-        nxt = defer_release(nxt)
         surv = nxt.count()
         stats.append((rnd, surv, prev_n - surv))
         prev_n = surv

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     finalize_bounded,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import (
@@ -111,9 +112,8 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # baskets feeds FOUR consumers (order count, item support, both
     # self-join sides) — lazily each re-ran the distinct + size-filter
     # join (guide §1.2/§5). Materialize the skinny (orderkey, partkey)
-    # frame once; released via finalize_bounded after the top-20 row set
-    # materializes.
-    baskets = baskets.localCheckpoint(eager=True)
+    # frame once.
+    baskets = materialize(baskets)
     n_orders = baskets.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n")
     )
@@ -170,7 +170,7 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.orderBy(
         F.col("n_ab").desc(), F.col("part_a").asc(), F.col("part_b").asc()
     ).limit(20)
-    return finalize_bounded(top, baskets)
+    return finalize_bounded(top)
 
 
 _ATTR_ORACLE = """

@@ -33,12 +33,11 @@ from shortvideohybridanalyticslakehouse_spark.plans.money import (
     PURCHASE_CENTS_SQL as _CENTS,
     purchase_cents,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _RFM_ORACLE = f"""
 WITH anchor AS (
@@ -97,7 +96,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazily would recompute the event aggregation ~6x (measured 14.7 s
     # -> ~6 s at sf0.01). The checkpointed relation is O(users) — the
     # already-reduced side, safe to persist at any scale.
-    per_user = defer_release(per_user.localCheckpoint(eager=True))
+    per_user = materialize(per_user)
 
     # ONE partitioned rank pass over the 3-way union (guide §1.2):
     # row_number partitioned by dim over (_key, user_id) == each dim's

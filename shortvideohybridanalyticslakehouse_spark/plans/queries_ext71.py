@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from shortvideohybridanalyticslakehouse_spark.functions import similarity, text
 from shortvideohybridanalyticslakehouse_spark.operators.ranks import with_tiny_rank
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -114,7 +114,7 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same single-execution posture as q_bm25_topk: TF feeds the qterms
     # branch, the consts/dl branch and both scoring-join sides — without
     # this the corpus is tokenized 4x inside one lane.
-    tf = defer_release(tf.localCheckpoint())
+    tf = materialize(tf)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dlen"))
     stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     consts = docs.agg(

@@ -35,12 +35,11 @@ from shortvideohybridanalyticslakehouse_spark.functions.text import WORD_REGEX
 from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
     local_rows_df,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _ROUNDS = 3
 _WORD_SQL = WORD_REGEX.replace("'", "''")
@@ -100,7 +99,7 @@ SELECT * FROM (
 
 def _build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-word frequency table with the anchored '||'-separated
-    character sequence — the relation BPE trains on. localCheckpointed:
+    character sequence — the relation BPE trains on. Materialized:
     O(distinct words), and every round's argmax action re-reads it."""
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
@@ -120,7 +119,7 @@ def _build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return defer_release(vocab.localCheckpoint(eager=True))
+    return materialize(vocab)
 
 
 def _train(
@@ -162,15 +161,16 @@ def _train(
         out.append((rnd, win["l"], win["r"], win["cnt"]))
         if rnd == rounds and not merge_last:
             break
-        vocab = vocab.withColumn(
-            "seq",
-            F.replace(
-                F.col("seq"),
-                F.lit(f"|{win['l']}||{win['r']}|"),
-                F.lit(f"|{win['l']}{win['r']}|"),
-            ),
-        ).localCheckpoint(eager=True)
-        vocab = defer_release(vocab)
+        vocab = materialize(
+            vocab.withColumn(
+                "seq",
+                F.replace(
+                    F.col("seq"),
+                    F.lit(f"|{win['l']}||{win['r']}|"),
+                    F.lit(f"|{win['l']}{win['r']}|"),
+                ),
+            )
+        )
     return vocab, out
 
 

@@ -18,7 +18,7 @@ so a wrong frontier membership fails the hash, not just the count.
 Scale shape: the edge list is the shared banded-LSH candidate path
 (shuffle ∝ docs x bands); each round is one equi-join + one anti-join
 over a frontier that can only shrink relative to the component, with
-localCheckpoint pinning each round's lineage (the measured k-core fix).
+each round materialized to pin its lineage (the measured k-core fix).
 Driver-side: zero collects — the loop is fixed-length and the final
 aggregation is one groupBy over <= 5 distance classes.
 """
@@ -33,12 +33,11 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext import (
     _DUCK_BASES,
     _duck_shingles,
 )
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _ROUNDS = 4
 _SEED_MOD = 97
@@ -108,7 +107,7 @@ def q_similarity_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hop frontier sizes (+ doc_id checksums) of a fixed 4-round
     multi-source BFS from seed docs (id % 97 == 0) over the near-dup
     graph: frontier -> edges equi-join -> minus visited (left_anti) ->
-    distinct, each round localCheckpointed; no driver collects."""
+    distinct, each round materialized; no driver collects."""
     docs = load_table(spark, sf_dir, "documents", ensure_parallelism=True)
     with_sig = dedupfns.minhash_signatures_df(
         docs, "doc_id", "text", k=2, num_hashes=16, out_col="minhash"
@@ -125,28 +124,23 @@ def q_similarity_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    edges = defer_release(edges.localCheckpoint(eager=True))
-    frontier = defer_release(
+    edges = materialize(edges)
+    frontier = materialize(
         edges.filter(F.col("src") % _SEED_MOD == 0)
         .select(F.col("src").alias("doc_id"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     visited = frontier
     levels = [frontier.withColumn("dist", F.lit(0))]
     for _rnd in range(1, _ROUNDS + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(frontier.withColumnRenamed("doc_id", "src"), "src")
             .select(F.col("dst").alias("doc_id"))
             .join(visited, "doc_id", "left_anti")
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        nxt = defer_release(nxt)
         levels.append(nxt.withColumn("dist", F.lit(_rnd)))
-        visited = defer_release(
-            visited.unionByName(nxt).localCheckpoint(eager=True)
-        )
+        visited = materialize(visited.unionByName(nxt))
         frontier = nxt
     all_levels = levels[0]
     for lv in levels[1:]:

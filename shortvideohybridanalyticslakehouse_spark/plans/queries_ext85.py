@@ -21,12 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.functions import text
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
-from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
-
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
+    register,
 )
+from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
 
 _TOP_TERMS = 40
 _MIN_CO = 5
@@ -73,14 +72,11 @@ def q_term_pmi_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides, and the corpus count all reuse it (plan audit showed 5
     # tokenize scans / 18 exchanges without this — tokenization is the
     # CPU-heavy stage, everything downstream is narrow)
-    tok = (
+    tok = materialize(
         docs.select(
             "doc_id", F.explode(text.tokens(F.col("text"))).alias("term")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
-    tok = defer_release(tok)
     df = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     top = df.orderBy(F.col("c").desc(), F.col("term").asc()).limit(_TOP_TERMS)
     pruned = tok.join(F.broadcast(top), "term")

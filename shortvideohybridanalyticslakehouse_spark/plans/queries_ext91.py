@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -210,7 +210,7 @@ def q_kmeans_lloyd_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-python Lloyd twin).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    q = defer_release(_quantized(emb).localCheckpoint(eager=True))
+    q = materialize(_quantized(emb))
 
     cents = [
         [int(v) for v in r.xq]

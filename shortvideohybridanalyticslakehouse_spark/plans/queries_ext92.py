@@ -29,7 +29,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shortvideohybridanalyticslakehouse_spark.plans.registry import register
+from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+    materialize,
+    register,
+)
 from shortvideohybridanalyticslakehouse_spark.sources.batch import (
     load_table,
     scaled_shuffle_partitions,
@@ -88,13 +91,16 @@ def q_bigram_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mean bigram-LM surprise (floored micro units; see
     module docstring for the determinism ladder)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        "source",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
-    ).localCheckpoint(eager=True)  # one tokenize pass feeds uni, N, bigrams
+    # one tokenize pass feeds uni, N, bigrams
+    toks = materialize(
+        docs.select(
+            "doc_id",
+            "source",
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        )
+    )
     # Auto-size the pinned SHJ builds from the corpus size (VERDICT r10
-    # #1): toks is already localCheckpoint'ed, so the count is a
+    # #1): toks is already materialized, so the count is a
     # materialized-partition count, not a recompute. 10k docs/partition
     # keeps the 30x bigram build at the measured-green ~85 MB/partition
     # (tools/SKEW_PROBE_30X.json: 32 partitions = spill-less OOM at

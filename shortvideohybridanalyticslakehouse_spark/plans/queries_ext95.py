@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-    defer_release,
+    materialize,
     register,
 )
 from shortvideohybridanalyticslakehouse_spark.sources.batch import load_table
@@ -196,7 +196,7 @@ def q_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + window-min fingerprint subtree (the run's two
     # heaviest stages, ~20 s CPU each at sf0.1) executes twice.
     # Checkpoint it once and every consumer reads the blocks (guide §5).
-    hashes = defer_release(hashes.localCheckpoint(eager=True))
+    hashes = materialize(hashes)
     buck = (
         hashes.groupBy("fph")
         .agg(F.count(F.lit(1)).alias("n_docs"))

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import functools
+import importlib
+import pkgutil
+import re
 import threading
 from collections.abc import Callable
 
@@ -12,48 +15,55 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
-# Checkpointed frames whose storage cannot be released inside their own
-# builder because the RETURNED plan still reads them (the result is
-# O(rows), so finalize_bounded's collect-and-release shape does not
-# apply). They are released at the start of the NEXT builder invocation:
-# in a bench/oracle session at most one query's blocks linger, instead
-# of every single_pass/iterative lane's blocks accumulating until the
-# ContextCleaner's GC-driven pass (ADVICE r12 on operators/ranks.py).
-_DEFERRED: list[DataFrame] = []
-_DEFERRED_LOCK = threading.Lock()
+# Frames materialized by the current query build. The register wrapper
+# releases them before the next builder runs, and finalize_bounded as soon
+# as its bounded result is collected: in a bench/oracle session at most
+# one query's blocks linger, instead of every iterative lane's blocks
+# accumulating until the ContextCleaner's GC-driven pass.
+_SCOPE: list[DataFrame] = []
+_SCOPE_LOCK = threading.Lock()
 
 
-def defer_release(df: DataFrame) -> DataFrame:
-    """Mark a checkpointed/persisted frame for release when the next
-    registered query builds. Returns the frame for chaining."""
-    with _DEFERRED_LOCK:
-        _DEFERRED.append(df)
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Run ``df`` once into executor blocks (``localCheckpoint``, which
+    also truncates its lineage) and add the result to the current query's
+    scope, which releases it. Use it when a subtree has several consumers
+    or a loop would otherwise re-plan a growing lineage.
+
+    Eager or lazy: ``eager=True`` runs a job now; ``eager=False`` fills
+    the blocks inside the first action that reads the frame, saving that
+    job. Lazy only when the consumers are strictly sequential (loop
+    rounds, a collect that feeds the next action): sibling stages of one
+    action that share a lazy frame race its materialization and each
+    compute the subtree before the blocks land.
+
+    Callers must be done with the frame when the scope is released: a
+    checkpoint has no lineage left to recompute from.
+    """
+    df = df.localCheckpoint(eager=eager)
+    with _SCOPE_LOCK:
+        _SCOPE.append(df)
     return df
 
 
-def drain_deferred() -> None:
-    """Release every deferred frame (invoked before each builder runs)."""
-    with _DEFERRED_LOCK:
-        pending, _DEFERRED[:] = _DEFERRED[:], []
+def release_scope() -> None:
+    """Release every frame materialized since the last release (invoked
+    before each builder runs)."""
+    with _SCOPE_LOCK:
+        pending, _SCOPE[:] = _SCOPE[:], []
     for df in pending:
         release_materialized(df)
 
 
-def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a BOUNDED final frame (top-k / single-row / per-stage
-    report — never an O(rows) relation), release the persisted
-    intermediates it depends on, and return the rows as a local relation
-    with the identical schema.
-
-    This is how iterative builders keep cache lifetimes scoped to the
-    query: without it, a 161-query bench session accumulates every
-    builder's persisted frames for the life of the SparkSession (VERDICT
-    r4 "what's wrong" #2). The collect is safe by contract — callers only
-    pass frames already reduced to driver-bounded size.
+def finalize_bounded(result: DataFrame) -> DataFrame:
+    """Collect a BOUNDED final frame (top-k / single-row / per-stage
+    report — never an O(rows) relation), release the query's materialized
+    intermediates, and return the rows as a local relation with the
+    identical schema. The collect is safe by contract — callers only pass
+    frames already reduced to driver-bounded size.
     """
     rows = result.collect()
-    for df in cached:
-        release_materialized(df)
+    release_scope()
     # VALUES-backed local relation instead of a Python-RDD parallelize:
     # every downstream action on the finalized frame otherwise pays ~0.5 s
     # of Python-worker round-trips for a handful of rows (guide §4/§5;
@@ -67,20 +77,17 @@ def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
 
 
 def release_materialized(df: DataFrame) -> None:
-    """Release the storage behind a persisted OR localCheckpoint'd frame.
+    """Drop the blocks behind a materialized frame now.
 
-    ``unpersist()`` only covers CacheManager entries; an eager
-    localCheckpoint leaves its block-backed RDD registered in
-    getPersistentRDDs until the ContextCleaner's weak-ref pass runs,
-    which in a long bench session is arbitrarily late. For a
-    checkpointed frame the analyzed plan is a LogicalRDD wrapping that
-    RDD — unpersist it directly. Callers must be DONE with the frame:
-    a localCheckpoint has no lineage left to recompute from.
+    A checkpoint's blocks are not CacheManager entries (``unpersist()``
+    misses them): its block-backed RDD stays in getPersistentRDDs until
+    the ContextCleaner's weak-ref pass runs, which in a long bench session
+    is arbitrarily late. The frame's analyzed plan is a LogicalRDD wrapping
+    that RDD — unpersist it directly. Callers must be DONE with the frame:
+    a checkpoint has no lineage left to recompute from. A loop that
+    replaces its frontier each round calls this on the superseded frame;
+    the scope releases the rest.
     """
-    try:
-        df.unpersist()
-    except Exception:  # pragma: no cover - defensive
-        pass
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -117,7 +124,7 @@ def register(name: str, oracle: str | None):
             )
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            drain_deferred()
+            release_scope()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = (wrapped, oracle)
@@ -127,152 +134,18 @@ def register(name: str, oracle: str | None):
 
 
 def load_all() -> dict[str, tuple[QueryFn, str | None]]:
-    """Import every query module so their @register calls run."""
-    from shortvideohybridanalyticslakehouse_spark.plans import (  # noqa: F401
-        queries,
-        queries_ext,
-        queries_ext3,
-        queries_ext4,
-        queries_ext5,
-        queries_ext6,
-        queries_ext7,
-        queries_ext8,
-        queries_ext9,
-        queries_ext10,
-        queries_ext11,
-        queries_ext12,
-        queries_ext13,
-        queries_ext14,
-        queries_ext15,
-        queries_ext16,
-        queries_ext17,
-        queries_ext18,
-        queries_ext19,
-        queries_ext20,
-        queries_ext21,
-        queries_ext22,
-        queries_ext23,
-        queries_ext24,
-        queries_ext25,
-        queries_ext26,
-        queries_ext27,
-        queries_ext28,
-        queries_ext29,
-        queries_ext30,
-        queries_ext31,
-        queries_ext32,
-        queries_ext33,
-        queries_ext34,
-        queries_ext35,
-        queries_ext36,
-        queries_ext37,
-        queries_ext38,
-        queries_ext39,
-        queries_ext40,
-        queries_ext41,
-        queries_ext42,
-        queries_ext43,
-        queries_ext44,
-        queries_ext45,
-        queries_ext46,
-        queries_ext47,
-        queries_ext48,
-        queries_ext49,
-        queries_ext50,
-        queries_ext51,
-        queries_ext52,
-        queries_ext53,
-        queries_ext54,
-        queries_ext55,
-        queries_ext56,
-        queries_ext57,
-        queries_ext58,
-        queries_ext59,
-        queries_ext60,
-        queries_ext61,
-        queries_ext62,
-        queries_ext63,
-        queries_ext64,
-        queries_ext65,
-        queries_ext66,
-        queries_ext67,
-        queries_ext68,
-        queries_ext69,
-        queries_ext70,
-        queries_ext71,
-        queries_ext72,
-        queries_ext73,
-        queries_ext74,
-        queries_ext75,
-        queries_ext76,
-        queries_ext77,
-        queries_ext78,
-        queries_ext79,
-        queries_ext80,
-        queries_ext81,
-        queries_ext82,
-        queries_ext83,
-        queries_ext84,
-        queries_ext85,
-        queries_ext86,
-        queries_ext87,
-        queries_ext88,
-        queries_ext89,
-        queries_ext90,
-        queries_ext91,
-        queries_ext92,
-        queries_ext93,
-        queries_ext94,
-        queries_ext95,
-        queries_ext96,
-        queries_ext97,
-        queries_ext98,
-        queries_ext99,
-        queries_ext100,
-        queries_ext101,
-        queries_ext102,
-        queries_ext103,
-        queries_ext104,
-        queries_ext105,
-        queries_ext106,
-        queries_ext107,
-        queries_ext108,
-        queries_ext109,
-        queries_ext110,
-        queries_ext111,
-        queries_ext112,
-        queries_ext113,
-        queries_ext114,
-        queries_ext115,
-        queries_ext116,
-        queries_ext117,
-        queries_ext118,
-        queries_ext119,
-        queries_ext120,
-        queries_ext121,
-        queries_ext122,
-        queries_ext123,
-        queries_ext124,
-        queries_ext125,
-        queries_ext126,
-        queries_ext127,
-        queries_ext128,
-        queries_ext129,
-        queries_ext130,
-        queries_ext131,
-        queries_ext132,
-        queries_ext133,
-        queries_ext134,
-        queries_ext135,
-        queries_ext136,
-        queries_ext137,
-        queries_ext138,
-        queries_ext139,
-        queries_ext140,
-        queries_ext141,
-        queries_ext142,
-        queries_ext143,
-        queries_ext144,
-    )
+    """Import every query module so their @register calls run: ``queries``,
+    then ``queries_ext``, then ``queries_extN`` in ascending N. Import order
+    is registration order, and the driver samples the first 50 entries
+    (tests/test_registry_freeze.py), so a new module takes the next N."""
+    from shortvideohybridanalyticslakehouse_spark import plans
 
+    order = []
+    for mod in pkgutil.iter_modules(plans.__path__):
+        hit = re.fullmatch(r"queries(?:_ext(\d*))?", mod.name)
+        if hit:
+            n = -1 if hit.group(1) is None else int(hit.group(1) or 0)
+            order.append((n, mod.name))
+    for _, name in sorted(order):
+        importlib.import_module(f"{plans.__name__}.{name}")
     return REGISTRY

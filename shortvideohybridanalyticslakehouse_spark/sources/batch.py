@@ -97,8 +97,8 @@ def scaled_shuffle_partitions(
 
     ``df`` must be cheap to count by contract: a PURE parquet scan
     (empty-schema count reads only row-group metadata — no column data,
-    no shuffle, fast at any SF) or an already-materialized
-    (localCheckpoint'ed) frame. Do NOT pass a transformed frame whose
+    no shuffle, fast at any SF) or a frame already in blocks
+    (``plans.registry.materialize``). Do NOT pass a transformed frame whose
     count would execute real work twice.
 
     ``rows_per_partition`` is the lane's calibration: source rows whose

@@ -3,8 +3,9 @@
 The external driver's correctness gate samples the FIRST 50 registry
 entries, and those rows are the round-over-round hard signal — so their
 names and ORDER are frozen (round-3 verdict, mitigation item 3). New
-queries must register in modules imported after the existing ones (append
-a queries_extNN module to registry.load_all), never earlier.
+queries must register in modules imported after the existing ones (add a
+queries_extNN module with the next N; registry.load_all imports them in
+ascending N), never earlier.
 
 If this test fails you reordered or renamed a frozen entry: restore the
 order instead of updating the golden list.

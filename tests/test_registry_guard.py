@@ -30,7 +30,7 @@ def test_same_function_reregister_is_idempotent(scratch_name):
     fn = _make("mod_a", "q_lane")
     registry.register(scratch_name, None)(fn)
     registry.register(scratch_name, "SELECT 1")(fn)  # re-import shape
-    # register() wraps every builder in the drain_deferred shim (r13),
+    # register() wraps every builder in the release_scope shim,
     # so compare through __wrapped__ — the registered callable must
     # still be THIS function, and the re-registration must have won.
     got_fn, got_oracle = registry.REGISTRY[scratch_name]

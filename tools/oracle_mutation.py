@@ -405,7 +405,7 @@ def _mutation_targets(name: str) -> list[tuple[object, object]]:
         return (
             inspect.isfunction(cand)
             and cand.__module__.startswith(_PKG_PREFIX)
-            and cand.__name__ not in ("register", "finalize_bounded")
+            and cand.__name__ not in ("register", "finalize_bounded", "materialize")
         )
 
     targets: list[tuple] = []
