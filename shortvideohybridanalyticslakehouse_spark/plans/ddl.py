@@ -342,26 +342,55 @@ def mor_read(
     return latest_per_key(spark.table(table_name), merge_keys, order_cols)
 
 
-def recover_bucketed_table(location: str) -> None:
-    """Torn-swap recovery (the scd2/mv idiom at table-directory level):
-    finish an interrupted compaction swap in whichever direction it
-    stopped. Safe to call unconditionally before reads or compactions."""
+def swap_dir(tmp: str, live: str, old: str) -> None:
+    """Commit the complete directory ``tmp`` as ``live``: the one swap
+    protocol of every rewrite store (catalog bucketed tables, the parquet
+    upsert table, SCD2 and MV buckets). Two renames, ``live`` -> ``old``
+    (skipped while ``live`` does not exist yet) then ``tmp`` -> ``live``,
+    so a crash leaves ``live`` intact, only ``old``, or both — each
+    settled by :func:`recover_dir`, which the store must run before it
+    reads ``live``."""
     import os
     import shutil
 
-    tmp, old = location + "._tmp", location + "._old"
-    if not os.path.isdir(location):
-        if os.path.isdir(old):  # crashed between the two renames
-            os.rename(old, location)
-        elif os.path.isdir(tmp):  # crashed after building tmp completely?
-            # tmp is only renamed in AFTER location moved to old; a tmp
-            # with no location and no old means the build never finished
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(f"unrecoverable: {location} missing")
-        return
-    # location exists: any leftovers are prunable
-    shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(live):
+        os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover_dir(live: str, old: str) -> None:
+    """Settle a torn :func:`swap_dir`. ``old`` without ``live``: the crash
+    fell between the two renames, so ``old`` is restored and the
+    interrupted write must be replayed. ``old`` with ``live``: the swap
+    committed, so ``old`` is pruned."""
+    import os
+    import shutil
+
+    if os.path.isdir(old):
+        if os.path.isdir(live):
+            shutil.rmtree(old, ignore_errors=True)
+        else:
+            os.rename(old, live)
+
+
+def recover_bucketed_table(location: str) -> None:
+    """Torn-swap recovery for a catalog table directory: settle an
+    interrupted compaction or erasure swap (:func:`recover_dir`) and drop
+    its staging dir. Safe to call unconditionally before reads or
+    compactions."""
+    import os
+    import shutil
+
+    tmp = location + "._tmp"
+    recover_dir(location, location + "._old")
+    if not os.path.isdir(location) and os.path.isdir(tmp):
+        # tmp is only renamed in AFTER location moved to old; a tmp
+        # with no location and no old means the build never finished
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(f"unrecoverable: {location} missing")
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 # The ONLY names maintenance will hard-link through unexamined: known
@@ -476,16 +505,9 @@ def _write_buckets(df, key, sort_cols, loc, tmp, touched, tag) -> dict[int, int]
 
 
 def _swap_table_dir(spark, table_name: str, loc: str, tmp: str) -> None:
-    """Atomic-enough directory swap: two renames, torn-swap recoverable
-    by :func:`recover_bucketed_table` in either direction."""
-    import os
-    import shutil
-
-    old = loc + "._old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(loc, old)
-    os.rename(tmp, loc)
-    shutil.rmtree(old, ignore_errors=True)
+    """Commit a rebuilt table directory (:func:`swap_dir`; torn swaps are
+    settled by :func:`recover_bucketed_table`) and refresh the catalog."""
+    swap_dir(tmp, loc, loc + "._old")
     spark.sql(f"REFRESH TABLE {table_name}")
 
 

@@ -44,6 +44,7 @@ from shortvideohybridanalyticslakehouse_spark.operators.validate import (
     split_valid_invalid,
 )
 from shortvideohybridanalyticslakehouse_spark.plans import serving
+from shortvideohybridanalyticslakehouse_spark.plans.ddl import recover_dir, swap_dir
 
 
 def read_json_file_stream(
@@ -164,16 +165,17 @@ def _merge_overwrite(
 
     Delta path: transactional MERGE with the CDC ordering tie-break
     (replay idempotent — see operators/dedup.py:merge_upsert_delta).
-    Fallback: read current state, union the new batch (tagged newer via
-    `_src_rank`), keep the winner per key, atomically replace the table
-    (write tmp + rename).
+    Fallback: settle a torn swap left by a crashed batch, read current
+    state, union the new batch (tagged newer via `_src_rank`), keep the
+    winner per key, write the result to a tmp dir and commit it with
+    ``ddl.swap_dir`` (a crash mid-write never touches the live table).
     """
     if delta_available():
         merge_upsert_delta(spark, table_path, batch_df, key_cols, order_cols)
         return
 
-    import shutil
-
+    tmp, old = table_path + "._tmp", table_path + "._old"
+    recover_dir(table_path, old)
     batch_df = batch_df.withColumn("_src_rank", F.lit(1))
     # Explicit existence check — a bare try/except around the read would
     # also swallow REAL read errors (corrupt footer, FS hiccup) and then
@@ -186,20 +188,8 @@ def _merge_overwrite(
     merged = latest_per_key(
         combined, key_cols, order_cols=["_src_rank"] + order_cols
     ).drop("_src_rank")
-    # Write the merged state to a tmp dir, then swap via directory rename —
-    # the unreadable window is two metadata renames, not a full rewrite.
-    # (mode('overwrite') directly on table_path deletes the table before
-    # rewriting it: a crash mid-write loses ALL history.) On Delta/Iceberg
-    # MERGE INTO makes this transactional for real.
-    tmp = table_path + "._tmp"
-    old = table_path + "._old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
     merged.write.mode("overwrite").parquet(tmp)  # completes before any rename
-    if os.path.isdir(table_path):
-        os.rename(table_path, old)
-    os.rename(tmp, table_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_dir(tmp, table_path, old)
 
 
 def start_content_events_job(

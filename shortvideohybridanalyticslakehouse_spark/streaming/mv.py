@@ -14,24 +14,23 @@ theorem about the monoid, checked by the tests, not a coincidence of
 scheduling. Non-decomposable measures (exact quantiles, distinct counts)
 belong to the sketch lanes (functions/sketches.py), not here.
 
-Store layout and crash contract are the scd2.py skeleton: micro-batch
-partials staged to parquet (consumes every partition, no driver
-collect), ``bucket=N/`` dirs on pmod(xxhash64(keys...), n_buckets), only
-touched buckets rebuilt, per-bucket ``_applied_batch_*`` markers riding
-each bucket's atomic two-rename swap, ``_old_bucket_N`` recovery on
-entry. Replay of a committed batch is a per-bucket no-op; a torn swap
-restores and re-applies.
+Store: ``bucket=N/`` dirs on pmod(xxhash64(keys...), n_buckets),
+written by the shared bucket-store fold (streaming/markers.py:fold_batch:
+staging, touched buckets only, per-bucket markers, swap and crash
+recovery) over the micro-batch's partials; a touched bucket's rebuild is
+UNION + re-aggregate. Replay of a committed batch is a per-bucket no-op;
+a torn swap restores and re-applies.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import fold_batch
 
 DEFAULT_BUCKETS = 16
 
@@ -93,31 +92,6 @@ class MvSpec:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(n_buckets)).cast("int")
 
 
-def _bucket_dir(store: str, b: int) -> str:
-    return os.path.join(store, f"bucket={b}")
-
-
-def _old_dir(store: str, b: int) -> str:
-    return os.path.join(store, f"_old_bucket_{b}")
-
-
-def recover_store(store: str) -> None:
-    """scd2.recover_table contract: restore torn swaps, drop stale
-    stage/tmp dirs."""
-    if not os.path.isdir(store):
-        return
-    for name in os.listdir(store):
-        full = os.path.join(store, name)
-        if name.startswith("_old_bucket_"):
-            live = _bucket_dir(store, int(name[len("_old_bucket_") :]))
-            if os.path.isdir(live):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.rename(full, live)
-        elif name.startswith(("_tmp_", "_stage_")):
-            shutil.rmtree(full, ignore_errors=True)
-
-
 def merge_mv_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -127,62 +101,19 @@ def merge_mv_batch(
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
     """foreachBatch body: fold one micro-batch into the MV."""
-    os.makedirs(store, exist_ok=True)
-    recover_store(store)
 
-    stage = os.path.join(store, f"_stage_{batch_id}")
-    spec.partials(batch_df).write.mode("overwrite").parquet(stage)
-    try:
-        if not any(f.endswith(".parquet") for f in os.listdir(stage)):
-            return  # empty batch, partitions already consumed
-        staged = spark.read.parquet(stage)
-        wb = spec.bucket_expr(n_buckets)
-        touched = sorted(
-            r["b"] for r in staged.select(wb.alias("b")).distinct().collect()
-        )
-        todo = [
-            b
-            for b in touched
-            if not os.path.exists(
-                os.path.join(_bucket_dir(store, b), f"_applied_batch_{batch_id}")
-            )
-        ]
-        if not todo:
-            return
-        delta = staged.filter(wb.isin(todo))
-        have = [b for b in todo if os.path.isdir(_bucket_dir(store, b))]
-        if have:
-            cur = spark.read.parquet(*[_bucket_dir(store, b) for b in have])
-            merged = spec.remerge(cur.unionByName(delta))
-        else:
-            merged = delta  # partials of one batch are already merged
-        tmp_root = os.path.join(store, f"_tmp_{batch_id}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        merged.withColumn("bucket", spec.bucket_expr(n_buckets)).write.partitionBy(
-            "bucket"
-        ).parquet(tmp_root)
-        for b in todo:
-            new_dir = os.path.join(tmp_root, f"bucket={b}")
-            os.makedirs(new_dir, exist_ok=True)
-            live = _bucket_dir(store, b)
-            if os.path.isdir(live):
-                for f in os.listdir(live):
-                    if f.startswith("_applied_batch_"):
-                        with open(os.path.join(new_dir, f), "w"):
-                            pass
-            with open(
-                os.path.join(new_dir, f"_applied_batch_{batch_id}"), "w"
-            ):
-                pass
-            old = _old_dir(store, b)
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(live):
-                os.rename(live, old)
-            os.rename(new_dir, live)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    def rebuild(cur: DataFrame | None, delta: DataFrame) -> DataFrame:
+        # partials of one batch are already merged
+        return delta if cur is None else spec.remerge(cur.unionByName(delta))
+
+    fold_batch(
+        spark,
+        spec.partials(batch_df),
+        store,
+        batch_id,
+        spec.bucket_expr(n_buckets),
+        rebuild,
+    )
 
 
 def read_mv(spark: SparkSession, store: str, spec: MvSpec) -> DataFrame:

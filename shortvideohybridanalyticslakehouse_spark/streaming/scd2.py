@@ -4,34 +4,17 @@ plans/queries_ext54.scd2_bands.
 
 Each micro-batch of change events (user_id, ts, event_id, state) merges
 into a HASH-BUCKETED parquet dimension table of validity bands laid out
-as ``table_path/bucket=NNN/`` (pmod(xxhash64(user_id), n_buckets)):
-
-1. The micro-batch is first staged to parquet UNDER the table dir
-   (underscore-prefixed, invisible to readers). This consumes every
-   source partition (the Spark 4 consume-before-skip rule) WITHOUT
-   materializing the batch on the driver — a CDC burst never transits
-   driver memory. The only driver-side collect is the distinct bucket-id
-   list, bounded by ``n_buckets`` integers.
-2. Only the buckets the batch touches are rebuilt: their CLOSED bands
-   (valid_to not null) are carried through; OPEN bands re-enter the band
-   builder as pseudo-change events at their valid_from with
-   event_id = -1 (sorts before any real event at the same instant),
-   unioned with the batch's events for those buckets. The SHARED batch
-   builder (scd2_bands) recomputes bands over that union — so a batch
-   whose first state matches a user's open band collapses into it (true
-   SCD2: only CHANGES open versions). Untouched buckets' files are not
-   read, not rewritten, not even listed by the rebuild job: per-batch
-   cost is O(batch + touched buckets), not O(table).
-3. Each touched bucket dir is atomically replaced (partitionBy write to
-   a tmp root + two renames) with a per-batch marker file INSIDE the new
-   bucket dir, making replay after crash/restart exactly-once PER
-   BUCKET: a replayed batch skips buckets already carrying its marker
-   and re-applies only the ones a mid-swap crash left behind (markers
-   ride the same rename as the data — no torn window). A crash BETWEEN
-   the two renames of one bucket leaves ``bucket=NNN._old`` behind with
-   ``bucket=NNN`` absent; the recovery pass on entry renames it back
-   before anything else runs, so closed bands and markers are never
-   lost. ``_tmp_*``/``_stage_*`` dirs are always discardable.
+as ``table_path/bucket=NNN/`` (pmod(xxhash64(user_id), n_buckets)).
+Staging, touched-bucket selection, per-bucket markers, the bucket swap
+and crash recovery are the shared bucket-store fold
+(streaming/markers.py:fold_batch); this module owns only the rebuild of
+a touched bucket: its CLOSED bands (valid_to not null) are carried
+through; OPEN bands re-enter the band builder as pseudo-change events at
+their valid_from with event_id = -1 (sorts before any real event at the
+same instant), unioned with the batch's events for those buckets. The
+SHARED batch builder (scd2_bands) recomputes bands over that union — so
+a batch whose first state matches a user's open band collapses into it
+(true SCD2: only CHANGES open versions).
 
 Ordering contract: the CDC transport delivers each user's changes in
 event-time order across micro-batches (Kafka keyed-by-user partitions,
@@ -42,63 +25,34 @@ the upstream watermark layer's job, same as the reference's CDC upsert
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from shortvideohybridanalyticslakehouse_spark.plans.queries_ext54 import scd2_bands
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import fold_batch
 
 _CHANGE_COLS = ["user_id", "ts", "event_id", "state"]
 DEFAULT_BUCKETS = 16
-
-
-def _bucket_dir(table_path: str, b: int) -> str:
-    return os.path.join(table_path, f"bucket={b}")
-
-
-def _old_dir(table_path: str, b: int) -> str:
-    # underscore prefix (not "bucket=N._old"): partition discovery must
-    # never see a swap leftover as a malformed partition value
-    return os.path.join(table_path, f"_old_bucket_{b}")
-
-
-def _bucket_marker(table_path: str, b: int, batch_id: int) -> str:
-    # underscore prefix: parquet readers ignore it as a data file
-    return os.path.join(_bucket_dir(table_path, b), f"_applied_batch_{batch_id}")
 
 
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).cast("int")
 
 
-def recover_table(table_path: str) -> None:
-    """Crash recovery, run on every entry BEFORE the batch is applied:
-
-    - ``bucket=N._old`` with ``bucket=N`` absent means a crash landed
-      between the two swap renames — restore the old dir (its marker set
-      excludes the in-flight batch, so the batch re-applies).
-    - ``bucket=N._old`` with ``bucket=N`` present means the crash was
-      after the second rename — the new dir (marker included) is
-      committed; the leftover is garbage.
-    - ``_tmp_*`` / ``_stage_*`` dirs belong to crashed in-flight batches
-      and are always discardable (the live invocation creates its own
-      after this pass).
-    """
-    if not os.path.isdir(table_path):
-        return
-    for name in os.listdir(table_path):
-        full = os.path.join(table_path, name)
-        if name.startswith("_old_bucket_"):
-            live = _bucket_dir(table_path, int(name[len("_old_bucket_") :]))
-            if os.path.isdir(live):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.rename(full, live)
-        elif name.startswith(("_tmp_", "_stage_")):
-            shutil.rmtree(full, ignore_errors=True)
+def _rebuild(cur: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Touched buckets' new bands: closed bands carried, open bands
+    re-entered as pseudo-changes ahead of the batch's events."""
+    if cur is None:
+        return scd2_bands(batch)
+    pseudo = cur.filter(F.col("valid_to").isNull()).select(
+        "user_id",
+        F.col("valid_from").alias("ts"),
+        F.lit(-1).cast("long").alias("event_id"),
+        "state",
+    )
+    closed = cur.filter(F.col("valid_to").isNotNull())
+    return closed.unionByName(scd2_bands(pseudo.unionByName(batch)))
 
 
 def merge_scd2_batch(
@@ -109,79 +63,17 @@ def merge_scd2_batch(
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> None:
     """foreachBatch body: merge one micro-batch of changes into the
-    bucketed band table. Stages the batch to parquet (consuming every
-    partition without a driver collect), rebuilds ONLY the touched
-    buckets through the shared builder, and swaps each bucket atomically
-    with the batch marker inside it."""
-    os.makedirs(table_path, exist_ok=True)
-    recover_table(table_path)
-
-    stage = os.path.join(table_path, f"_stage_{batch_id}")
-    batch_df.select(*_CHANGE_COLS).write.mode("overwrite").parquet(stage)
-    try:
-        if not any(f.endswith(".parquet") for f in os.listdir(stage)):
-            return  # empty batch (partitions already consumed by the write)
-        staged = spark.read.parquet(stage)
-        wb = _bucket_expr(n_buckets)
-        # bounded driver fetch: at most n_buckets small ints
-        touched = sorted(
-            r["b"] for r in staged.select(wb.alias("b")).distinct().collect()
-        )
-        todo = [
-            b
-            for b in touched
-            if not os.path.exists(_bucket_marker(table_path, b, batch_id))
-        ]
-        if not todo:
-            return
-
-        batch = staged.filter(wb.isin(todo))
-        have = [b for b in todo if os.path.isdir(_bucket_dir(table_path, b))]
-        closed = None
-        if have:
-            cur = spark.read.parquet(*[_bucket_dir(table_path, b) for b in have])
-            closed = cur.filter(F.col("valid_to").isNotNull())
-            pseudo = cur.filter(F.col("valid_to").isNull()).select(
-                "user_id",
-                F.col("valid_from").alias("ts"),
-                F.lit(-1).cast("long").alias("event_id"),
-                "state",
-            )
-            changes = pseudo.unionByName(batch)
-        else:
-            changes = batch
-        bands = scd2_bands(changes)
-        out = bands if closed is None else closed.unionByName(bands)
-
-        tmp_root = os.path.join(table_path, f"_tmp_{batch_id}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        out.withColumn("bucket", wb).write.partitionBy("bucket").parquet(tmp_root)
-
-        for b in todo:
-            new_dir = os.path.join(tmp_root, f"bucket={b}")
-            os.makedirs(new_dir, exist_ok=True)  # bucket emptied of bands
-            live = _bucket_dir(table_path, b)
-            # markers: every previously applied batch's plus this one's,
-            # written into the tmp dir BEFORE the rename so idempotence
-            # commits atomically with the data
-            if os.path.isdir(live):
-                for f in os.listdir(live):
-                    if f.startswith("_applied_batch_"):
-                        with open(os.path.join(new_dir, f), "w"):
-                            pass
-            with open(
-                os.path.join(new_dir, f"_applied_batch_{batch_id}"), "w"
-            ):
-                pass
-            old = _old_dir(table_path, b)
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(live):
-                os.rename(live, old)
-            os.rename(new_dir, live)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    bucketed band table through the shared bucket-store fold
+    (streaming/markers.py:fold_batch), which rebuilds ONLY the touched
+    buckets with :func:`_rebuild`."""
+    fold_batch(
+        spark,
+        batch_df.select(*_CHANGE_COLS),
+        table_path,
+        batch_id,
+        _bucket_expr(n_buckets),
+        _rebuild,
+    )
 
 
 def start_scd2_band_job(

@@ -6,7 +6,7 @@ import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Tiny-frame invariant (operators/ranks.py:with_tiny_rank) is CHECKED in the
 # test suite: every bounded-frame rank site counts its frame and raises if it

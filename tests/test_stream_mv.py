@@ -98,7 +98,9 @@ def test_stream_equals_batch(spark, tmp_path):
 
 
 def test_replay_and_untouched_buckets(spark, tmp_path):
-    from shortvideohybridanalyticslakehouse_spark.streaming.mv import _bucket_dir
+    from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+        bucket_dir as _bucket_dir,
+    )
 
     store = os.path.join(str(tmp_path), "mv")
     files = _files()

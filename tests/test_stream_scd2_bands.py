@@ -174,8 +174,10 @@ def _changes_df(spark, rows):
 def test_untouched_buckets_not_rewritten(spark, tmp_path):
     """A batch rewrites ONLY the buckets it touches: per-batch cost is
     O(batch + touched buckets), not O(table) (VERDICT r6 #1)."""
+    from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+        bucket_dir as _bucket_dir,
+    )
     from shortvideohybridanalyticslakehouse_spark.streaming.scd2 import (
-        _bucket_dir,
         merge_scd2_batch,
     )
 
@@ -223,10 +225,12 @@ def test_torn_swap_recovery(spark, tmp_path):
     """A crash between the two swap renames leaves the bucket absent and
     _old_bucket_N present; recovery restores it, and the in-flight batch
     (marker absent from the restored dir) re-applies (ADVICE r6)."""
+    from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+        bucket_dir as _bucket_dir,
+        recover_buckets as recover_table,
+    )
     from shortvideohybridanalyticslakehouse_spark.streaming.scd2 import (
-        _bucket_dir,
         merge_scd2_batch,
-        recover_table,
     )
 
     n_buckets = 16
@@ -265,8 +269,10 @@ def test_torn_swap_recovery(spark, tmp_path):
 def test_replayed_batch_skips_committed_buckets(spark, tmp_path):
     """Exactly-once per bucket: re-running a committed batch id is a
     no-op (marker present), even file-for-file."""
+    from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+        bucket_dir as _bucket_dir,
+    )
     from shortvideohybridanalyticslakehouse_spark.streaming.scd2 import (
-        _bucket_dir,
         merge_scd2_batch,
     )
 

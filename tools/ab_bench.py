@@ -11,6 +11,9 @@ Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 
 A trial process warms up like bench.py, builds and runs the lane once
 untimed, then times the build plus bench.py's xxhash64-of-struct sum.
+The timed build starts with no cached frames: between the two builds the
+child clears Spark's cache and releases the registry's materialized
+scope, so nothing the untimed build left behind serves the timed one.
 """
 
 from __future__ import annotations
@@ -27,7 +30,10 @@ def child(lane: str) -> None:
     sys.path.insert(0, os.getcwd())  # the revision's worktree
     from pyspark.sql import functions as F
 
-    from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
+    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
+        load_all,
+        release_scope,
+    )
     from shortvideohybridanalyticslakehouse_spark.session import get_spark
 
     fn, _ = load_all()[lane]
@@ -37,7 +43,10 @@ def child(lane: str) -> None:
     spark.range(1_000_000).groupBy((F.col("id") % 10).alias("k")).agg(
         F.sum("id")
     ).collect()
-    for _ in range(2):
+    for timed in (False, True):
+        if timed:
+            spark.catalog.clearCache()
+            release_scope()
         t0 = time.time()
         df = fn(spark, sf_dir)
         h = F.xxhash64(F.to_json(F.struct(*df.columns)))

@@ -12,16 +12,21 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
 
-import __spark_entry__ as entrymod  # noqa: E402 (loads full registry)
+# The package binds to this checkout before __spark_entry__ runs: that
+# module puts a fixed checkout path first on sys.path, and submodules
+# then resolve through the already-imported package's own __path__.
 from shortvideohybridanalyticslakehouse_spark.session import get_spark
+
+import __spark_entry__ as entrymod  # noqa: E402 (loads full registry)
 
 
 def canon_cell(v) -> str:

@@ -11,10 +11,11 @@ Prints one JSON line per (query, sf) with wall seconds and rows.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
 from shortvideohybridanalyticslakehouse_spark.session import get_spark
