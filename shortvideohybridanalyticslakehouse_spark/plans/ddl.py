@@ -20,7 +20,13 @@ and partition the directory layout by them.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
+import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -143,32 +149,6 @@ def write_dim(df: DataFrame, path: str) -> None:
     )
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int = N_BUCKETS,
-    sort: bool = True,
-) -> None:
-    """Catalog-managed bucketed table (`bucketBy` + `sortBy`), the real
-    co-located-join layout: two tables bucketed the SAME way on the join
-    key sort-merge-join WITHOUT any Exchange — at 100 TB that deletes the
-    single most expensive stage of every fact-fact join. The parquet
-    `partitionBy(bucket)` analogs above give pruning but Spark only
-    elides the shuffle for catalog bucketed tables; this writer is the
-    upgrade path (Iceberg `bucket(n, key)` / Delta liquid clustering give
-    the same property via their own metadata).
-
-    Reference ties the same idea to storage: `bucket(16, video_id)` on
-    gold/dims (rt_content_events_aggregator_sql.py:107,
-    rt_video_cdc_upsert_sql.py:54).
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table_name)
-
-
 def write_bucketed_sorted_table(
     df: DataFrame,
     table_name: str,
@@ -176,28 +156,19 @@ def write_bucketed_sorted_table(
     sort_cols: Sequence[str],
     n_buckets: int = N_BUCKETS,
 ) -> None:
-    """Bucketed table tuned for PARTITION BY ``key`` WINDOW consumers
-    (VERDICT r6 #4): ``repartition(n_buckets, key)`` before the write
-    hash-aligns writer tasks with buckets, so each bucket lands in
-    EXACTLY ONE file — the precondition for the scan to report both
-    ``outputPartitioning = HashPartitioning(key, n)`` AND
-    ``outputOrdering = sortBy cols``. A downstream
-    ``Window.partitionBy(key).orderBy(...)`` (e.g. the 30-min rolling
-    range frame over the gold minute grain) then plans with NO Exchange
-    before WindowExec: the layout, not a shuffle, provides the
-    clustering, exactly the reference's ``bucket(16, video_id)`` gold
-    layout (rt_content_events_aggregator_sql.py:107). At 100 TB this
-    deletes the full-table shuffle from every serving read that windows
-    or joins on the bucket key.
-    """
-    (
-        df.repartition(n_buckets, F.col(key))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key, *sort_cols)
-        .saveAsTable(table_name)
-    )
+    """(Re)publish ``df`` as a catalog bucketed table, bucketed on ``key``
+    and sorted by ``key, *sort_cols``, one file per bucket. Two tables
+    bucketed the SAME way on a join key sort-merge-join WITHOUT any
+    Exchange (Spark elides the shuffle only for catalog bucketed tables,
+    not for the ``partitionBy(bucket)`` analogs above); one file per
+    bucket also lets the scan report the sort order, so a
+    ``Window.partitionBy(key).orderBy(...)`` consumer (the 30-min rolling
+    frame over the gold minute grain, VERDICT r6 #4) plans with NO
+    Exchange before WindowExec — the reference's ``bucket(16, video_id)``
+    gold/dims layout (rt_content_events_aggregator_sql.py:107,
+    rt_video_cdc_upsert_sql.py:54)."""
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table_name}")
+    _append_buckets(df, table_name, key, sort_cols, n_buckets)
 
 
 def zorder_value(x, y, bits: int = 10):
@@ -279,24 +250,50 @@ def zorder_value_nd(cols, bits: int = 10):
 # Incremental maintenance of the bucketed gold layout (VERDICT r7 #5)
 # ---------------------------------------------------------------------------
 
-_BUCKET_FILE_RE = None  # compiled lazily (re import kept local to this block)
+_BUCKET_FILE_RE = re.compile(r"_(\d{5})\.c\d+")
 
 
 def _bucket_of(fname: str) -> int | None:
     """Bucket id from a bucketed-table file name (``..._00003.c000...``)."""
-    global _BUCKET_FILE_RE
-    import re
-
-    if _BUCKET_FILE_RE is None:
-        _BUCKET_FILE_RE = re.compile(r"_(\d{5})\.c\d+")
     m = _BUCKET_FILE_RE.search(fname)
     return int(m.group(1)) if m else None
 
 
+class TableSpec(NamedTuple):
+    location: str
+    columns: list[tuple[str, str]]  # (name, type) in table order
+    n_buckets: int
+    bucket_cols: list[str]
+    sort_cols: list[str]
+
+
+def table_spec(spark, table_name: str) -> TableSpec:
+    """A bucketed table's catalog entry, read with one ``DESCRIBE
+    FORMATTED``: the only place its location, schema and bucket spec
+    live."""
+    desc = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+    rows = [(r.col_name, r.data_type) for r in desc]
+    split = rows.index(("# Detailed Table Information", ""))
+    info = dict(rows[split:])
+
+    def cols(field: str) -> list[str]:
+        return [c.strip(" `") for c in info[field].strip("[]").split(",")]
+
+    return TableSpec(
+        info["Location"].removeprefix("file:"),
+        [r for r in rows[:split] if r[0]],
+        int(info["Num Buckets"]),
+        cols("Bucket Columns"),
+        cols("Sort Columns"),
+    )
+
+
+def _columns_ddl(columns: list[tuple[str, str]]) -> str:
+    return ", ".join(f"`{name}` {dtype}" for name, dtype in columns)
+
+
 def table_location(spark, table_name: str) -> str:
-    rows = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    loc = next(r.data_type for r in rows if r.col_name == "Location")
-    return loc.removeprefix("file:")
+    return table_spec(spark, table_name).location
 
 
 def append_bucketed_sorted(
@@ -306,23 +303,41 @@ def append_bucketed_sorted(
     sort_cols: Sequence[str],
     n_buckets: int = N_BUCKETS,
 ) -> None:
-    """Merge-on-read append to a bucketed gold table: the new files carry
-    the SAME bucket spec (repartition aligns writer tasks with buckets,
-    so each append adds at most one file per touched bucket). Readers
-    keep the no-Exchange property — HashPartitioning(key) survives
-    multiple files per bucket; only the sorted-output guarantee degrades
-    (Spark inserts a per-partition Sort, never a shuffle) until
-    :func:`compact_bucketed_table` restores one file per bucket. This is
-    the reference's M2 MOR-append + compaction contract
-    (legacy_docs/PipelineArchitecture.md:202-219)."""
-    (
-        df.repartition(n_buckets, F.col(key))
-        .write.mode("append")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key, *sort_cols)
-        .saveAsTable(table_name)
+    """Merge-on-read append to a bucketed gold table, created on first
+    use: the new files carry the SAME bucket spec, at most one per
+    touched bucket. Readers keep the no-Exchange property —
+    HashPartitioning(key) survives multiple files per bucket; only the
+    sorted-output guarantee degrades (Spark inserts a per-partition Sort,
+    never a shuffle) until :func:`compact_bucketed_table` restores one
+    file per bucket. This is the reference's M2 MOR-append + compaction
+    contract (legacy_docs/PipelineArchitecture.md:202-219)."""
+    _append_buckets(df, table_name, key, sort_cols, n_buckets)
+
+
+def _append_buckets(df, table_name, key, sort_cols, n_buckets) -> None:
+    """Create the table (no data) if it is missing, refuse a frame whose
+    schema or bucket spec disagrees with the catalog entry before writing
+    anything, then write ``df`` straight into the live directory with
+    :func:`_write_buckets` and refresh the catalog's file listing."""
+    spark = df.sparkSession
+    cols = [(f.name, f.dataType.simpleString()) for f in df.schema]
+    order = ", ".join(f"`{c}`" for c in (key, *sort_cols))
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {table_name} ({_columns_ddl(cols)}) "
+        f"USING parquet CLUSTERED BY (`{key}`) SORTED BY ({order}) "
+        f"INTO {n_buckets} BUCKETS"
     )
+    spec = table_spec(spark, table_name)
+    have = (spec.columns, spec.n_buckets, spec.bucket_cols, spec.sort_cols)
+    want = (cols, n_buckets, [key], [key, *sort_cols])
+    if have != want:
+        raise ValueError(f"{table_name} disagrees with its catalog entry: {have} != {want}")
+    recover_bucketed_table(spec.location)
+    _write_buckets(
+        df.repartition(n_buckets, F.col(key)), key, sort_cols, n_buckets,
+        spec.location, range(n_buckets), "append",
+    )
+    spark.sql(f"REFRESH TABLE {table_name}")
 
 
 def mor_read(
@@ -350,9 +365,6 @@ def swap_dir(tmp: str, live: str, old: str) -> None:
     so a crash leaves ``live`` intact, only ``old``, or both — each
     settled by :func:`recover_dir`, which the store must run before it
     reads ``live``."""
-    import os
-    import shutil
-
     shutil.rmtree(old, ignore_errors=True)
     if os.path.isdir(live):
         os.rename(live, old)
@@ -365,9 +377,6 @@ def recover_dir(live: str, old: str) -> None:
     fell between the two renames, so ``old`` is restored and the
     interrupted write must be replayed. ``old`` with ``live``: the swap
     committed, so ``old`` is pruned."""
-    import os
-    import shutil
-
     if os.path.isdir(old):
         if os.path.isdir(live):
             shutil.rmtree(old, ignore_errors=True)
@@ -380,9 +389,6 @@ def recover_bucketed_table(location: str) -> None:
     interrupted compaction or erasure swap (:func:`recover_dir`) and drop
     its staging dir. Safe to call unconditionally before reads or
     compactions."""
-    import os
-    import shutil
-
     tmp = location + "._tmp"
     recover_dir(location, location + "._old")
     if not os.path.isdir(location) and os.path.isdir(tmp):
@@ -411,8 +417,6 @@ def _scan_bucket_files(loc: str) -> tuple[dict[int, list[str]], list[str]]:
     error: maintenance primitives below hard-link extras through
     unchanged, so silently classifying an unknown file as an extra
     would retain rows that an erasure promised to remove (ADVICE r8/r9)."""
-    import os
-
     by_bucket: dict[int, list[str]] = {}
     extras: list[str] = []
     for f in os.listdir(loc):
@@ -439,9 +443,6 @@ def _link_untouched(
     """Hard-link every untouched bucket's files (plus extras) into a new
     staging dir, returned — same inode, zero data IO, byte identical. Keeps
     .crc shadows so ChecksumFileSystem stays happy with the old names."""
-    import os
-    import shutil
-
     tmp = loc + "._tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
@@ -458,50 +459,54 @@ def _link_untouched(
     return tmp
 
 
-def _read_buckets(spark, table_name, loc, by_bucket, touched) -> DataFrame:
-    """Every file of the touched buckets in one scan; the table schema is
-    given, so no schema-inference job runs."""
-    import os
-
+def _read_buckets(spark, spec: TableSpec, by_bucket, touched) -> DataFrame:
+    """Every file of the touched buckets in one scan; the catalog schema
+    is given, so no schema-inference job runs."""
+    loc = spec.location
     files = [os.path.join(loc, f) for b in sorted(touched) for f in by_bucket[b]]
-    return spark.read.schema(spark.table(table_name).schema).parquet(*files)
+    return spark.read.schema(_columns_ddl(spec.columns)).parquet(*files)
 
 
-def _write_buckets(df, key, sort_cols, loc, tmp, touched, tag) -> dict[int, int]:
-    """Write ``df``, clustered by ``repartition(n_buckets, key)`` — whose
-    partition id ``pmod(murmur3(key), n)`` is the bucket id ``bucketBy``
-    assigns — in one job, each partition sorted, and move each partition's
-    file into ``tmp`` under its bucket id; returns bucket -> rows, from
-    the parquet footers. Drops Spark's always-written partition-0 file
-    when it has 0 rows. No .crc for the renamed files: ChecksumFileSystem
-    tolerates a missing shadow, but a stale mismatched one would fail
-    reads."""
-    import os
-    import shutil
-    import uuid
-
+def _write_buckets(df, key, sort_cols, n_buckets, target, buckets, tag):
+    """The one writer of bucket files. Tag each row of ``df`` with its
+    bucket id, ``pmod(murmur3(key), n_buckets)`` as the catalog spec
+    assigns it (never the partition id: Spark drops a ``repartition`` its
+    input already satisfies, then may coalesce the shuffle), and write it
+    in one job to a scratch dir beside ``target``, one directory per bucket,
+    sorted by ``key, *sort_cols``; the caller's ``repartition(n_buckets,
+    key)`` puts each bucket in one task, so in one file. Every file is
+    checked first — one for a bucket outside ``buckets`` or a second one
+    for a bucket aborts before any file moves — then renamed into
+    ``target`` (never deleted: for an append it is the live table) under
+    its bucket id. Returns bucket -> rows, from the parquet footers. No
+    .crc for the renamed files: ChecksumFileSystem tolerates a missing
+    shadow, but a stale mismatched one would fail reads."""
     import pyarrow.parquet as pq
 
-    scratch = loc + "._scratch"
+    scratch = target + "._scratch"
     shutil.rmtree(scratch, ignore_errors=True)
-    df.sortWithinPartitions(key, *sort_cols).write.parquet(scratch)
-    rows: dict[int, int] = {}
-    for f in sorted(f for f in os.listdir(scratch) if f.startswith("part-")):
-        b = int(f.split("-")[1])  # part-NNNNN-...: the Spark partition id
-        n = pq.read_metadata(os.path.join(scratch, f)).num_rows
-        if b == 0 and n == 0:
-            continue
-        if b not in touched or b in rows:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"bucket rewrite wrote {f!r} ({n} rows): bucket {b} is "
-                "untouched or already written — aborting before the swap"
-            )
-        rows[b] = n
-        out = f"part-00000-{tag}-{uuid.uuid4()}_{b:05d}.c000.snappy.parquet"
-        os.rename(os.path.join(scratch, f), os.path.join(tmp, out))
-    shutil.rmtree(scratch, ignore_errors=True)
-    return rows
+    try:
+        (
+            df.withColumn("__bucket", F.pmod(F.hash(key), F.lit(n_buckets)))
+            .sortWithinPartitions("__bucket", key, *sort_cols)
+            .write.partitionBy("__bucket")
+            .parquet(scratch)
+        )
+        files: dict[int, tuple[str, int]] = {}
+        for path in sorted(glob.glob(os.path.join(scratch, "__bucket=*", "part-*"))):
+            b = int(os.path.basename(os.path.dirname(path)).removeprefix("__bucket="))
+            if b not in buckets or b in files:
+                raise RuntimeError(
+                    f"bucket write produced {path!r}: bucket {b} is not writable "
+                    "or already written — aborting before any file moves"
+                )
+            files[b] = path, pq.read_metadata(path).num_rows
+        for b, (path, _n) in files.items():
+            out = f"part-00000-{tag}-{uuid.uuid4()}_{b:05d}.c000.snappy.parquet"
+            os.rename(path, os.path.join(target, out))
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return {b: n for b, (_path, n) in files.items()}
 
 
 def _swap_table_dir(spark, table_name: str, loc: str, tmp: str) -> None:
@@ -518,31 +523,27 @@ def compact_bucketed_table(
     sort_cols: Sequence[str],
     merge_keys: Sequence[str],
     order_cols: Sequence[str],
-    n_buckets: int = N_BUCKETS,
 ) -> int:
     """Bin-pack compaction in one Spark job per call: rewrite ONLY the
     buckets holding more than one file, each into one sorted,
     merge-resolved file — read in one scan, clustered by
     ``repartition(n_buckets, key)`` (which already satisfies the merge
-    window) and written by one job, so the fixed per-job cost is paid per
-    table, not per bucket. Spark writes a file for partition 0 even when
-    it is empty: that 0-row file is dropped, and any other file for an
-    untouched bucket, two files for one bucket or a touched bucket with
-    no file aborts before the swap. Untouched buckets are HARD-LINKED
-    into the new table directory (zero data IO), then the directory is
-    swapped atomically (two renames, torn-swap recoverable), restoring
-    the one-file-per-bucket precondition of the exchange-free sorted
-    window read. Returns the number of buckets compacted.
+    window) and written by :func:`_write_buckets` in one job, so the fixed
+    per-job cost is paid per table, not per bucket; a touched bucket left
+    with no file aborts before the swap. Untouched buckets are
+    HARD-LINKED into the new table directory (zero data IO), then the
+    directory swaps atomically (two renames, torn-swap recoverable),
+    restoring the one-file-per-bucket precondition of the exchange-free
+    sorted window read. Returns the number of buckets compacted.
 
     Work is O(touched buckets x bucket size), never O(table) — the same
     shape as the streaming SCD2/MV maintainers."""
-    import shutil
-
     from shortvideohybridanalyticslakehouse_spark.operators.dedup import (
         latest_per_key,
     )
 
-    loc = table_location(spark, table_name)
+    spec = table_spec(spark, table_name)
+    loc = spec.location
     recover_bucketed_table(loc)
     by_bucket, extras = _scan_bucket_files(loc)
     touched = {b for b, fs in by_bucket.items() if len(fs) > 1}
@@ -550,13 +551,14 @@ def compact_bucketed_table(
         return 0
 
     tmp = _link_untouched(loc, by_bucket, touched, extras)
-    bucket_df = _read_buckets(spark, table_name, loc, by_bucket, touched)
+    bucket_df = _read_buckets(spark, spec, by_bucket, touched)
     merged = latest_per_key(
-        bucket_df.repartition(n_buckets, F.col(key)), merge_keys, order_cols
+        bucket_df.repartition(spec.n_buckets, F.col(key)), merge_keys, order_cols
     )
-    written = _write_buckets(merged, key, sort_cols, loc, tmp, touched, "compact")
+    written = _write_buckets(
+        merged, key, sort_cols, spec.n_buckets, tmp, touched, "compact"
+    )
     if set(written) != touched:
-        shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(f"compaction wrote no file for bucket(s) {touched - set(written)}")
 
     _swap_table_dir(spark, table_name, loc, tmp)
@@ -573,7 +575,7 @@ def delete_keys_bucketed(
     """Targeted delete (GDPR right-to-be-forgotten / CCPA erasure) over a
     bucketed gold table, one rewrite job per call: physically rewrite ONLY
     the buckets whose files contain the given key values, with
-    compaction's writer and partition-0 rule; every other bucket is
+    compaction's writer (:func:`_write_buckets`); every other bucket is
     HARD-LINKED into the new table directory (zero data IO, byte
     identical), then the directory swaps atomically through the same
     two-rename, torn-swap-recoverable protocol as
@@ -601,10 +603,8 @@ def delete_keys_bucketed(
     Deleting a key that arrived via MOR appends removes EVERY version in
     the bucket's file set (base + deltas), not just the latest.
     """
-    import os
-    import shutil
-
-    loc = table_location(spark, table_name)
+    spec = table_spec(spark, table_name)
+    loc = spec.location
     recover_bucketed_table(loc)
     # Foreign-file guard FIRST: a directory listing is cheap and
     # deterministic, so any non-bucket-named, non-sidecar file aborts
@@ -632,19 +632,18 @@ def delete_keys_bucketed(
     if not touched:
         return 0, 0
 
-    desc = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    n_buckets = int(next(r.data_type for r in desc if r.col_name == "Num Buckets"))
     tmp = _link_untouched(loc, by_bucket, touched, extras)
-    bucket_df = _read_buckets(spark, table_name, loc, by_bucket, touched)
+    bucket_df = _read_buckets(spark, spec, by_bucket, touched)
     n_before, matched = bucket_df.agg(
         F.count(F.lit(1)), F.count(F.when(F.col(key).isin(vals), 1))
     ).first()
     kept = bucket_df.filter(F.col(key).isNull() | ~F.col(key).isin(vals))
-    kept = kept.repartition(n_buckets, F.col(key))
-    written = _write_buckets(kept, key, sort_cols, loc, tmp, touched, "erase")
+    kept = kept.repartition(spec.n_buckets, F.col(key))
+    written = _write_buckets(
+        kept, key, sort_cols, spec.n_buckets, tmp, touched, "erase"
+    )
     deleted = n_before - sum(written.values())
     if deleted != matched:
-        shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(
             f"erasure accounting mismatch: predicate matched {matched} "
             f"rows but rewrite dropped {deleted} — aborting swap"

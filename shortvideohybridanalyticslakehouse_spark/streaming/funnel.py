@@ -75,7 +75,7 @@ def build_curation_probe_table(
       - one row per distinct holdout ``gram_k``-gram hash: ('gram', gh,
         null, null)
 
-    Write it out with bucketBy(n, 'ptype', 'pkey') for the co-located
+    Write it out bucketed on ('ptype', 'pkey') for the co-located
     join at scale — the bucketed scan's partitioning feeds the screening
     join with NO static-side Exchange (asserted in
     test_stream_curation_funnel.py) — and point the stream at the table:

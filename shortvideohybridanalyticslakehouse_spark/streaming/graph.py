@@ -30,9 +30,9 @@ Design (foreachBatch):
 Scale: per-batch work is O(|dE| * avg-degree) join probes plus one
 partition-pruned scan of the prior store; the store-side shuffle of the
 probe joins is the standard cost of unindexed adjacency — a bucketed
-edge layout (plans/ddl.write_bucketed_table on the probe key) removes it
-when one probe key dominates. Nothing rewrites O(store) per batch and
-nothing collects edges onto the driver.
+edge layout (plans/ddl.write_bucketed_sorted_table on the probe key)
+removes it when one probe key dominates. Nothing rewrites O(store) per
+batch and nothing collects edges onto the driver.
 
 Reference: the batch census derives from the same oriented-join shape
 (queries_ext61.py); the reference engine has no streaming graph surface

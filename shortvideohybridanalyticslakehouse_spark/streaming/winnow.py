@@ -22,8 +22,8 @@ Per-batch cost: batch-fps x store-fps equi-join on the fingerprint hash
 (bucket-bounded by the hot cap) + the intra-batch smaller-id pair join.
 The store-side scan grows with the corpus — the standard inverted-index
 growth; at 100 TB the store becomes a bucketed table on the hash so the
-probe join co-locates (plans/ddl.write_bucketed_table), and hot hashes
-are already excluded by the cap before any pairing.
+probe join co-locates (plans/ddl.write_bucketed_sorted_table), and hot
+hashes are already excluded by the cap before any pairing.
 
 Verdicts land in ``flags/batch=N/`` (doc_id, is_dup, first_dup_of,
 shared_fps) — replay-idempotent by the same own-partition-overwrite

@@ -150,7 +150,6 @@ def test_streaming_appends_then_compaction(spark, mor_table, tmp_path):
     n_compacted = compact_bucketed_table(
         spark, TABLE, "video_id", ["minute"],
         merge_keys=["video_id", "minute"], order_cols=["ver"],
-        n_buckets=N_BUCKETS,
     )
     assert n_compacted == len(grown)
 
@@ -199,7 +198,6 @@ def test_streaming_appends_then_compaction(spark, mor_table, tmp_path):
     assert compact_bucketed_table(
         spark, TABLE, "video_id", ["minute"],
         merge_keys=["video_id", "minute"], order_cols=["ver"],
-        n_buckets=N_BUCKETS,
     ) == 0
 
 
@@ -241,7 +239,6 @@ def _compact_str(spark):
     return compact_bucketed_table(
         spark, STR_TABLE, "video_id", ["minute"],
         merge_keys=["video_id", "minute"], order_cols=["ver"],
-        n_buckets=STR_BUCKETS,
     )
 
 

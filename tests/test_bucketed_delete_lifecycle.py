@@ -98,7 +98,6 @@ def test_erase_then_compact_keeps_invariants(spark, lifecycle_table):
         ["minute"],
         ["video_id", "minute"],
         ["ver"],
-        n_buckets=N_BUCKETS,
     )
     loc = table_location(spark, TABLE)
     per_bucket: dict[int, int] = {}
@@ -183,7 +182,7 @@ def test_maintenance_rejects_foreign_data_file(spark, lifecycle_table):
             with pytest.raises(RuntimeError, match="unrecognized file"):
                 compact_bucketed_table(
                     spark, TABLE, "video_id", ["minute"],
-                    ["video_id", "minute"], ["ver"], N_BUCKETS,
+                    ["video_id", "minute"], ["ver"],
                 )
             spark.sql(f"REFRESH TABLE {TABLE}")
             with pytest.raises(RuntimeError, match="unrecognized file"):
@@ -232,7 +231,7 @@ def test_erase_emptying_a_bucket(spark, lifecycle_table):
     )
     assert compact_bucketed_table(
         spark, TABLE, "video_id", ["minute"], ["video_id", "minute"],
-        ["ver"], n_buckets=N_BUCKETS,
+        ["ver"],
     ) == len(by_bucket) - 1
     mor2 = _no_exchange_window_plan(spark)
     assert mor2.filter(F.col("video_id").isin(erased)).count() == 0

@@ -51,3 +51,51 @@ def test_no_checkout_root_literals():
                         for line, lit in _checkout_literals(path)
                     ]
     assert not hits, "checkout root named in a literal:\n" + "\n".join(hits)
+
+
+def _entry_before_package(path: str):
+    """Lines where ``path`` imports ``__spark_entry__`` while no import of
+    the package precedes it in the same scope or an enclosing one.
+    ``__spark_entry__`` puts a fixed checkout path first on ``sys.path``,
+    so only a package imported before it binds to the running checkout."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    hits = []
+
+    def names(node):
+        if isinstance(node, ast.Import):
+            return [a.name for a in node.names]
+        if isinstance(node, ast.ImportFrom) and not node.level:
+            return [node.module or ""]
+        return []
+
+    def scan(node, bound: bool) -> bool:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, bound)  # its body runs with what is bound now
+                continue
+            for name in names(child):
+                if name.split(".")[0] == PKG:
+                    bound = True
+                elif name == "__spark_entry__" and not bound:
+                    hits.append(child.lineno)
+            bound = scan(child, bound)
+        return bound
+
+    scan(tree, False)
+    return hits
+
+
+def test_tools_import_package_before_spark_entry():
+    hits = []
+    for dirpath, _dirs, files in os.walk(os.path.join(ROOT, "tools")):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                hits += [
+                    f"{os.path.relpath(path, ROOT)}:{line}"
+                    for line in _entry_before_package(path)
+                ]
+    assert not hits, (
+        "__spark_entry__ imported before the package:\n" + "\n".join(hits)
+    )

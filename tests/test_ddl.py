@@ -65,7 +65,9 @@ def test_write_bronze_hour_partitions(spark, tmp_path):
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     # Two tables bucketed identically on the join key must sort-merge-join
     # with ZERO Exchange operators (the co-located join contract).
-    from shortvideohybridanalyticslakehouse_spark.plans.ddl import write_bucketed_table
+    from shortvideohybridanalyticslakehouse_spark.plans.ddl import (
+        write_bucketed_sorted_table,
+    )
 
     left = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("a")
@@ -75,8 +77,8 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     )
     spark.sql("DROP TABLE IF EXISTS bkt_left")
     spark.sql("DROP TABLE IF EXISTS bkt_right")
-    write_bucketed_table(left, "bkt_left", "k", n_buckets=8)
-    write_bucketed_table(right, "bkt_right", "k", n_buckets=8)
+    write_bucketed_sorted_table(left, "bkt_left", "k", [], n_buckets=8)
+    write_bucketed_sorted_table(right, "bkt_right", "k", [], n_buckets=8)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

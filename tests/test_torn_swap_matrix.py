@@ -115,7 +115,6 @@ def _catalog_store(spark, tmp, request):
         compact_bucketed_table(
             spark, table, "video_id", ["minute"],
             merge_keys=["video_id", "minute"], order_cols=["ver"],
-            n_buckets=N_BUCKETS,
         )
 
     def read():

@@ -110,6 +110,10 @@ def main() -> int:
 
     import duckdb
 
+    # bind the package to this checkout before __spark_entry__ puts its
+    # fixed path first on sys.path (as tools/check_oracle.py does)
+    import shortvideohybridanalyticslakehouse_spark  # noqa: F401
+
     import __spark_entry__ as entrymod
     from tools.check_oracle import frame_hash
     from tools.sketch_pins import load_pins

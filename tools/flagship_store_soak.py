@@ -7,8 +7,9 @@ metadata; this soak answers the same question for the serving store at
 10x the horizon: does ANY quantity grow with batches lived through
 rather than with corpus/cadence constants?
 
-Per batch: append a small synthetic gold delta (same writer the stream's
-_upsert uses), compact on the stream's cadence, and sample gates:
+Per batch: append a small synthetic gold delta with the stream's writer
+(``append_bucketed_sorted``, which creates the table on the first batch),
+compact on the stream's cadence, and sample gates:
 
   * files per bucket       <= compact_every + 1   (cadence-bounded)
   * total store file count <= n_buckets x (compact_every + 1)
@@ -102,14 +103,9 @@ def main() -> int:
     for b in range(batches):
         t0 = time.time()
         df = _batch(spark, b)
-        if b == 0:
-            ddl.write_bucketed_sorted_table(
-                df, TABLE, "video_id", ["window_start"], n_buckets=N_BUCKETS
-            )
-        else:
-            ddl.append_bucketed_sorted(
-                df, TABLE, "video_id", ["window_start"], n_buckets=N_BUCKETS
-            )
+        ddl.append_bucketed_sorted(
+            df, TABLE, "video_id", ["window_start"], n_buckets=N_BUCKETS
+        )
         _ledger_update(ledger, b)
         if (b + 1) % COMPACT_EVERY == 0:
             ddl.compact_bucketed_table(
@@ -119,7 +115,6 @@ def main() -> int:
                 ["window_start"],
                 merge_keys=["video_id", "window_start"],
                 order_cols=["src_batch"],
-                n_buckets=N_BUCKETS,
             )
         walls.append(time.time() - t0)
 

@@ -209,7 +209,7 @@ def run_interleaving(spark, table: str, seed: int, n_ops: int) -> dict:
                     else:
                         ddl.compact_bucketed_table(
                             spark, table, "video_id", ["minute"],
-                            ["video_id", "minute"], ["ver"], N_BUCKETS,
+                            ["video_id", "minute"], ["ver"],
                         )
                     op_applied = True
                 except _InjectedCrash:

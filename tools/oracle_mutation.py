@@ -510,11 +510,14 @@ def main() -> int:
 
     import duckdb
 
-    import __spark_entry__ as entrymod
+    # the package binds to this checkout before __spark_entry__ puts its
+    # fixed path first on sys.path (as tools/check_oracle.py does)
     from shortvideohybridanalyticslakehouse_spark.plans.registry import (
         REGISTRY,
         load_all,
     )
+
+    import __spark_entry__ as entrymod
     from tools.check_oracle import frame_hash
 
     load_all()
