@@ -314,11 +314,10 @@ def append_bucketed_sorted(
     _append_buckets(df, table_name, key, sort_cols, n_buckets)
 
 
-def _append_buckets(df, table_name, key, sort_cols, n_buckets) -> None:
-    """Create the table (no data) if it is missing, refuse a frame whose
-    schema or bucket spec disagrees with the catalog entry before writing
-    anything, then write ``df`` straight into the live directory with
-    :func:`_write_buckets` and refresh the catalog's file listing."""
+def _ensure_table(df, table_name, key, sort_cols, n_buckets) -> TableSpec:
+    """Create the table (no data) if it is missing and return its spec,
+    refusing a frame whose schema or bucket spec disagrees with the
+    catalog entry before anything is written."""
     spark = df.sparkSession
     cols = [(f.name, f.dataType.simpleString()) for f in df.schema]
     order = ", ".join(f"`{c}`" for c in (key, *sort_cols))
@@ -332,12 +331,20 @@ def _append_buckets(df, table_name, key, sort_cols, n_buckets) -> None:
     want = (cols, n_buckets, [key], [key, *sort_cols])
     if have != want:
         raise ValueError(f"{table_name} disagrees with its catalog entry: {have} != {want}")
+    return spec
+
+
+def _append_buckets(df, table_name, key, sort_cols, n_buckets) -> None:
+    """Write ``df`` straight into the live directory of the (created if
+    missing, spec-checked) table with :func:`_write_buckets`, after
+    recovering a torn swap, and refresh the catalog's file listing."""
+    spec = _ensure_table(df, table_name, key, sort_cols, n_buckets)
     recover_bucketed_table(spec.location)
     _write_buckets(
         df.repartition(n_buckets, F.col(key)), key, sort_cols, n_buckets,
         spec.location, range(n_buckets), "append",
     )
-    spark.sql(f"REFRESH TABLE {table_name}")
+    df.sparkSession.sql(f"REFRESH TABLE {table_name}")
 
 
 def mor_read(
@@ -516,6 +523,20 @@ def _swap_table_dir(spark, table_name: str, loc: str, tmp: str) -> None:
     spark.sql(f"REFRESH TABLE {table_name}")
 
 
+def _key_buckets(spark, keys: list, key_type: str, n_buckets: int) -> set[int]:
+    """The buckets of ``keys``, ``pmod(hash(key), n_buckets)`` as
+    :func:`_write_buckets` assigns them, each key bound as a literal cast
+    to the key's catalog type (``hash`` of an int literal differs from
+    ``hash`` of the same bigint). The VALUES relation is local, so the
+    lookup launches no Spark job."""
+    if not keys:
+        return set()
+    args = {f"k{i}": k for i, k in enumerate(keys)}
+    values = ", ".join(f"(CAST(:{a} AS {key_type}))" for a in args)
+    sql = f"SELECT pmod(hash(k), {n_buckets}) FROM VALUES {values} AS t(k)"
+    return {r[0] for r in spark.sql(sql, args=args).collect()}
+
+
 def compact_bucketed_table(
     spark,
     table_name: str,
@@ -523,18 +544,32 @@ def compact_bucketed_table(
     sort_cols: Sequence[str],
     merge_keys: Sequence[str],
     order_cols: Sequence[str],
+    rows: DataFrame | None = None,
+    keys: Sequence = (),
+    n_buckets: int = N_BUCKETS,
 ) -> int:
     """Bin-pack compaction in one Spark job per call: rewrite ONLY the
-    buckets holding more than one file, each into one sorted,
-    merge-resolved file — read in one scan, clustered by
-    ``repartition(n_buckets, key)`` (which already satisfies the merge
-    window) and written by :func:`_write_buckets` in one job, so the fixed
-    per-job cost is paid per table, not per bucket; a touched bucket left
-    with no file aborts before the swap. Untouched buckets are
-    HARD-LINKED into the new table directory (zero data IO), then the
-    directory swaps atomically (two renames, torn-swap recoverable),
-    restoring the one-file-per-bucket precondition of the exchange-free
-    sorted window read. Returns the number of buckets compacted.
+    touched buckets, each into one sorted, merge-resolved file — read in
+    one scan, clustered by ``repartition(n_buckets, key)`` (which already
+    satisfies the merge window) and written by :func:`_write_buckets` in
+    one job, so the fixed per-job cost is paid per table, not per bucket.
+    Untouched buckets are HARD-LINKED into the new table directory (zero
+    data IO), then the directory swaps atomically (two renames, torn-swap
+    recoverable), restoring the one-file-per-bucket precondition of the
+    exchange-free sorted window read. Returns the number of buckets
+    touched.
+
+    Without ``rows`` the touched buckets are those holding more than one
+    file. With ``rows`` (new row versions in the table's columns) and
+    ``keys`` (the bounded list of key values they carry) the compaction
+    also folds in a write: the buckets of ``keys`` are touched too, their
+    files are read together with ``rows``, and the result is what an
+    append of ``rows`` followed by a compaction leaves, for one rewrite
+    instead of two. The table is created if it is missing and
+    ``n_buckets`` is checked against its catalog entry, as an append
+    does. A touched bucket that had files aborts before the swap if it is
+    left with none; a row outside the touched buckets aborts in the
+    writer before any file moves.
 
     Work is O(touched buckets x bucket size), never O(table) — the same
     shape as the streaming SCD2/MV maintainers."""
@@ -542,24 +577,31 @@ def compact_bucketed_table(
         latest_per_key,
     )
 
-    spec = table_spec(spark, table_name)
+    if rows is None:
+        spec = table_spec(spark, table_name)
+    else:
+        spec = _ensure_table(rows, table_name, key, sort_cols, n_buckets)
     loc = spec.location
     recover_bucketed_table(loc)
     by_bucket, extras = _scan_bucket_files(loc)
     touched = {b for b, fs in by_bucket.items() if len(fs) > 1}
-    if not touched:
+    touched |= _key_buckets(spark, list(keys), dict(spec.columns)[key], spec.n_buckets)
+    stored = touched & set(by_bucket)
+    if stored:
+        scan = _read_buckets(spark, spec, by_bucket, stored)
+        rows = scan if rows is None else scan.union(rows)
+    elif rows is None:
         return 0
 
     tmp = _link_untouched(loc, by_bucket, touched, extras)
-    bucket_df = _read_buckets(spark, spec, by_bucket, touched)
     merged = latest_per_key(
-        bucket_df.repartition(spec.n_buckets, F.col(key)), merge_keys, order_cols
+        rows.repartition(spec.n_buckets, F.col(key)), merge_keys, order_cols
     )
     written = _write_buckets(
         merged, key, sort_cols, spec.n_buckets, tmp, touched, "compact"
     )
-    if set(written) != touched:
-        raise RuntimeError(f"compaction wrote no file for bucket(s) {touched - set(written)}")
+    if not stored <= set(written):
+        raise RuntimeError(f"compaction wrote no file for bucket(s) {stored - set(written)}")
 
     _swap_table_dir(spark, table_name, loc, tmp)
     return len(touched)

@@ -15,9 +15,14 @@ Execution shape (the 100 TB story):
   the 1-min tumbling agg (bounded state: keys x watermark horizon);
 - every micro-batch stages its updated 1-min windows to parquet FIRST
   (scd2/mv stage-first rule: the stateful subtree is consumed exactly
-  once), merges them into the gold store, then recomputes rolling +
-  decision ONLY for the touched videos — per-batch work is
-  O(touched videos x retention minutes), never O(gold table);
+  once), writes them to the gold store, then recomputes rolling +
+  decision ONLY for the touched videos and writes those to the decision
+  store — per-batch work is O(touched videos x retention minutes),
+  never O(gold table);
+- each store write is a merge-on-read append, except on a compaction
+  batch, where the batch's rows go through the compaction itself: each
+  store's touched buckets are rewritten once, not appended to and then
+  rewritten; a batch that updated no window writes nothing;
 - freshness is real, not modeled: ingest time is the source file's
   modification time (what a Kafka source would give as log-append
   time), and each batch records P95/max of decision-write wall time
@@ -31,7 +36,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -170,13 +175,17 @@ def start_flagship_stream(
     """One streaming query, full serving path, measured freshness.
 
     Store layout (the 100 TB write path): gold and decisions are
-    BUCKETED merge-on-read catalog tables (plans/ddl.py) — each batch
-    APPENDS bucket-aligned files (O(batch) write, no table rewrite),
-    readers resolve the newest row version per key, and every
-    ``COMPACT_EVERY`` batches the per-bucket bin-pack compaction folds
-    the appends back to one sorted file per bucket, restoring the
-    exchange-free read. Write amplification per batch is O(batch), not
-    O(table) — the scd2/mv scale shape applied to the serving path.
+    BUCKETED merge-on-read catalog tables (plans/ddl.py) — a batch
+    APPENDS bucket-aligned files (O(batch) write, no table rewrite) and
+    readers resolve the newest row version per key. Every
+    ``compact_every``-th batch instead hands its rows to the per-bucket
+    bin-pack compaction (``compact_bucketed_table(rows=..., keys=...)``),
+    which rewrites the buckets holding appends or the batch's videos to
+    one sorted, merge-resolved file each, restoring the exchange-free
+    read; gold is folded before the decision recompute reads it. A batch
+    that updated no window writes nothing. Write amplification per batch
+    is O(touched buckets), not O(table) — the scd2/mv scale shape applied
+    to the serving path.
 
     ``out_dir`` keeps the filesystem artifacts:
       freshness/   batch_<id>.json with p95/max event->decision seconds
@@ -199,51 +208,60 @@ def start_flagship_stream(
         # stage-first: the stateful subtree is consumed exactly once
         stage = os.path.join(stage_dir, f"batch_{batch_id}")
         shutil.rmtree(stage, ignore_errors=True)
-        batch_df.write.mode("overwrite").parquet(stage)
-        staged = spark.read.parquet(stage)
-
-        # one action over the batch: the videos it touched (bounded by the
-        # batch's keys; a literal IN lets Spark bucket-prune the MOR read)
-        # and the freshness anchors. Latency per window is done - ingest,
-        # so its P95 is done - P5(ingest) and its max done - min(ingest).
+        # the stage write also yields the videos the batch touched
+        # (bounded by the batch's keys; a literal IN lets Spark
+        # bucket-prune the MOR read) and the freshness anchors, as
+        # observed metrics: no job of their own. Latency per window is
+        # done - ingest, so its P95 is done - P5(ingest) and its max
+        # done - min(ingest).
         ingest_s = F.unix_micros("ingest_max") / 1e6
-        row = staged.agg(
+        anchors = Observation()
+        batch_df.observe(
+            anchors,
             F.collect_set("video_id").alias("touched"),
             F.count(F.lit(1)).alias("n"),
             F.percentile(ingest_s, 0.05).alias("p5"),
             F.min(ingest_s).alias("first"),
-        ).first()
-        ddl.append_bucketed_sorted(
-            staged, gold_tbl, "video_id", ["window_start"], GOLD_BUCKETS
-        )
-        if not row.touched:
+        ).write.mode("overwrite").parquet(stage)
+        row = anchors.get
+        if not row["touched"]:  # no window updated: nothing to write
             shutil.rmtree(stage, ignore_errors=True)
             return
-        # recompute rolling+decision only for videos this batch touched
-        gold_touched = read_gold(spark, out_dir).filter(
-            F.col("video_id").isin(row.touched)
-        )
-        ctx = _decisions_for(gold_touched, dims, thresholds)
-        # appending the recompute makes it the newest version for every
-        # (video, window) whose rolling sums moved; unchanged windows
-        # append content-identical rows, so whichever version the MOR
-        # read keeps, the result is the same
-        ddl.append_bucketed_sorted(
-            ctx, dec_tbl, "video_id", ["window_start"], GOLD_BUCKETS
-        )
-        if (batch_id + 1) % compact_every == 0:
-            for tbl, order in (
-                (gold_tbl, ["processed_at"]),
-                (dec_tbl, ["max_processed_at_30m"]),
-            ):
+        # the schema is known: reading it back runs no footer-merge job
+        staged = spark.read.schema(batch_df.schema).parquet(stage)
+        compact = (batch_id + 1) % compact_every == 0
+
+        def store(df: DataFrame, tbl: str, order: str) -> None:
+            # a compaction batch folds its rows into the compaction: one
+            # rewrite of the touched buckets instead of append + rewrite
+            if compact:
                 ddl.compact_bucketed_table(
                     spark,
                     tbl,
                     "video_id",
                     ["window_start"],
                     merge_keys=["video_id", "window_start"],
-                    order_cols=order,
+                    order_cols=[order],
+                    rows=df,
+                    keys=row["touched"],
+                    n_buckets=GOLD_BUCKETS,
                 )
+            else:
+                ddl.append_bucketed_sorted(
+                    df, tbl, "video_id", ["window_start"], GOLD_BUCKETS
+                )
+
+        store(staged, gold_tbl, "processed_at")
+        # recompute rolling+decision only for videos this batch touched
+        gold_touched = read_gold(spark, out_dir).filter(
+            F.col("video_id").isin(row["touched"])
+        )
+        ctx = _decisions_for(gold_touched, dims, thresholds)
+        # writing the recompute makes it the newest version for every
+        # (video, window) whose rolling sums moved; unchanged windows
+        # write content-identical rows, so whichever version the MOR
+        # read keeps, the result is the same
+        store(ctx, dec_tbl, "max_processed_at_30m")
         # freshness: decisions for THIS batch's updated windows are now
         # queryable
         done = time.time()
@@ -251,9 +269,9 @@ def start_flagship_stream(
             json.dump(
                 {
                     "batch_id": batch_id,
-                    "windows_updated": row.n,
-                    "p95_latency_s": done - row.p5,
-                    "max_latency_s": done - row.first,
+                    "windows_updated": row["n"],
+                    "p95_latency_s": done - row["p5"],
+                    "max_latency_s": done - row["first"],
                 },
                 f,
             )

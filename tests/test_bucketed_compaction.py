@@ -332,3 +332,162 @@ def test_compaction_job_count_is_constant(spark, str_keys, count_jobs):
         assert n == len(touched)
     assert jobs[4] == jobs[8], jobs
     assert jobs[4] <= 2, jobs  # the write, and under AQE its map stage
+
+
+# --- compaction that folds in a batch's new rows (rows=, keys=) ----------
+
+
+def _fold(spark, table, rows, keys, n_buckets):
+    return compact_bucketed_table(
+        spark, table, "video_id", ["minute"],
+        merge_keys=["video_id", "minute"], order_cols=["ver"],
+        rows=rows, keys=keys, n_buckets=n_buckets,
+    )
+
+
+def _table_rows(spark, table):
+    spark.sql(f"REFRESH TABLE {table}")
+    return sorted(
+        (r.video_id, str(r.minute), r.n, r.ver)
+        for r in spark.table(table).collect()
+    )
+
+
+def _string_case(spark):
+    """String keys, 16 buckets, bucket 0 without a file: an earlier
+    append left two files in bucket 5; the new rows update keys of
+    buckets 3 and 9 and bring the first key of bucket 0."""
+    by_bucket: dict[int, list[str]] = {}
+    for r in spark.range(400).select(
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("k")
+    ).select("k", F.expr("pmod(hash(k), 16)").alias("b")).collect():
+        by_bucket.setdefault(r.b, []).append(r.k)
+    base = _str_rows(spark, [k for b, ks in by_bucket.items() if b for k in ks[:3]], 0)
+    earlier = _str_rows(spark, by_bucket[5][:1], 1)
+    keys = [by_bucket[b][0] for b in (0, 3, 9)]
+    return base, earlier, _str_rows(spark, keys, 2), keys, 16, {0, 3, 5, 9}
+
+
+def _bigint_case(spark):
+    """Bigint keys (``hash`` of an int literal would pick other buckets),
+    8 buckets: the new rows update videos 10-12 and bring videos 30-32."""
+    base = _gold_rows(spark, range(0, 20), range(0, 10), ver=0)
+    earlier = _gold_rows(spark, range(0, 2), range(0, 3), ver=1)
+    new = _gold_rows(spark, range(10, 13), range(5, 12), ver=2).union(
+        _gold_rows(spark, range(30, 33), range(0, 4), ver=2)
+    )
+    keys = [*range(10, 13), *range(30, 33)]
+    return base, earlier, new, keys, N_BUCKETS, None
+
+
+@pytest.mark.parametrize("case", [_string_case, _bigint_case])
+def test_fold_equals_append_then_compact(spark, case):
+    """One compaction that takes the batch's rows leaves the same rows and
+    the same files per bucket (one per bucket) as an append of them
+    followed by a compaction."""
+    base, earlier, new, keys, n, want_touched = case(spark)
+    two_step, fused = "gold_fold_two_step", "gold_fold_fused"
+    try:
+        for t in (two_step, fused):
+            write_bucketed_sorted_table(base, t, "video_id", ["minute"], n_buckets=n)
+            append_bucketed_sorted(earlier, t, "video_id", ["minute"], n_buckets=n)
+        append_bucketed_sorted(new, two_step, "video_id", ["minute"], n_buckets=n)
+        compact_bucketed_table(
+            spark, two_step, "video_id", ["minute"],
+            merge_keys=["video_id", "minute"], order_cols=["ver"],
+        )
+        touched = _fold(spark, fused, new, keys, n)
+        if want_touched is not None:
+            assert touched == len(want_touched)
+
+        assert _table_rows(spark, fused) == _table_rows(spark, two_step)
+        files = _files_by_bucket(table_location(spark, fused))
+        assert all(len(fs) == 1 for fs in files.values())
+        assert set(files) == set(_files_by_bucket(table_location(spark, two_step)))
+    finally:
+        for t in (two_step, fused):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_fold_creates_missing_table(spark):
+    """The first batch of a store may be a compaction batch: the fold
+    creates the table, and a key bucket with no rows writes no file."""
+    table = "gold_fold_created"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        rows = _gold_rows(spark, range(0, 4), range(0, 3), ver=0)
+        assert _fold(spark, table, rows, [0, 1, 2, 3, 99], N_BUCKETS) >= 1
+        files = _files_by_bucket(table_location(spark, table))
+        assert all(len(fs) == 1 for fs in files.values())
+        want = spark.createDataFrame([(99,), *((v,) for v in range(4))], "k bigint")
+        by_key = {
+            r.k: r.b
+            for r in want.select("k", F.expr(f"pmod(hash(k), {N_BUCKETS})").alias("b")).collect()
+        }
+        assert set(files) == {by_key[v] for v in range(4)}
+        assert _table_rows(spark, table) == sorted(
+            (r.video_id, str(r.minute), r.n, r.ver) for r in rows.collect()
+        )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_fold_row_outside_keys_aborts(spark, str_keys):
+    """A row whose key is not in ``keys`` (and whose bucket is otherwise
+    untouched) aborts in the writer before any file moves: the table
+    directory stays byte-unchanged."""
+    loc = table_location(spark, STR_TABLE)
+
+    def snapshot():
+        return {
+            f: _sha(os.path.join(loc, f))
+            for f in os.listdir(loc)
+            if not f.startswith(".")
+        }
+
+    before = snapshot()
+    rows = _str_rows(spark, [str_keys[3][0], str_keys[7][0]], 1)
+    with pytest.raises(Exception, match="not writable"):
+        _fold(spark, STR_TABLE, rows, [str_keys[3][0]], STR_BUCKETS)
+    assert snapshot() == before
+
+
+def test_fold_job_count_is_constant(spark, str_keys, count_jobs):
+    """The fold launches the same number of Spark jobs for 4 touched
+    buckets as for 8."""
+    jobs = {}
+    for touched in ([2, 5, 8, 11], [1, 4, 7, 10, 13, 14, 15, 3]):
+        keys = [str_keys[b][0] for b in touched]
+        rows = _str_rows(spark, keys, 2)
+        jobs[len(touched)], n = count_jobs(
+            lambda: _fold(spark, STR_TABLE, rows, keys, STR_BUCKETS)
+        )
+        assert n == len(touched)
+    assert jobs[4] == jobs[8], jobs
+    assert jobs[4] <= 2, jobs  # the write, and under AQE its map stage
+
+
+def test_key_bucket_lookup_launches_no_job(spark, str_keys, count_jobs):
+    """The key -> bucket lookup runs over a local VALUES relation: no Spark
+    job, and each key is hashed as its catalog type."""
+    from shortvideohybridanalyticslakehouse_spark.plans.ddl import _key_buckets
+
+    keys = [str_keys[b][0] for b in (0, 4, 9)]
+    n, got = count_jobs(lambda: _key_buckets(spark, keys, "string", STR_BUCKETS))
+    assert n == 0
+    assert got == {0, 4, 9}
+
+    want = {
+        r.id: r.b
+        for r in spark.range(10).select(
+            "id", F.expr(f"pmod(hash(id), {N_BUCKETS})").alias("b")
+        ).collect()
+    }
+
+    def per_key(key_type):
+        return {v: _key_buckets(spark, [v], key_type, N_BUCKETS) for v in want}
+
+    n, as_bigint = count_jobs(lambda: per_key("bigint"))
+    assert n == 0
+    assert as_bigint == {v: {b} for v, b in want.items()}
+    assert per_key("int") != as_bigint  # hash(int) != hash(bigint)

@@ -2,8 +2,9 @@
 two-rename directory swap, so every store must survive a crash at each
 point of it.
 
-Stores: the catalog bucketed table (compaction), the parquet upsert
-table (``jobs._merge_overwrite``), one SCD2 bucket and one MV bucket.
+Stores: the catalog bucketed table (compaction, and the compaction
+that folds in a batch's rows), the parquet upsert table
+(``jobs._merge_overwrite``), one SCD2 bucket and one MV bucket.
 Crash points are the ones of ``tools/interleave_soak._crashing_swap``:
 
   0: tmp fully built, swap not started
@@ -84,7 +85,10 @@ def _bucket_path(store: str, b: int) -> str:
     return os.path.join(store, f"bucket={b}")
 
 
-def _catalog_store(spark, tmp, request):
+def _catalog_table(spark, request, fold: bool):
+    """A catalog bucketed table of 8 videos x 2 minutes, and 4 videos'
+    newer versions that an append then a compaction (``fold=False``), or
+    one compaction that takes them as ``rows`` (``fold=True``), merge."""
     table = "gold_torn_matrix"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     request.addfinalizer(lambda: spark.sql(f"DROP TABLE IF EXISTS {table}"))
@@ -103,9 +107,13 @@ def _catalog_store(spark, tmp, request):
     write_bucketed_sorted_table(
         frame(base), table, "video_id", ["minute"], n_buckets=N_BUCKETS
     )
-    append_bucketed_sorted(
-        frame(newer), table, "video_id", ["minute"], n_buckets=N_BUCKETS
-    )
+    if not fold:
+        append_bucketed_sorted(
+            frame(newer), table, "video_id", ["minute"], n_buckets=N_BUCKETS
+        )
+        fold_args = {}
+    else:
+        fold_args = {"rows": frame(newer), "keys": list(range(4)), "n_buckets": N_BUCKETS}
     latest = {}
     for r in base + newer:
         if r[:2] not in latest or r[3] > latest[r[:2]][3]:
@@ -114,7 +122,7 @@ def _catalog_store(spark, tmp, request):
     def apply():
         compact_bucketed_table(
             spark, table, "video_id", ["minute"],
-            merge_keys=["video_id", "minute"], order_cols=["ver"],
+            merge_keys=["video_id", "minute"], order_cols=["ver"], **fold_args,
         )
 
     def read():
@@ -122,8 +130,16 @@ def _catalog_store(spark, tmp, request):
         cols = ["video_id", F.col("minute").cast("long"), "n", "ver"]
         return sorted(tuple(r) for r in spark.table(table).select(*cols).collect())
 
-    pre, post = sorted(base + newer), sorted(latest.values())
-    return table_location(spark, table), apply, read, pre, post
+    pre = sorted(base) if fold else sorted(base + newer)
+    return table_location(spark, table), apply, read, pre, sorted(latest.values())
+
+
+def _catalog_store(spark, tmp, request):
+    return _catalog_table(spark, request, fold=False)
+
+
+def _catalog_fold_store(spark, tmp, request):
+    return _catalog_table(spark, request, fold=True)
 
 
 def _upsert_store(spark, tmp, request):
@@ -215,6 +231,7 @@ def _mv_store(spark, tmp, request):
 
 STORES = {
     "catalog_bucketed": _catalog_store,
+    "catalog_fold": _catalog_fold_store,
     "merge_overwrite": _upsert_store,
     "scd2_bucket": _scd2_store,
     "mv_bucket": _mv_store,

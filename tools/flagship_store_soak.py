@@ -7,9 +7,11 @@ metadata; this soak answers the same question for the serving store at
 10x the horizon: does ANY quantity grow with batches lived through
 rather than with corpus/cadence constants?
 
-Per batch: append a small synthetic gold delta with the stream's writer
-(``append_bucketed_sorted``, which creates the table on the first batch),
-compact on the stream's cadence, and sample gates:
+Per batch: write a small synthetic gold delta (bigint keys) on the
+stream's cadence — an append (``append_bucketed_sorted``, which creates
+the table on the first batch), or on every COMPACT_EVERY-th batch a
+compaction that takes the delta as its new rows
+(``compact_bucketed_table(rows=..., keys=...)``) — and sample gates:
 
   * files per bucket       <= compact_every + 1   (cadence-bounded)
   * total store file count <= n_buckets x (compact_every + 1)
@@ -42,6 +44,11 @@ COMPACT_EVERY = 8
 N_VIDEOS = 24
 T0 = 1_700_000_000
 TABLE = "gold_flagship_soak"
+
+
+def _batch_videos(batch_id: int) -> list[int]:
+    base_vid = (batch_id * 3) % N_VIDEOS
+    return [base_vid, base_vid + 1, base_vid + 2]
 
 
 def _batch(spark, batch_id: int):
@@ -103,10 +110,6 @@ def main() -> int:
     for b in range(batches):
         t0 = time.time()
         df = _batch(spark, b)
-        ddl.append_bucketed_sorted(
-            df, TABLE, "video_id", ["window_start"], n_buckets=N_BUCKETS
-        )
-        _ledger_update(ledger, b)
         if (b + 1) % COMPACT_EVERY == 0:
             ddl.compact_bucketed_table(
                 spark,
@@ -115,7 +118,15 @@ def main() -> int:
                 ["window_start"],
                 merge_keys=["video_id", "window_start"],
                 order_cols=["src_batch"],
+                rows=df,
+                keys=_batch_videos(b),
+                n_buckets=N_BUCKETS,
             )
+        else:
+            ddl.append_bucketed_sorted(
+                df, TABLE, "video_id", ["window_start"], n_buckets=N_BUCKETS
+            )
+        _ledger_update(ledger, b)
         walls.append(time.time() - t0)
 
         loc = ddl.table_location(spark, TABLE)
