@@ -47,6 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
+from shortvideohybridanalyticslakehouse_spark.streaming.winnow import (
+    read_batches_before,
+)
+
 _EDGE_COLS = ["a", "b"]
 
 
@@ -84,37 +89,22 @@ def _counts_dir(store: str) -> str:
     return os.path.join(store, "counts")
 
 
-def _read_edges_before(spark: SparkSession, store: str, batch_id: int) -> DataFrame | None:
-    path = _edges_dir(store)
-    if not os.path.isdir(path) or not any(
-        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        for d in os.listdir(path)
-    ):
-        return None
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("batch") < batch_id)  # partition-pruned
-        .select(*_EDGE_COLS)
-    )
-
-
 def merge_triangle_batch(
     spark: SparkSession, batch_df: DataFrame, store: str, batch_id: int
 ) -> None:
     """foreachBatch body: fold one micro-batch of edges into the store
     and persist this batch's newly-completed triangle count."""
     batch = canonical_edges(batch_df)
-    old = _read_edges_before(spark, store, batch_id)
+    old = read_batches_before(spark, _edges_dir(store), batch_id)
+    if old is not None:
+        old = old.select(*_EDGE_COLS)
     delta = batch if old is None else batch.join(old, _EDGE_COLS, "left_anti")
 
     # own partition overwrite => consumed every source partition AND
     # replay-idempotent (same batch id always rewrites the same dir)
-    delta.write.mode("overwrite").parquet(
-        os.path.join(_edges_dir(store), f"batch={batch_id}")
-    )
-    delta_c = spark.read.parquet(
-        os.path.join(_edges_dir(store), f"batch={batch_id}")
-    ) if _has_parquet(os.path.join(_edges_dir(store), f"batch={batch_id}")) else None
+    staged = os.path.join(_edges_dir(store), f"batch={batch_id}")
+    delta.write.mode("overwrite").parquet(staged)
+    delta_c = spark.read.parquet(staged) if has_parquet(staged) else None
 
     if delta_c is None:
         new_tri = 0
@@ -131,12 +121,6 @@ def merge_triangle_batch(
         [(batch_id, new_tri)], "batch_id long, new_triangles long"
     ).write.mode("overwrite").parquet(
         os.path.join(_counts_dir(store), f"batch={batch_id}")
-    )
-
-
-def _has_parquet(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
     )
 
 

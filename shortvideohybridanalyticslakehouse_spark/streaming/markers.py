@@ -55,6 +55,14 @@ _MARKER = "_applied_batch_"
 _OLD = "_old_bucket_"
 
 
+def has_parquet(path: str) -> bool:
+    """Did a write to ``path`` produce a data file? (A write of an empty
+    frame may leave none, and reading such a dir fails schema inference.)"""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for f in os.listdir(path)
+    )
+
+
 def bucket_dir(store: str, b: int) -> str:
     return os.path.join(store, f"bucket={b}")
 
@@ -91,7 +99,7 @@ def fold_batch(
     stage = os.path.join(store, f"_stage_{batch_id}")
     frame.write.mode("overwrite").parquet(stage)
     try:
-        if not any(f.endswith(".parquet") for f in os.listdir(stage)):
+        if not has_parquet(stage):
             return  # empty batch (partitions already consumed by the write)
         staged = spark.read.parquet(stage)
         touched = sorted(

@@ -17,7 +17,7 @@ Store layout (winnow.py doctrine, including its folded-store bound):
 - ``firstseen/batch=N/`` — the batch's per-shingle min doc_id. A batch
   writes ONLY its own partition; replay overwrites it idempotently.
   compact_novelty_store folds old partitions into negative-id
-  consolidated partitions (winnow._fold_partitions), so file counts
+  consolidated partitions (winnow.fold_partitions), so file counts
   stay O(replay window), data O(distinct shingles).
 - ``flags/batch=N/`` — the batch's per-source (n_shingles, n_recycled)
   increments; read_novelty sums them and applies the batch lane's
@@ -41,8 +41,10 @@ from pyspark.sql.streaming import StreamingQuery
 from shortvideohybridanalyticslakehouse_spark.streaming.contamination import (
     doc_shingles,
 )
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
 from shortvideohybridanalyticslakehouse_spark.streaming.winnow import (
-    _fold_partitions,
+    fold_partitions,
+    read_batches_before,
 )
 
 
@@ -52,23 +54,6 @@ def _fs_dir(store: str) -> str:
 
 def _flags_dir(store: str) -> str:
     return os.path.join(store, "flags")
-
-
-def _read_firstseen_before(
-    spark: SparkSession, store: str, batch_id: int
-) -> DataFrame | None:
-    path = _fs_dir(store)
-    if not os.path.isdir(path) or not any(
-        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        for d in os.listdir(path)
-    ):
-        return None
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("batch") < batch_id)  # partition-pruned
-        .groupBy("shingle")
-        .agg(F.min("first_doc").alias("first_doc"))
-    )
 
 
 def batch_novelty_counts(
@@ -122,9 +107,13 @@ def merge_novelty_batch(
     ).withColumn("batch", F.lit(batch_id)).write.mode("overwrite").parquet(
         staged
     )
-    if not any(f.endswith(".parquet") for f in os.listdir(staged)):
+    if not has_parquet(staged):
         return  # empty batch
-    earlier = _read_firstseen_before(spark, store, batch_id)
+    earlier = read_batches_before(spark, _fs_dir(store), batch_id)
+    if earlier is not None:
+        earlier = earlier.groupBy("shingle").agg(
+            F.min("first_doc").alias("first_doc")
+        )
     counts = batch_novelty_counts(pairs, earlier)
     # src_batch rides IN the row (not just the partition key): the store
     # fold's healing .distinct() strips the partition column, and two
@@ -190,10 +179,10 @@ def compact_novelty_store(
     harmless (firstseen readers min-fold; flags are per-batch rows that
     the fold rewrites verbatim)."""
     return {
-        "firstseen_folded": _fold_partitions(
+        "firstseen_folded": fold_partitions(
             spark, _fs_dir(store), keep_last, n_files
         ),
-        "flags_folded": _fold_partitions(
+        "flags_folded": fold_partitions(
             spark, _flags_dir(store), keep_last, n_files
         ),
     }

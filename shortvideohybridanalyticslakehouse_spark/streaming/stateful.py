@@ -1,22 +1,30 @@
-"""Custom stateful streaming operator via applyInPandasWithState (D8 in
-streaming form): cross-micro-batch action cooldown suppression.
+"""Custom stateful streaming operators on Spark's per-key state store.
 
-The batch engine enforces the queue cooldown with a window over the full
-table (operators/queue.py:enqueue). In streaming, the "have I emitted an
-action for this video in the last N minutes" fact must survive across
-micro-batches — that is per-key mutable state, exactly what
-``applyInPandasWithState`` provides: Arrow-batched per-key pandas groups
-plus a typed GroupState row persisted in the state store.
+:func:`ordered_fold` is the one state protocol of the stream twins of
+the sequential batch lanes (EWMA, Holt, Holt-Winters, Misra-Gries,
+Page-Hinkley, SPRT, Croston, PSI): restore a key's state, fold its rows
+one step per ascending order value, drop and count replays at the key's
+high-water mark, emit one row. A twin supplies only its schemas, its
+initial state, a ``step`` and an ``emit``. ``cooldown_suppress`` (append
+mode), ``abandoned_session_detect`` (event-time timeout) and
+``running_totals`` (``transformWithState``) keep their own protocols.
 
-Scale: state is one BIGINT per video key, partitioned by the groupBy hash —
-the state store shards across executors and checkpoints incrementally.
-Input rows carry epoch seconds (computed engine-side) so the pandas code
-does integer arithmetic only — no timezone semantics in Python.
+``cooldown_suppress`` is D8 in streaming form: the batch engine enforces
+the queue cooldown with a window over the full table
+(operators/queue.py:enqueue); in streaming, "have I emitted an action
+for this video in the last N minutes" is per-key state — one BIGINT per
+video, sharded by the groupBy hash. Input rows carry epoch seconds
+(computed engine-side) so the pandas code does integer arithmetic only —
+no timezone semantics in Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import copy
+import itertools
+import math
+import operator
+from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
 
@@ -258,12 +266,66 @@ def abandoned_session_detect(
     )
 
 
+# ---------------------------------------------------------------------------
+# Ordered per-key fold: the one state protocol of the stream twins
+# ---------------------------------------------------------------------------
+
+
+def ordered_fold(
+    frame: DataFrame,
+    key: str,
+    order: str,
+    output_schema: str,
+    state_schema: str,
+    init: tuple,
+    step: Callable[[Sequence, list], Sequence],
+    emit: Callable[[tuple, Sequence, int, int], dict],
+) -> DataFrame:
+    """Fold each ``key``'s rows in ascending ``order`` across
+    micro-batches; emit its one row after every batch that touched it.
+
+    ``init`` is the state of a key never seen (deep-copied per key, so a
+    step may mutate its lists). Each batch sorts the key's rows by
+    ``order`` (stable: rows sharing a value keep arrival order) and gives
+    each distinct value ONE ``step(state, rows)`` call, ``rows`` its rows
+    as namedtuples of Python values; it returns the new state. A value at
+    or below the key's high-water mark ``last`` — a replay, or a late
+    value the in-order contract rules out — is not folded but dropped and
+    counted in ``dropped``, the observable sign that bit-exactness
+    against the batch lane no longer holds. ``last bigint, dropped
+    bigint`` are appended to ``state_schema``; ``emit(key, state, last,
+    dropped)`` returns the output row as a column -> value dict.
+    """
+    by_order = operator.attrgetter(order)
+
+    def fn(
+        k: tuple, pdf_iter: Iterator[pd.DataFrame], group: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        *state, last, dropped = (
+            group.get if group.exists else (*copy.deepcopy(init), -1, 0)
+        )
+        rows = pd.concat(list(pdf_iter), ignore_index=True)
+        ordered = sorted(rows.itertuples(index=False), key=by_order)
+        for value, same in itertools.groupby(ordered, key=by_order):
+            if value <= last:
+                dropped += 1
+                continue
+            state = step(state, list(same))
+            last = value
+        group.update((*state, last, dropped))
+        out = emit(k, state, last, dropped)
+        yield pd.DataFrame({c: [v] for c, v in out.items()})
+
+    return frame.groupBy(key).applyInPandasWithState(
+        fn, output_schema, f"{state_schema}, last bigint, dropped bigint",
+        "update", GroupStateTimeout.NoTimeout,
+    )
+
+
 EWMA_OUTPUT_SCHEMA = (
     "event_type string, n_minutes bigint, total_count bigint, ewma_last double"
 )
-EWMA_STATE_SCHEMA = (
-    "ewma double, n_minutes bigint, total bigint, last_minute bigint"
-)
+EWMA_STATE_SCHEMA = "ewma double, n_minutes bigint, total bigint"
 
 
 def ewma_incremental(minute_counts: DataFrame, alpha: float = 0.125) -> DataFrame:
@@ -272,59 +334,40 @@ def ewma_incremental(minute_counts: DataFrame, alpha: float = 0.125) -> DataFram
 
     Contract: input rows are per-(event_type, minute) counts with each
     minute delivered exactly once (upstream: an append-mode watermarked
-    window, or the replay fixture in tests). Within a batch rows fold in
-    minute order; rows at or before the state's high-water minute are
-    dropped (replay/exactly-once guard). Because the fold applies the
-    identical `acc*(1-a) + x*a` IEEE ops in the same order as the batch
-    query, the streamed EWMA is BIT-IDENTICAL to the batch result on the
-    same closed set — asserted by tests/test_stream_ewma_twin.py.
+    window, or the replay fixture in tests), folded in minute order by
+    :func:`ordered_fold`, whose high-water mark drops replays. Because the
+    fold applies the identical `acc*(1-a) + x*a` IEEE ops in the same
+    order as the batch query, the streamed EWMA is BIT-IDENTICAL to the
+    batch result on the same closed set — asserted by
+    tests/test_stream_ewma_twin.py.
 
-    Scale: state is 4 scalars per event_type key, sharded by the groupBy
+    Scale: state is 5 scalars per event_type key, sharded by the groupBy
     hash across the state store; each batch's work is O(new minutes).
     """
     a = float(alpha)
     b = 1.0 - a
 
-    def fn(
-        key: tuple, pdf_iter: "Iterator[pd.DataFrame]", state: GroupState
-    ) -> "Iterator[pd.DataFrame]":
-        if state.exists:
-            ewma, n, total, last = state.get
-            ewma, n, total, last = float(ewma), int(n), int(total), int(last)
-            started = True
-        else:
-            ewma, n, total, last = 0.0, 0, 0, -1
-            started = False
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("minute_epoch")
-        for r in rows.itertuples(index=False):
-            me, x = int(r.minute_epoch), int(r.x)
-            if me <= last:
-                continue  # replayed minute: already folded
-            if not started:
-                ewma = float(x)
-                started = True
-            else:
-                ewma = ewma * b + float(x) * a
+    def step(state: Sequence, rows: list) -> Sequence:
+        ewma, n, total = state
+        for r in rows:
+            x = int(r.x)
+            ewma = float(x) if n == 0 else ewma * b + float(x) * a
             n += 1
             total += x
-            last = me
-        state.update((ewma, n, total, last))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_minutes": [n],
-                "total_count": [total],
-                "ewma_last": [ewma],
-            }
-        )
+        return ewma, n, total
 
-    return minute_counts.groupBy("event_type").applyInPandasWithState(
-        fn,
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        ewma, n, total = state
+        return {
+            "event_type": key[0],
+            "n_minutes": n,
+            "total_count": total,
+            "ewma_last": ewma,
+        }
+
+    return ordered_fold(
+        minute_counts, "event_type", "minute_epoch", EWMA_OUTPUT_SCHEMA,
+        EWMA_STATE_SCHEMA, (0.0, 0, 0), step, emit,
     )
 
 
@@ -337,10 +380,7 @@ HOLT_OUTPUT_SCHEMA = (
     "event_type string, n_hours bigint, level_final double, "
     "trend_final double, forecast_next double, mae_one_step double"
 )
-HOLT_STATE_SCHEMA = (
-    "l double, b double, err_sum double, n bigint, n_hours bigint, "
-    "last bigint"
-)
+HOLT_STATE_SCHEMA = "l double, b double, err_sum double, n bigint, n_hours bigint"
 
 
 def _round12(x: float) -> float:
@@ -356,35 +396,21 @@ def holt_incremental(hour_counts: DataFrame) -> DataFrame:
     Holt level+trend recurrence (alpha=1/2, beta=1/4, round-12 quantized
     per step) maintained as per-key state across micro-batches.
 
-    Contract mirrors ewma_incremental: input rows are per-(event_type,
-    hour) counts, each hour delivered exactly once in order (replayed
-    hours at or before the state's high-water mark are dropped). The fold
-    applies the IDENTICAL quantized IEEE ops in the identical order as
-    the batch array fold, so the streamed (level, trend, mae) is
-    bit-identical to the batch query on the same closed set — asserted by
-    tests/test_stream_holt_twin.py. State: 6 scalars per event type.
+    Input rows are per-(event_type, hour) counts, folded in hour order by
+    :func:`ordered_fold` (replays at or below the high-water mark
+    dropped). The fold applies the IDENTICAL quantized IEEE ops in the
+    identical order as the batch array fold, so the streamed (level,
+    trend, mae) is bit-identical to the batch query on the same closed
+    set — asserted by tests/test_stream_holt_twin.py. State: 7 scalars
+    per event type.
     """
 
-    def fn(
-        key: tuple, pdf_iter: "Iterator[pd.DataFrame]", state: GroupState
-    ) -> "Iterator[pd.DataFrame]":
-        if state.exists:
-            level, trend, err_sum, n, n_hours, last = state.get
-            level, trend, err_sum = float(level), float(trend), float(err_sum)
-            n, n_hours, last = int(n), int(n_hours), int(last)
-            started = True
-        else:
-            level, trend, err_sum, n, n_hours, last = 0.0, 0.0, 0.0, 0, 0, -1
-            started = False
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("hour_epoch")
-        for r in rows.itertuples(index=False):
-            he, x = int(r.hour_epoch), float(int(r.x))
-            if he <= last:
-                continue  # replayed hour: already folded
-            if not started:
+    def step(state: Sequence, rows: list) -> Sequence:
+        level, trend, err_sum, n, n_hours = state
+        for r in rows:
+            x = float(int(r.x))
+            if n_hours == 0:
                 level = x
-                started = True
             else:
                 err_sum = err_sum + abs(x - (level + trend))
                 n += 1
@@ -392,25 +418,22 @@ def holt_incremental(hour_counts: DataFrame) -> DataFrame:
                 trend = _round12(0.25 * (new_l - level) + 0.75 * trend)
                 level = new_l
             n_hours += 1
-            last = he
-        state.update((level, trend, err_sum, n, n_hours, last))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_hours": [n_hours],
-                "level_final": [_round6(level)],
-                "trend_final": [_round6(trend)],
-                "forecast_next": [_round6(level + trend)],
-                "mae_one_step": [_round6(err_sum / n) if n > 0 else None],
-            }
-        )
+        return level, trend, err_sum, n, n_hours
 
-    return hour_counts.groupBy("event_type").applyInPandasWithState(
-        fn,
-        HOLT_OUTPUT_SCHEMA,
-        HOLT_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        level, trend, err_sum, n, n_hours = state
+        return {
+            "event_type": key[0],
+            "n_hours": n_hours,
+            "level_final": _round6(level),
+            "trend_final": _round6(trend),
+            "forecast_next": _round6(level + trend),
+            "mae_one_step": _round6(err_sum / n) if n > 0 else None,
+        }
+
+    return ordered_fold(
+        hour_counts, "event_type", "hour_epoch", HOLT_OUTPUT_SCHEMA,
+        HOLT_STATE_SCHEMA, (0.0, 0.0, 0.0, 0, 0), step, emit,
     )
 
 
@@ -435,7 +458,7 @@ HW_OUTPUT_SCHEMA = (
 )
 HW_STATE_SCHEMA = (
     "l double, b double, err_sum double, n bigint, n_hours bigint, "
-    "last bigint, seasons array<double>"
+    "seasons array<double>"
 )
 
 
@@ -445,39 +468,23 @@ def holt_winters_incremental(hour_counts: DataFrame) -> DataFrame:
     round-12 quantized per state write, zero-start seasonals)
     maintained as per-key state across micro-batches.
 
-    Same delivery contract as holt_incremental: per-(event_type, hour)
-    counts, in order, replays at or below the high-water mark dropped.
-    The seasonal vector rides an array<double> state column — 24 slots,
-    exactly the batch fold's s-array — so the streamed row is
-    bit-identical to the batch query on the same closed hourly set
-    (tests/test_stream_hw_twin.py). The season index is derived from
-    the hour epoch ((epoch // 3600) % 24, UTC), matching the batch
-    side's EXTRACT(hour) on date_trunc'd timestamps.
+    Same delivery contract as holt_incremental (:func:`ordered_fold`,
+    hour order, replays dropped). The seasonal vector rides an
+    array<double> state column — 24 slots, exactly the batch fold's
+    s-array — so the streamed row is bit-identical to the batch query on
+    the same closed hourly set (tests/test_stream_hw_twin.py). The season
+    index is derived from the hour epoch ((epoch // 3600) % 24, UTC),
+    matching the batch side's EXTRACT(hour) on date_trunc'd timestamps;
+    the next season's index comes from the fold's high-water hour.
     """
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            level, trend, err_sum, n, n_hours, last, seasons = state.get
-            level, trend, err_sum = float(level), float(trend), float(err_sum)
-            n, n_hours, last = int(n), int(n_hours), int(last)
-            seasons = [float(v) for v in seasons]
-            started = True
-        else:
-            level, trend, err_sum, n, n_hours, last = 0.0, 0.0, 0.0, 0, 0, -1
-            seasons = [0.0] * HW_PERIOD
-            started = False
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("hour_epoch")
-        for r in rows.itertuples(index=False):
-            he, x = int(r.hour_epoch), float(int(r.x))
-            if he <= last:
-                continue  # replayed hour: already folded
-            hod = (he // 3600) % HW_PERIOD
-            if not started:
+    def step(state: Sequence, rows: list) -> Sequence:
+        level, trend, err_sum, n, n_hours, seasons = state
+        for r in rows:
+            x = float(int(r.x))
+            hod = (int(r.hour_epoch) // 3600) % HW_PERIOD
+            if n_hours == 0:
                 level = x
-                started = True
             else:
                 err_sum = err_sum + abs(x - (level + trend + seasons[hod]))
                 n += 1
@@ -490,28 +497,26 @@ def holt_winters_incremental(hour_counts: DataFrame) -> DataFrame:
                 )
                 level = new_l
             n_hours += 1
-            last = he
-        state.update((level, trend, err_sum, n, n_hours, last, seasons))
+        return level, trend, err_sum, n, n_hours, seasons
+
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        level, trend, err_sum, n, n_hours, seasons = state
         hod_next = ((last // 3600) + 1) % HW_PERIOD if last >= 0 else 0
         s_next = seasons[hod_next]
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_hours": [n_hours],
-                "level_final": [_round6(level)],
-                "trend_final": [_round6(trend)],
-                "season_next": [_round6(s_next)],
-                "forecast_next": [_round6(level + trend + s_next)],
-                "mae_one_step": [_round6(err_sum / n) if n > 0 else None],
-            }
-        )
+        return {
+            "event_type": key[0],
+            "n_hours": n_hours,
+            "level_final": _round6(level),
+            "trend_final": _round6(trend),
+            "season_next": _round6(s_next),
+            "forecast_next": _round6(level + trend + s_next),
+            "mae_one_step": _round6(err_sum / n) if n > 0 else None,
+        }
 
-    return hour_counts.groupBy("event_type").applyInPandasWithState(
-        fn,
-        HW_OUTPUT_SCHEMA,
-        HW_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return ordered_fold(
+        hour_counts, "event_type", "hour_epoch", HW_OUTPUT_SCHEMA,
+        HW_STATE_SCHEMA, (0.0, 0.0, 0.0, 0, 0, [0.0] * HW_PERIOD), step,
+        emit,
     )
 
 
@@ -520,51 +525,37 @@ def holt_winters_incremental(hour_counts: DataFrame) -> DataFrame:
 # fold as per-key incremental state
 # ---------------------------------------------------------------------------
 
-MG_K = 4
-MG_OUTPUT_SCHEMA = (
-    "day string, n_events bigint, "
-    + ", ".join(f"item_{j} bigint, cnt_{j} bigint" for j in range(MG_K))
-)
-MG_STATE_SCHEMA = (
-    "items array<bigint>, cnts array<bigint>, n_events bigint, last bigint"
-)
+MG_STATE_SCHEMA = "items array<bigint>, cnts array<bigint>, n_events bigint"
 
 
 def misra_gries_incremental(day_items: DataFrame) -> DataFrame:
     """Streaming twin of misra_gries_daily_users (queries_ext114): the
-    k=4 counter summary maintained as per-day state across
+    ``MG_K``-counter summary maintained as per-day state across
     micro-batches.
 
-    Delivery contract mirrors the holt twins: rows are (day, event_id,
-    uid), each event delivered once in event_id order per day (replays
-    at or below the high-water mark are dropped). The update rule is the
+    Rows are (day, event_id, uid), folded in event_id order per day by
+    :func:`ordered_fold` (replays dropped). The update rule is the
     IDENTICAL match / insert-first-zero-slot / decrement-all fold the
     batch query emits for both engines, applied in the identical
-    event_id order — so the streamed summary is bit-identical to the
-    batch fold on the same closed set (tests/test_stream_mg_twin.py).
+    event_id order with the batch lane's own ``MG_K`` — so the streamed
+    summary is bit-identical to the batch fold on the same closed set
+    (tests/test_stream_mg_twin.py).
 
     MG is order-dependent but ALSO mergeable (Agarwal et al. 2012) with
     the same error bound; this twin pins the sequential contract the
     oracle replays, while the property test pins the bound that
     survives a merge-based distributed rewrite.
     """
+    # imported here, not at module level: importing a queries module
+    # registers its lanes, and the registry's order is its import order
+    from shortvideohybridanalyticslakehouse_spark.plans.queries_ext114 import (
+        MG_K,
+    )
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            items, cnts, n_events, last = state.get
-            items, cnts = list(items), list(cnts)
-            n_events, last = int(n_events), int(last)
-        else:
-            items, cnts = [-1] * MG_K, [0] * MG_K
-            n_events, last = 0, -1
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("event_id")
-        for r in rows.itertuples(index=False):
-            eid, u = int(r.event_id), int(r.uid)
-            if eid <= last:
-                continue  # replayed event: already folded
+    def step(state: Sequence, rows: list) -> Sequence:
+        items, cnts, n_events = state
+        for r in rows:
+            u = int(r.uid)
             if u in items:
                 cnts[items.index(u)] += 1
             else:
@@ -577,20 +568,22 @@ def misra_gries_incremental(day_items: DataFrame) -> DataFrame:
                 else:
                     cnts = [c - 1 for c in cnts]
             n_events += 1
-            last = eid
-        state.update((items, cnts, n_events, last))
-        out = {"day": [key[0]], "n_events": [n_events]}
-        for j in range(MG_K):
-            out[f"item_{j}"] = [items[j]]
-            out[f"cnt_{j}"] = [cnts[j]]
-        yield pd.DataFrame(out)
+        return items, cnts, n_events
 
-    return day_items.groupBy("day").applyInPandasWithState(
-        fn,
-        MG_OUTPUT_SCHEMA,
-        MG_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        items, cnts, n_events = state
+        out = {"day": key[0], "n_events": n_events}
+        for j in range(MG_K):
+            out[f"item_{j}"] = items[j]
+            out[f"cnt_{j}"] = cnts[j]
+        return out
+
+    output_schema = "day string, n_events bigint, " + ", ".join(
+        f"item_{j} bigint, cnt_{j} bigint" for j in range(MG_K)
+    )
+    return ordered_fold(
+        day_items, "day", "event_id", output_schema, MG_STATE_SCHEMA,
+        ([-1] * MG_K, [0] * MG_K, 0), step, emit,
     )
 
 
@@ -605,10 +598,7 @@ PH_OUTPUT_SCHEMA = (
     "ph_min_micro bigint, ph_stat_micro bigint, alarm_day_idx bigint, "
     "drift_detected boolean"
 )
-PH_STATE_SCHEMA = (
-    "n bigint, total bigint, m bigint, mn bigint, alarm bigint, "
-    "last bigint"
-)
+PH_STATE_SCHEMA = "n bigint, total bigint, m bigint, mn bigint, alarm bigint"
 
 
 def page_hinkley_incremental(
@@ -621,52 +611,39 @@ def page_hinkley_incremental(
     micro-batches, alarm latched at the first day the statistic clears
     lambda.
 
-    Delivery contract mirrors the holt twins: per-(event_type,
-    day_epoch) counts, in order, replays at or below the high-water
-    mark dropped. The running-mean term divides a non-negative
-    quantity, so Python's floor // matches both engines' division in
-    the batch fold — the streamed row is bit-identical to the batch
-    query on the same closed set (tests/test_stream_ph_twin.py)."""
+    Per-(event_type, day_epoch) counts, folded in day order by
+    :func:`ordered_fold` (replays dropped). The running-mean term divides
+    a non-negative quantity, so Python's floor // matches both engines'
+    division in the batch fold — the streamed row is bit-identical to the
+    batch query on the same closed set (tests/test_stream_ph_twin.py)."""
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total, m, mn, alarm, last = (int(v) for v in state.get)
-        else:
-            n, total, m, mn, alarm, last = 0, 0, 0, 0, -1, -1
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("day_epoch")
-        for r in rows.itertuples(index=False):
-            de, x = int(r.day_epoch), int(r.x)
-            if de <= last:
-                continue  # replayed day: already folded
+    def step(state: Sequence, rows: list) -> Sequence:
+        n, total, m, mn, alarm = state
+        for r in rows:
+            x = int(r.x)
             n += 1
             total += x
             m += x * 1_000_000 - (total * 1_000_000) // n - delta_micro
             mn = min(mn, m)
             if alarm < 0 and m - mn > lambda_micro:
                 alarm = n
-            last = de
-        state.update((n, total, m, mn, alarm, last))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_days": [n],
-                "ph_m_micro": [m],
-                "ph_min_micro": [mn],
-                "ph_stat_micro": [m - mn],
-                "alarm_day_idx": [alarm if alarm >= 0 else None],
-                "drift_detected": [alarm >= 0],
-            }
-        )
+        return n, total, m, mn, alarm
 
-    return day_counts.groupBy("event_type").applyInPandasWithState(
-        fn,
-        PH_OUTPUT_SCHEMA,
-        PH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        n, total, m, mn, alarm = state
+        return {
+            "event_type": key[0],
+            "n_days": n,
+            "ph_m_micro": m,
+            "ph_min_micro": mn,
+            "ph_stat_micro": m - mn,
+            "alarm_day_idx": alarm if alarm >= 0 else None,
+            "drift_detected": alarm >= 0,
+        }
+
+    return ordered_fold(
+        day_counts, "event_type", "day_epoch", PH_OUTPUT_SCHEMA,
+        PH_STATE_SCHEMA, (0, 0, 0, 0, -1), step, emit,
     )
 
 
@@ -680,9 +657,7 @@ SPRT_OUTPUT_SCHEMA = (
     "metric string, n_days bigint, cum_llr_micro bigint, decision string,"
     " n_days_dropped bigint"
 )
-SPRT_STATE_SCHEMA = (
-    "cum bigint, idx bigint, dec bigint, last bigint, skipped bigint"
-)
+SPRT_STATE_SCHEMA = "cum bigint, idx bigint, dec bigint"
 
 
 def sprt_incremental(
@@ -701,58 +676,36 @@ def sprt_incremental(
     per-day increment floor((k*llr_pos + (n-k)*llr_neg) * 1e6) is the
     IDENTICAL IEEE chain the batch query folds, and the running
     statistic is an exact integer cumsum (bit-for-bit equality asserted
-    in tests/test_stream_sprt_twin.py). Delivery contract as the PH/holt
-    twins: per-(metric, day_epoch) (n, k) rows, in order; replays at or
-    below the high-water mark dropped — and COUNTED (``n_days_dropped``,
-    ADVICE r9): bit-exactness vs the batch monitor holds only under
-    in-order delivery, so a genuinely late NEW day folded into the
-    dropped count is the observable signal that the contract was
-    violated and the twin has diverged from the closed series."""
+    in tests/test_stream_sprt_twin.py). Per-(metric, day_epoch) (n, k)
+    rows fold in day order by :func:`ordered_fold`, whose dropped count
+    is ``n_days_dropped`` (ADVICE r9)."""
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cum, idx, dec, last, skipped = (int(v) for v in state.get)
-        else:
-            cum, idx, dec, last, skipped = 0, 0, 0, -1, 0
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("day_epoch")
-        import math
-
-        for r in rows.itertuples(index=False):
-            de, n, k = int(r.day_epoch), int(r.n), int(r.k)
-            if de <= last:
-                skipped += 1  # replay OR contract-violating late day
-                continue
-            llr = math.floor((k * llr_pos + (n - k) * llr_neg) * 1e6)
-            cum += llr
+    def step(state: Sequence, rows: list) -> Sequence:
+        cum, idx, dec = state
+        for r in rows:
+            n, k = int(r.n), int(r.k)
+            cum += math.floor((k * llr_pos + (n - k) * llr_neg) * 1e6)
             idx += 1
             if dec == 0:
                 if cum >= bound_micro:
                     dec = 1
                 elif cum <= -bound_micro:
                     dec = -1
-            last = de
-        state.update((cum, idx, dec, last, skipped))
-        yield pd.DataFrame(
-            {
-                "metric": [key[0]],
-                "n_days": [idx],
-                "cum_llr_micro": [cum],
-                "decision": [
-                    {0: "continue", 1: "reject_h0", -1: "accept_h0"}[dec]
-                ],
-                "n_days_dropped": [skipped],
-            }
-        )
+        return cum, idx, dec
 
-    return day_counts.groupBy("metric").applyInPandasWithState(
-        fn,
-        SPRT_OUTPUT_SCHEMA,
-        SPRT_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        cum, idx, dec = state
+        return {
+            "metric": key[0],
+            "n_days": idx,
+            "cum_llr_micro": cum,
+            "decision": {0: "continue", 1: "reject_h0", -1: "accept_h0"}[dec],
+            "n_days_dropped": dropped,
+        }
+
+    return ordered_fold(
+        day_counts, "metric", "day_epoch", SPRT_OUTPUT_SCHEMA,
+        SPRT_STATE_SCHEMA, (0, 0, 0), step, emit,
     )
 
 
@@ -767,8 +720,7 @@ CROSTON_OUTPUT_SCHEMA = (
     " p_interval double, forecast_per_week double, n_weeks_dropped bigint"
 )
 CROSTON_STATE_SCHEMA = (
-    "z double, p double, q bigint, started bigint, nw bigint, ndw bigint,"
-    " last bigint, skipped bigint"
+    "z double, p double, q bigint, started bigint, nw bigint, ndw bigint"
 )
 
 
@@ -780,37 +732,20 @@ def croston_incremental(
     micro-batches.
 
     Input: per-(part, wk_epoch) gap-FILLED weekly demand ``d`` (zero
-    weeks included — zeros ARE the signal in intermittent demand), in
-    order; replays at or below the high-water mark are dropped and
-    counted (``n_weeks_dropped``, the SPRT twin's observability
-    contract). The two EWMA updates run the identical IEEE chain the
-    batch fold's F.aggregate evaluates — (z*a) + (d*b) and
-    (p*a) + ((q+1)*b) with a = 1 - alpha, b = alpha — so the final state
-    is bit-for-bit the batch query's (tests/test_stream_croston_twin.py);
-    alpha defaults to the batch lane's exactly-representable 1/8."""
+    weeks included — zeros ARE the signal in intermittent demand),
+    folded in week order by :func:`ordered_fold`; its dropped count is
+    ``n_weeks_dropped`` (the SPRT twin's observability contract). The two
+    EWMA updates run the identical IEEE chain the batch fold's
+    F.aggregate evaluates — (z*a) + (d*b) and (p*a) + ((q+1)*b) with
+    a = 1 - alpha, b = alpha — so the final state is bit-for-bit the
+    batch query's (tests/test_stream_croston_twin.py); alpha defaults to
+    the batch lane's exactly-representable 1/8."""
     a, b = 1.0 - alpha, alpha
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            z, p, q, started, nw, ndw, last, skipped = state.get
-            z, p = float(z), float(p)
-            q, started, nw, ndw, last, skipped = (
-                int(q), int(started), int(nw), int(ndw), int(last),
-                int(skipped),
-            )
-        else:
-            z, p, q, started, nw, ndw, last, skipped = (
-                0.0, 0.0, 0, 0, 0, 0, -1, 0,
-            )
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values("wk_epoch")
-        for r in rows.itertuples(index=False):
-            wk, d = int(r.wk_epoch), float(r.d)
-            if wk <= last:
-                skipped += 1  # replay OR contract-violating late week
-                continue
+    def step(state: Sequence, rows: list) -> Sequence:
+        z, p, q, started, nw, ndw = state
+        for r in rows:
+            d = float(r.d)
             nw += 1
             if d <= 0:
                 q += 1
@@ -822,27 +757,23 @@ def croston_incremental(
                 p = p * a + (q + 1) * b
                 q = 0
                 ndw += 1
-            last = wk
-        state.update((z, p, q, started, nw, ndw, last, skipped))
-        fc = z / p if started == 1 and p > 0 else 0.0
-        yield pd.DataFrame(
-            {
-                "part": [key[0]],
-                "n_weeks": [nw],
-                "n_demand_weeks": [ndw],
-                "z_size": [z],
-                "p_interval": [p],
-                "forecast_per_week": [fc],
-                "n_weeks_dropped": [skipped],
-            }
-        )
+        return z, p, q, started, nw, ndw
 
-    return week_demand.groupBy("part").applyInPandasWithState(
-        fn,
-        CROSTON_OUTPUT_SCHEMA,
-        CROSTON_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        z, p, q, started, nw, ndw = state
+        return {
+            "part": key[0],
+            "n_weeks": nw,
+            "n_demand_weeks": ndw,
+            "z_size": z,
+            "p_interval": p,
+            "forecast_per_week": z / p if started == 1 and p > 0 else 0.0,
+            "n_weeks_dropped": dropped,
+        }
+
+    return ordered_fold(
+        week_demand, "part", "wk_epoch", CROSTON_OUTPUT_SCHEMA,
+        CROSTON_STATE_SCHEMA, (0.0, 0.0, 0, 0, 0, 0), step, emit,
     )
 
 
@@ -856,9 +787,7 @@ PSI_OUTPUT_SCHEMA = (
     "metric string, n_ref bigint, n_cur bigint, psi_nano bigint,"
     " n_batches_dropped bigint, n_rows_bad bigint"
 )
-PSI_STATE_SCHEMA = (
-    "cur array<bigint>, last bigint, skipped bigint, bad bigint"
-)
+PSI_STATE_SCHEMA = "cur array<bigint>, bad bigint"
 
 
 def psi_incremental(
@@ -875,61 +804,42 @@ def psi_incremental(
     the identical double expression, nano-floored before the exact sum
     (tests/test_stream_psi_twin.py).
 
-    Delivery contract as the SPRT/Croston twins: rows arrive in
-    ``seq`` order per metric; replays at or below the high-water mark
-    are dropped AND counted (``n_batches_dropped``). A malformed row
-    whose bin falls outside [0, nbins) is likewise dropped AND counted
-    (``n_rows_bad``) rather than killing the query with an IndexError
-    (ADVICE r10) — same doctrine as late/replayed rows: never crash on
-    data, always account for what was ignored."""
-    import math
-
+    Each ``seq`` is one :func:`ordered_fold` step; its dropped count is
+    ``n_batches_dropped``. A row whose bin falls outside [0, nbins) is
+    likewise dropped AND counted (``n_rows_bad``), not an IndexError
+    (ADVICE r10): never crash on data, always account for what was
+    ignored."""
     nbins = len(ref_counts)
     n_ref = sum(ref_counts)
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur, last, skipped, bad = state.get
-            cur = list(cur)
-            last, skipped, bad = int(last), int(skipped), int(bad)
-        else:
-            cur, last, skipped, bad = [0] * nbins, -1, 0, 0
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        for seq, grp in rows.sort_values("seq").groupby("seq", sort=True):
-            if int(seq) <= last:
-                skipped += 1  # replayed batch: already folded
-                continue
-            for r in grp.itertuples(index=False):
-                b = int(r.bin)
-                if 0 <= b < nbins:
-                    cur[b] += int(r.n)
-                else:
-                    bad += 1  # malformed bin: drop + count, don't crash
-            last = int(seq)
-        state.update((cur, last, skipped, bad))
+    def step(state: Sequence, rows: list) -> Sequence:
+        cur, bad = state
+        for r in rows:
+            b = int(r.bin)
+            if 0 <= b < nbins:
+                cur[b] += int(r.n)
+            else:
+                bad += 1  # malformed bin: drop + count, don't crash
+        return cur, bad
+
+    def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
+        cur, bad = state
         n_cur = sum(cur)
         psi = 0
         for b in range(nbins):
             p = (ref_counts[b] + 1) / (n_ref + nbins)
             q = (cur[b] + 1) / (n_cur + nbins)
             psi += math.floor((p - q) * math.log(p / q) * 1e9)
-        yield pd.DataFrame(
-            {
-                "metric": [key[0]],
-                "n_ref": [n_ref],
-                "n_cur": [n_cur],
-                "psi_nano": [psi],
-                "n_batches_dropped": [skipped],
-                "n_rows_bad": [bad],
-            }
-        )
+        return {
+            "metric": key[0],
+            "n_ref": n_ref,
+            "n_cur": n_cur,
+            "psi_nano": psi,
+            "n_batches_dropped": dropped,
+            "n_rows_bad": bad,
+        }
 
-    return bin_counts.groupBy("metric").applyInPandasWithState(
-        fn,
-        PSI_OUTPUT_SCHEMA,
-        PSI_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return ordered_fold(
+        bin_counts, "metric", "seq", PSI_OUTPUT_SCHEMA, PSI_STATE_SCHEMA,
+        ([0] * nbins, 0), step, emit,
     )

@@ -44,6 +44,7 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext95 import (
     _POS_PACK,
     winnowing_fingerprints_df,
 )
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
 
 
 def _fps_dir(store: str) -> str:
@@ -60,22 +61,6 @@ def doc_fingerprint_hashes(docs: DataFrame) -> DataFrame:
     return fps.select(
         "doc_id", (F.col("wmin") / _POS_PACK).cast("bigint").alias("fph")
     ).distinct()
-
-
-def _read_fps_before(
-    spark: SparkSession, store: str, batch_id: int
-) -> DataFrame | None:
-    path = _fps_dir(store)
-    if not os.path.isdir(path) or not any(
-        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        for d in os.listdir(path)
-    ):
-        return None
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("batch") < batch_id)  # partition-pruned
-        .select("doc_id", "fph")
-    )
 
 
 def flag_near_dups(
@@ -144,14 +129,14 @@ def merge_winnow_batch(
     hashes = doc_fingerprint_hashes(batch_df.select("doc_id", "text"))
     # own-partition write consumes every source partition (Spark 4 rule)
     # and makes replay idempotent
+    staged = os.path.join(_fps_dir(store), f"batch={batch_id}")
     hashes.withColumn("batch", F.lit(batch_id)).write.mode(
         "overwrite"
-    ).parquet(os.path.join(_fps_dir(store), f"batch={batch_id}"))
-    staged = os.path.join(_fps_dir(store), f"batch={batch_id}")
-    if not any(f.endswith(".parquet") for f in os.listdir(staged)):
+    ).parquet(staged)
+    if not has_parquet(staged):
         return  # empty batch
     batch_hashes = spark.read.parquet(staged).select("doc_id", "fph")
-    earlier = _read_fps_before(spark, store, batch_id)
+    earlier = read_batches_before(spark, _fps_dir(store), batch_id)
     flags = flag_near_dups(batch_hashes, earlier)
     flags.write.mode("overwrite").parquet(
         os.path.join(_flags_dir(store), f"batch={batch_id}")
@@ -204,7 +189,21 @@ def start_winnow_dedup_job(
 # heals.
 
 
-def _fold_partitions(
+def read_batches_before(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The rows of every ``batch=N`` partition of ``path`` with N below
+    ``batch_id`` (folded partitions included: their ids are negative),
+    by a partition-pruned scan; None when there is no such partition."""
+    if not os.path.isdir(path) or not any(
+        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
+        for d in os.listdir(path)
+    ):
+        return None
+    return spark.read.parquet(path).filter(F.col("batch") < batch_id)
+
+
+def fold_partitions(
     spark: SparkSession, path: str, keep_last: int, n_files: int
 ) -> int:
     if keep_last < 1:
@@ -253,10 +252,10 @@ def compact_winnow_store(
     how many batches the stream has lived through. Returns the number of
     partitions folded per half."""
     return {
-        "fps_folded": _fold_partitions(
+        "fps_folded": fold_partitions(
             spark, _fps_dir(store), keep_last, n_files
         ),
-        "flags_folded": _fold_partitions(
+        "flags_folded": fold_partitions(
             spark, _flags_dir(store), keep_last, n_files
         ),
     }

@@ -17,9 +17,9 @@ compaction that takes the delta as its new rows
   * total store file count <= n_buckets x (compact_every + 1)
   * MOR read == driver-side ledger (latest batch id per key) — checked
     every 100 batches and at the end
-  * wall flatness: mean append+maintain seconds over the LAST 100
-    batches <= 3x the mean over batches 100-200 (state growth would
-    show as monotonic drift; the first 100 are warmup)
+  * wall flatness: mean append+maintain seconds over the tail window
+    <= 3x the mean over the warm window (state growth would show as
+    monotonic drift). The windows never overlap; see flatness_windows.
 
 Usage: python tools/flagship_store_soak.py [--batches 1000]
 Artifact: tools/FLAGSHIP_STORE_SOAK.json; exit 0 iff PASS.
@@ -90,6 +90,20 @@ def _check_content(spark, ledger: dict) -> bool:
     return got == ledger
 
 
+def flatness_windows(
+    batches: int, warmup: int = 100, width: int = 100
+) -> tuple[range, range]:
+    """(warm, tail) batch-index windows of the wall-flatness gate, always
+    disjoint: the warm window starts after the first ``warmup`` batches
+    (at 0 when the run is no longer than that), the tail ends at the last
+    batch, and both are ``width`` batches wide, or half of what follows
+    the warm start when that is shorter (200 batches: 100-149 against
+    150-199; 1000 batches: 100-199 against 900-999)."""
+    start = warmup if batches >= warmup + 2 else 0
+    span = min(width, (batches - start) // 2)
+    return range(start, start + span), range(batches - span, batches)
+
+
 def main() -> int:
     batches = 1000
     argv = sys.argv[1:]
@@ -153,10 +167,9 @@ def main() -> int:
             )
 
     content_ok &= _check_content(spark, ledger)
-    warm = walls[100:200] if batches >= 200 else walls[: len(walls) // 2]
-    tail = walls[-100:] if batches >= 200 else walls[len(walls) // 2:]
-    mean_warm = sum(warm) / len(warm)
-    mean_tail = sum(tail) / len(tail)
+    warm, tail = flatness_windows(batches)
+    mean_warm = sum(walls[i] for i in warm) / len(warm)
+    mean_tail = sum(walls[i] for i in tail) / len(tail)
     report = {
         "batches": batches,
         "compact_every": COMPACT_EVERY,
@@ -168,6 +181,8 @@ def main() -> int:
         "total_files_bounded": max_total_files
         <= N_BUCKETS * (COMPACT_EVERY + 1),
         "content_equals_ledger": content_ok,
+        "warm_window": [warm.start, warm.stop],
+        "tail_window": [tail.start, tail.stop],
         "mean_wall_warm_s": round(mean_warm, 3),
         "mean_wall_tail_s": round(mean_tail, 3),
         "wall_flat": mean_tail <= 3 * mean_warm,
