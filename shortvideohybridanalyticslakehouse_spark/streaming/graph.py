@@ -47,8 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
-from shortvideohybridanalyticslakehouse_spark.streaming.winnow import (
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+    has_parquet,
     read_batches_before,
 )
 

@@ -1,5 +1,8 @@
 """The bucketed merge stores (scd2 / mv, and the covis and search-index
 stores built on mv): one fold per micro-batch, and marker retention.
+Also the two reads the ``batch=N`` stores (graph, winnow, novelty)
+share, :func:`has_parquet` and :func:`read_batches_before`: this module
+imports no queries module, so importing it never registers lanes.
 
 Store layout: ``store/bucket=N/`` parquet dirs, N a hash of the store's
 key columns. :func:`fold_batch` is the one write path:
@@ -45,6 +48,7 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from shortvideohybridanalyticslakehouse_spark.plans.ddl import recover_dir, swap_dir
 
@@ -61,6 +65,20 @@ def has_parquet(path: str) -> bool:
     return os.path.isdir(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
+
+
+def read_batches_before(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The rows of every ``batch=N`` partition of ``path`` with N below
+    ``batch_id`` (folded partitions included: their ids are negative),
+    by a partition-pruned scan; None when there is no such partition."""
+    if not os.path.isdir(path) or not any(
+        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
+        for d in os.listdir(path)
+    ):
+        return None
+    return spark.read.parquet(path).filter(F.col("batch") < batch_id)
 
 
 def bucket_dir(store: str, b: int) -> str:

@@ -41,10 +41,12 @@ from pyspark.sql.streaming import StreamingQuery
 from shortvideohybridanalyticslakehouse_spark.streaming.contamination import (
     doc_shingles,
 )
-from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+    has_parquet,
+    read_batches_before,
+)
 from shortvideohybridanalyticslakehouse_spark.streaming.winnow import (
     fold_partitions,
-    read_batches_before,
 )
 
 

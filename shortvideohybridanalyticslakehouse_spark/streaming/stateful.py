@@ -3,11 +3,12 @@
 :func:`ordered_fold` is the one state protocol of the stream twins of
 the sequential batch lanes (EWMA, Holt, Holt-Winters, Misra-Gries,
 Page-Hinkley, SPRT, Croston, PSI): restore a key's state, fold its rows
-one step per ascending order value, drop and count replays at the key's
-high-water mark, emit one row. A twin supplies only its schemas, its
-initial state, a ``step`` and an ``emit``. ``cooldown_suppress`` (append
-mode), ``abandoned_session_detect`` (event-time timeout) and
-``running_totals`` (``transformWithState``) keep their own protocols.
+in ascending order, drop and count replays at the key's high-water mark
+so each (key, order value) folds once, emit one row. A twin supplies
+only its schemas, its initial state, a ``step`` and an ``emit``.
+``cooldown_suppress`` (append mode), ``abandoned_session_detect``
+(event-time timeout) and ``running_totals`` (``transformWithState``)
+keep their own protocols.
 
 ``cooldown_suppress`` is D8 in streaming form: the batch engine enforces
 the queue cooldown with a window over the full table
@@ -25,6 +26,7 @@ import itertools
 import math
 import operator
 from collections.abc import Callable, Iterator, Sequence
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 
@@ -280,21 +282,27 @@ def ordered_fold(
     init: tuple,
     step: Callable[[Sequence, list], Sequence],
     emit: Callable[[tuple, Sequence, int, int], dict],
+    *,
+    per_value: bool = False,
 ) -> DataFrame:
     """Fold each ``key``'s rows in ascending ``order`` across
     micro-batches; emit its one row after every batch that touched it.
 
     ``init`` is the state of a key never seen (deep-copied per key, so a
     step may mutate its lists). Each batch sorts the key's rows by
-    ``order`` (stable: rows sharing a value keep arrival order) and gives
-    each distinct value ONE ``step(state, rows)`` call, ``rows`` its rows
-    as namedtuples of Python values; it returns the new state. A value at
-    or below the key's high-water mark ``last`` — a replay, or a late
-    value the in-order contract rules out — is not folded but dropped and
-    counted in ``dropped``, the observable sign that bit-exactness
-    against the batch lane no longer holds. ``last bigint, dropped
-    bigint`` are appended to ``state_schema``; ``emit(key, state, last,
-    dropped)`` returns the output row as a column -> value dict.
+    ``order`` (stable: rows sharing a value keep arrival order) and folds
+    each row with one ``step(state, [row])`` call, the row a namedtuple
+    of Python values; it returns the new state. A row whose value is at
+    or below the key's high-water mark ``last`` — a replay, a late value
+    the in-order contract rules out, or a second row with the value just
+    folded — is not folded but dropped and counted in ``dropped``, the
+    observable sign that bit-exactness against the batch lane no longer
+    holds. So each (key, value) folds at most once, whichever batches
+    its rows arrive in. With ``per_value`` every row sharing a value goes
+    to ONE step (the PSI twin folds a whole ``seq`` batch per step) and a
+    dropped value counts once. ``last bigint, dropped bigint`` are
+    appended to ``state_schema``; ``emit(key, state, last, dropped)``
+    returns the output row as a column -> value dict.
     """
     by_order = operator.attrgetter(order)
 
@@ -306,7 +314,11 @@ def ordered_fold(
         )
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         ordered = sorted(rows.itertuples(index=False), key=by_order)
-        for value, same in itertools.groupby(ordered, key=by_order):
+        steps = (
+            itertools.groupby(ordered, by_order) if per_value
+            else ((by_order(r), [r]) for r in ordered)
+        )
+        for value, same in steps:
             if value <= last:
                 dropped += 1
                 continue
@@ -349,12 +361,10 @@ def ewma_incremental(minute_counts: DataFrame, alpha: float = 0.125) -> DataFram
 
     def step(state: Sequence, rows: list) -> Sequence:
         ewma, n, total = state
-        for r in rows:
-            x = int(r.x)
-            ewma = float(x) if n == 0 else ewma * b + float(x) * a
-            n += 1
-            total += x
-        return ewma, n, total
+        (r,) = rows
+        x = int(r.x)
+        ewma = float(x) if n == 0 else ewma * b + float(x) * a
+        return ewma, n + 1, total + x
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
         ewma, n, total = state
@@ -386,8 +396,6 @@ HOLT_STATE_SCHEMA = "l double, b double, err_sum double, n bigint, n_hours bigin
 def _round12(x: float) -> float:
     """Mirror Spark's F.round(x, 12): shortest-repr decimal, HALF_UP.
     (Python's built-in round is HALF_EVEN — a different function.)"""
-    from decimal import ROUND_HALF_UP, Decimal
-
     return float(Decimal(repr(x)).quantize(Decimal("1e-12"), ROUND_HALF_UP))
 
 
@@ -407,17 +415,17 @@ def holt_incremental(hour_counts: DataFrame) -> DataFrame:
 
     def step(state: Sequence, rows: list) -> Sequence:
         level, trend, err_sum, n, n_hours = state
-        for r in rows:
-            x = float(int(r.x))
-            if n_hours == 0:
-                level = x
-            else:
-                err_sum = err_sum + abs(x - (level + trend))
-                n += 1
-                new_l = _round12(0.5 * x + 0.5 * (level + trend))
-                trend = _round12(0.25 * (new_l - level) + 0.75 * trend)
-                level = new_l
-            n_hours += 1
+        (r,) = rows
+        x = float(int(r.x))
+        if n_hours == 0:
+            level = x
+        else:
+            err_sum = err_sum + abs(x - (level + trend))
+            n += 1
+            new_l = _round12(0.5 * x + 0.5 * (level + trend))
+            trend = _round12(0.25 * (new_l - level) + 0.75 * trend)
+            level = new_l
+        n_hours += 1
         return level, trend, err_sum, n, n_hours
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
@@ -439,8 +447,6 @@ def holt_incremental(hour_counts: DataFrame) -> DataFrame:
 
 def _round6(x: float) -> float:
     """F.round(x, 6) twin (HALF_UP over shortest repr)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
@@ -480,23 +486,19 @@ def holt_winters_incremental(hour_counts: DataFrame) -> DataFrame:
 
     def step(state: Sequence, rows: list) -> Sequence:
         level, trend, err_sum, n, n_hours, seasons = state
-        for r in rows:
-            x = float(int(r.x))
-            hod = (int(r.hour_epoch) // 3600) % HW_PERIOD
-            if n_hours == 0:
-                level = x
-            else:
-                err_sum = err_sum + abs(x - (level + trend + seasons[hod]))
-                n += 1
-                new_l = _round12(
-                    0.5 * (x - seasons[hod]) + 0.5 * (level + trend)
-                )
-                trend = _round12(0.25 * (new_l - level) + 0.75 * trend)
-                seasons[hod] = _round12(
-                    0.25 * (x - new_l) + 0.75 * seasons[hod]
-                )
-                level = new_l
-            n_hours += 1
+        (r,) = rows
+        x = float(int(r.x))
+        hod = (int(r.hour_epoch) // 3600) % HW_PERIOD
+        if n_hours == 0:
+            level = x
+        else:
+            err_sum = err_sum + abs(x - (level + trend + seasons[hod]))
+            n += 1
+            new_l = _round12(0.5 * (x - seasons[hod]) + 0.5 * (level + trend))
+            trend = _round12(0.25 * (new_l - level) + 0.75 * trend)
+            seasons[hod] = _round12(0.25 * (x - new_l) + 0.75 * seasons[hod])
+            level = new_l
+        n_hours += 1
         return level, trend, err_sum, n, n_hours, seasons
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
@@ -554,20 +556,18 @@ def misra_gries_incremental(day_items: DataFrame) -> DataFrame:
 
     def step(state: Sequence, rows: list) -> Sequence:
         items, cnts, n_events = state
-        for r in rows:
-            u = int(r.uid)
-            if u in items:
-                cnts[items.index(u)] += 1
+        (r,) = rows
+        u = int(r.uid)
+        if u in items:
+            cnts[items.index(u)] += 1
+        else:
+            empty = next((j for j in range(MG_K) if cnts[j] == 0), None)
+            if empty is not None:
+                items[empty] = u
+                cnts[empty] = 1
             else:
-                empty = next(
-                    (j for j in range(MG_K) if cnts[j] == 0), None
-                )
-                if empty is not None:
-                    items[empty] = u
-                    cnts[empty] = 1
-                else:
-                    cnts = [c - 1 for c in cnts]
-            n_events += 1
+                cnts = [c - 1 for c in cnts]
+        n_events += 1
         return items, cnts, n_events
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
@@ -619,14 +619,14 @@ def page_hinkley_incremental(
 
     def step(state: Sequence, rows: list) -> Sequence:
         n, total, m, mn, alarm = state
-        for r in rows:
-            x = int(r.x)
-            n += 1
-            total += x
-            m += x * 1_000_000 - (total * 1_000_000) // n - delta_micro
-            mn = min(mn, m)
-            if alarm < 0 and m - mn > lambda_micro:
-                alarm = n
+        (r,) = rows
+        x = int(r.x)
+        n += 1
+        total += x
+        m += x * 1_000_000 - (total * 1_000_000) // n - delta_micro
+        mn = min(mn, m)
+        if alarm < 0 and m - mn > lambda_micro:
+            alarm = n
         return n, total, m, mn, alarm
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
@@ -682,16 +682,15 @@ def sprt_incremental(
 
     def step(state: Sequence, rows: list) -> Sequence:
         cum, idx, dec = state
-        for r in rows:
-            n, k = int(r.n), int(r.k)
-            cum += math.floor((k * llr_pos + (n - k) * llr_neg) * 1e6)
-            idx += 1
-            if dec == 0:
-                if cum >= bound_micro:
-                    dec = 1
-                elif cum <= -bound_micro:
-                    dec = -1
-        return cum, idx, dec
+        (r,) = rows
+        n, k = int(r.n), int(r.k)
+        cum += math.floor((k * llr_pos + (n - k) * llr_neg) * 1e6)
+        if dec == 0:
+            if cum >= bound_micro:
+                dec = 1
+            elif cum <= -bound_micro:
+                dec = -1
+        return cum, idx + 1, dec
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
         cum, idx, dec = state
@@ -744,19 +743,19 @@ def croston_incremental(
 
     def step(state: Sequence, rows: list) -> Sequence:
         z, p, q, started, nw, ndw = state
-        for r in rows:
-            d = float(r.d)
-            nw += 1
-            if d <= 0:
-                q += 1
-            elif started == 0:
-                z, p, q, started = d, float(q + 1), 0, 1
-                ndw += 1
-            else:
-                z = z * a + d * b
-                p = p * a + (q + 1) * b
-                q = 0
-                ndw += 1
+        (r,) = rows
+        d = float(r.d)
+        nw += 1
+        if d <= 0:
+            q += 1
+        elif started == 0:
+            z, p, q, started = d, float(q + 1), 0, 1
+            ndw += 1
+        else:
+            z = z * a + d * b
+            p = p * a + (q + 1) * b
+            q = 0
+            ndw += 1
         return z, p, q, started, nw, ndw
 
     def emit(key: tuple, state: Sequence, last: int, dropped: int) -> dict:
@@ -804,11 +803,11 @@ def psi_incremental(
     the identical double expression, nano-floored before the exact sum
     (tests/test_stream_psi_twin.py).
 
-    Each ``seq`` is one :func:`ordered_fold` step; its dropped count is
-    ``n_batches_dropped``. A row whose bin falls outside [0, nbins) is
-    likewise dropped AND counted (``n_rows_bad``), not an IndexError
-    (ADVICE r10): never crash on data, always account for what was
-    ignored."""
+    Each ``seq`` is one :func:`ordered_fold` step (``per_value``); its
+    dropped count is ``n_batches_dropped``. A row whose bin falls
+    outside [0, nbins) is likewise dropped AND counted (``n_rows_bad``),
+    not an IndexError (ADVICE r10): never crash on data, always account
+    for what was ignored."""
     nbins = len(ref_counts)
     n_ref = sum(ref_counts)
 
@@ -841,5 +840,5 @@ def psi_incremental(
 
     return ordered_fold(
         bin_counts, "metric", "seq", PSI_OUTPUT_SCHEMA, PSI_STATE_SCHEMA,
-        ([0] * nbins, 0), step, emit,
+        ([0] * nbins, 0), step, emit, per_value=True,
     )

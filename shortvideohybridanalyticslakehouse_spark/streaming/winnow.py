@@ -44,7 +44,10 @@ from shortvideohybridanalyticslakehouse_spark.plans.queries_ext95 import (
     _POS_PACK,
     winnowing_fingerprints_df,
 )
-from shortvideohybridanalyticslakehouse_spark.streaming.markers import has_parquet
+from shortvideohybridanalyticslakehouse_spark.streaming.markers import (
+    has_parquet,
+    read_batches_before,
+)
 
 
 def _fps_dir(store: str) -> str:
@@ -187,20 +190,6 @@ def start_winnow_dedup_job(
 # duplicates rows, which every reader tolerates (hot-cap counts distinct
 # docs; pair evidence is countDistinct) and the next fold's .distinct()
 # heals.
-
-
-def read_batches_before(
-    spark: SparkSession, path: str, batch_id: int
-) -> DataFrame | None:
-    """The rows of every ``batch=N`` partition of ``path`` with N below
-    ``batch_id`` (folded partitions included: their ids are negative),
-    by a partition-pruned scan; None when there is no such partition."""
-    if not os.path.isdir(path) or not any(
-        d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        for d in os.listdir(path)
-    ):
-        return None
-    return spark.read.parquet(path).filter(F.col("batch") < batch_id)
 
 
 def fold_partitions(

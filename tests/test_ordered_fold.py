@@ -1,7 +1,8 @@
 """streaming/stateful.py:ordered_fold, the one state protocol of the
-stream twins: rows fold in ascending order one step per order value,
-values at or below the key's high-water mark are dropped and counted,
-and state carries across micro-batches. An AST guard keeps the twins'
+stream twins: rows fold in ascending order, rows at or below the key's
+high-water mark are dropped and counted (so each (key, value) folds
+once, in whichever batch its rows arrive), ``per_value`` folds all rows
+of a value in one step, and state carries across micro-batches. An AST guard keeps the twins'
 ("update", NoTimeout) state call inside the driver."""
 
 from __future__ import annotations
@@ -10,6 +11,8 @@ import ast
 import os
 import pathlib
 import time
+
+import pytest
 
 import shortvideohybridanalyticslakehouse_spark as pkg
 from shortvideohybridanalyticslakehouse_spark.streaming.stateful import (
@@ -22,7 +25,7 @@ OUT = (
 )
 
 
-def _sum_fold(frame):
+def _sum_fold(frame, per_value):
     """Sum ``x`` per key; record each step's order value and row count."""
 
     def step(state, rows):
@@ -41,11 +44,24 @@ def _sum_fold(frame):
     return ordered_fold(
         frame, "k", "seq", OUT,
         "total bigint, seqs array<bigint>, widths array<bigint>",
-        (0, [], []), step, emit,
+        (0, [], []), step, emit, per_value=per_value,
     )
 
 
-def test_ordered_fold_sums_in_order_and_drops_replays(spark, tmp_path):
+@pytest.mark.parametrize(
+    "per_value, totals, dropped, widths",
+    [
+        # one row per step: the first seq-7 row folds, the second is
+        # dropped and counted like the seq-3 replay of the batch before
+        (False, [60, 120, 127], [0, 1, 3], [1, 1, 1, 1, 1]),
+        # per value: the two seq-7 rows go to ONE step, neither dropped
+        (True, [60, 120, 197], [0, 1, 2], [1, 1, 1, 1, 2]),
+    ],
+    ids=["per_row", "per_value"],
+)
+def test_ordered_fold_sums_in_order_and_drops_replays(
+    spark, tmp_path, per_value, totals, dropped, widths
+):
     files = [
         # out of order inside the batch: folds 1, 2, 3
         [("a", 2, 20), ("a", 1, 10), ("a", 3, 30)],
@@ -69,29 +85,28 @@ def test_ordered_fold_sums_in_order_and_drops_replays(spark, tmp_path):
         .csv(src)
     )
     q = (
-        _sum_fold(stream)
+        _sum_fold(stream, per_value)
         .writeStream.format("memory")
-        .queryName("ordered_fold_sum")
+        .queryName(f"ordered_fold_sum_{int(per_value)}")
         .outputMode("update")
         .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    hist = spark.sql("SELECT * FROM ordered_fold_sum").collect()
+    hist = spark.sql(
+        f"SELECT * FROM ordered_fold_sum_{int(per_value)}"
+    ).collect()
     a = sorted(
         (r for r in hist if r.k == "a"), key=lambda r: len(r.seqs)
     )
     # one row per batch that touched the key; state carried across
-    assert [(r.total, r.last, r.dropped) for r in a] == [
-        (60, 3, 0),
-        (120, 6, 1),
-        (197, 7, 2),
-    ]
-    # ascending order, one step per distinct value: the two seq-7 rows
-    # went to ONE step, together, and neither counts as dropped
+    assert [(r.total, r.last, r.dropped) for r in a] == list(
+        zip(totals, [3, 6, 7], dropped)
+    )
+    # ascending order; seq 5 (late) and the seq-3 replay never fold
     assert a[-1].seqs == [1, 2, 3, 6, 7]
-    assert a[-1].widths == [1, 1, 1, 1, 2]
+    assert a[-1].widths == widths
     (b,) = [r for r in hist if r.k == "b"]
     assert (b.total, b.seqs, b.last, b.dropped) == (5, [1], 1, 0)
 

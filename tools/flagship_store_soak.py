@@ -90,17 +90,15 @@ def _check_content(spark, ledger: dict) -> bool:
     return got == ledger
 
 
-def flatness_windows(
-    batches: int, warmup: int = 100, width: int = 100
-) -> tuple[range, range]:
+def flatness_windows(batches: int) -> tuple[range, range]:
     """(warm, tail) batch-index windows of the wall-flatness gate, always
-    disjoint: the warm window starts after the first ``warmup`` batches
-    (at 0 when the run is no longer than that), the tail ends at the last
-    batch, and both are ``width`` batches wide, or half of what follows
-    the warm start when that is shorter (200 batches: 100-149 against
+    disjoint: the warm window starts after the first 100 batches (at 0
+    when the run is no longer than that), the tail ends at the last
+    batch, and both are 100 batches wide, or half of what follows the
+    warm start when that is shorter (200 batches: 100-149 against
     150-199; 1000 batches: 100-199 against 900-999)."""
-    start = warmup if batches >= warmup + 2 else 0
-    span = min(width, (batches - start) // 2)
+    start = 100 if batches >= 102 else 0
+    span = min(100, (batches - start) // 2)
     return range(start, start + span), range(batches - span, batches)
 
 
